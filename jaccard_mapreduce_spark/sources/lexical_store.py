@@ -90,67 +90,20 @@ from jaccard_mapreduce_spark.operators.retrieval import (
     bm25_probe,
     lexical_probe,
 )
-
-
-def _promote_staged_files(
-    spark: SparkSession, tmp_dir: str, live_dir: str, prefix: str
-) -> None:
-    """Move a staged batch's data files into the live dataset — one
-    metadata-only rename per file (round-11 ADVICE: the upsert used to
-    APPEND the batch directly, so a crash mid-write followed by the
-    recommended retry re-appended rows already written; staging the
-    write and promoting last shrinks the corruptible window from the
-    whole batch write to this rename loop). ``prefix`` carries the
-    pre-upsert n_docs marker for provenance; part-file names carry a
-    fresh UUID per write, so promoted names never collide."""
-    from jaccard_mapreduce_spark.sources.vector_index import _hadoop_fs
-
-    fs, tmp = _hadoop_fs(spark, tmp_dir)
-    for st in fs.listStatus(tmp):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-            continue
-        dest = _hadoop_fs(spark, f"{live_dir}/{prefix}{name}")[1]
-        if not fs.rename(st.getPath(), dest):
-            raise IOError(
-                f"staged promote failed: {name} -> {live_dir} (retry "
-                "ONLY after a lexical_store_stats drift check — see "
-                "upsert_lexical_store)"
-            )
-    fs.delete(tmp, True)
-
-
-def _parquet_footer_rows(spark: SparkSession, path: str) -> int:
-    """Exact row count of a parquet dataset from file FOOTERS only —
-    driver-side metadata reads, O(files), no executor scan of the data
-    pages (round-11 ADVICE: the stats face ran a dedicated full
-    count() over positions — the store's LARGEST dataset — on every
-    call; at upsert-per-minute cadence the footer walk costs what scan
-    planning already pays)."""
-    from jaccard_mapreduce_spark.sources.vector_index import _hadoop_fs
-
-    jvm = spark._jvm
-    fs, hpath = _hadoop_fs(spark, path)
-    conf = spark._jsc.hadoopConfiguration()
-    total = 0
-    stack = [hpath]
-    while stack:
-        for st in fs.listStatus(stack.pop()):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                stack.append(st.getPath())
-                continue
-            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-                continue
-            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-                jvm.org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(st, conf)
-            )
-            try:
-                total += reader.getRecordCount()
-            finally:
-                reader.close()
-    return int(total)
+from jaccard_mapreduce_spark.sources._store import (
+    _compact_datasets,
+    _count_parquet_files,
+    _fs_delete,
+    _fs_exists,
+    _fs_read_text,
+    _fs_write_text,
+    _parquet_footer_rows,
+    _pending_deletes,
+    _promote_staged_files,
+    _read_live,
+    _stage_tombstones,
+    _swap,
+)
 
 
 def _require_marker(spark: SparkSession, path: str, name: str) -> int:
@@ -162,8 +115,6 @@ def _require_marker(spark: SparkSession, path: str, name: str) -> int:
     (round-10 ADVICE). A store written by :func:`build_lexical_store`
     always carries both markers, so absence means the directory is not
     a current-schema lexical store — rebuild it, don't guess."""
-    from jaccard_mapreduce_spark.sources.vector_index import _fs_read_text
-
     raw = _fs_read_text(spark, f"{path}/{name}")
     if raw is None:
         raise ValueError(
@@ -190,7 +141,6 @@ def build_lexical_store(
     from jaccard_mapreduce_spark.operators.retrieval import (
         doc_token_positions,
     )
-    from jaccard_mapreduce_spark.sources.vector_index import _fs_write_text
     from pyspark.sql import Window
 
     spark = docs.sparkSession
@@ -236,7 +186,7 @@ def upsert_lexical_store(
 ) -> int:
     """Append a document batch and merge its EXACT statistic
     increments: postings append, df = stored df ∪ batch df summed per
-    token (tmp-write + rename swap, the compaction shape), marker +=
+    token (staged, then published by the two-rename swap), marker +=
     batch count. Returns the number of appended documents. Because
     both statistics are additive integers, the post-upsert store is
     bit-identical to a fresh build over the union — the graded
@@ -270,12 +220,6 @@ def upsert_lexical_store(
     ``n_distinct_docs == n_docs``); on drift, rebuild the store —
     exactly-once is still NOT claimed, but the corrupting-retry window
     is now the rename loop, not the batch write."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _fs_delete,
-        _fs_write_text,
-        _hadoop_fs,
-    )
-
     from jaccard_mapreduce_spark.operators._cache import pin
 
     # Marker preconditions FIRST — before any postings bytes land. A
@@ -290,8 +234,7 @@ def upsert_lexical_store(
     # otherwise the append below CREATES a positions dir holding only
     # this batch, and every later phrase serve silently misses the
     # base corpus. Rebuild the store, don't mutate it.
-    fs0, pos_path = _hadoop_fs(spark, f"{path}/positions")
-    if not fs0.exists(pos_path):
+    if not _fs_exists(spark, f"{path}/positions"):
         raise ValueError(
             f"{path} has no positions dataset: pre-posv3 lexical store "
             "— rebuild with build_lexical_store instead of upserting"
@@ -311,9 +254,7 @@ def upsert_lexical_store(
     pos_tmp = f"{path}/positions__batch_tmp"
     post_tmp = f"{path}/postings__batch_tmp"
     for tmp_dir in (pos_tmp, post_tmp):
-        fs0, p0 = _hadoop_fs(spark, tmp_dir)
-        if fs0.exists(p0):
-            fs0.delete(p0, True)
+        _fs_delete(spark, tmp_dir)
     doc_token_positions(docs, id_col=id_col, text_col=text_col).repartition(
         "doc_id"
     ).write.mode("overwrite").parquet(pos_tmp)
@@ -349,19 +290,7 @@ def upsert_lexical_store(
                               f"u{prev}-")
         _promote_staged_files(spark, post_tmp, f"{path}/postings",
                               f"u{prev}-")
-        # two-rename swap with rollback (the retrain/compaction idiom) —
-        # a delete-then-rename would open a window with NO df dataset at
-        # all; here the old generation survives until the new one is live
-        fs, live = _hadoop_fs(spark, f"{path}/df")
-        old = _hadoop_fs(spark, f"{path}/df__old")[1]
-        if fs.exists(old):
-            fs.delete(old, True)
-        if not fs.rename(live, old):
-            raise IOError(f"df swap failed: {path}/df -> df__old")
-        if not fs.rename(_hadoop_fs(spark, tmp)[1], live):
-            fs.rename(old, live)  # put the previous generation back
-            raise IOError(f"df swap failed: {tmp} -> {path}/df")
-        fs.delete(old, True)
+        _swap(spark, f"{path}/df", tmp)
     finally:
         tok.unpersist()
     _fs_write_text(spark, f"{path}/_n_docs", str(prev + n_new))
@@ -370,65 +299,15 @@ def upsert_lexical_store(
     return n_new
 
 
-def _swap_dataset(spark: SparkSession, path: str, name: str, tmp: str) -> None:
-    """Publish a staged dataset generation via the two-rename swap (the
-    upsert's df-swap idiom, factored for the delete paths) — the shared
-    implementation lives next to the other FS helpers in
-    ``sources/vector_index.py``, where the LSH delete uses it too."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _swap_dataset as _swap,
-    )
-
-    _swap(spark, path, name, tmp)
-
-
-def _read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The store's tombstone relation ``(doc_id)`` — doc ids deleted
-    but not yet physically removed by compaction — or ``None`` when no
-    delete has ever run (the common case: zero overhead on stores that
-    never delete)."""
-    from jaccard_mapreduce_spark.sources.vector_index import _hadoop_fs
-
-    fs, p = _hadoop_fs(spark, f"{path}/tombstones")
-    if not fs.exists(p):
-        return None
-    return spark.read.parquet(f"{path}/tombstones")
-
-
-def _read_live(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Read a corpus-side dataset (postings / positions) with deleted
-    documents MASKED: an anti-join against the tombstones, the store's
-    merge-on-read contract (the Delta deletion-vector shape re-expressed
-    relationally — a 100 TB store cannot rewrite its postings per
-    delete, so deletes write the small side and reads subtract it).
-    Deliberately NOT hint-broadcast: AQE broadcasts a small tombstone
-    set on its own, and a forced hint would hard-fail a store whose
-    tombstones outgrew the broadcast limit instead of degrading to a
-    shuffle join (the ``ngram_contamination`` ADVICE lesson). Stores
-    with no tombstones read the dataset untouched — plan-identical to
-    the pre-delete engine."""
-    rel = spark.read.parquet(f"{path}/{name}")
-    tomb = _read_tombstones(spark, path)
-    if tomb is None:
-        return rel
-    return rel.join(tomb, "doc_id", "left_anti")
-
-
 def _dead_tokens_marker(spark: SparkSession, path: str) -> int:
     """The ``_n_dead_tokens`` marker — token occurrences belonging to
     tombstoned docs, still physically present until compaction. Absent
     marker + absent tombstones = a store that never deleted (0);
     tombstones WITHOUT the marker means a foreign mutation — refuse,
     the drift-check discipline."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _fs_read_text,
-        _hadoop_fs,
-    )
-
     raw = _fs_read_text(spark, f"{path}/_n_dead_tokens")
-    fs, p = _hadoop_fs(spark, f"{path}/tombstones")
     if raw is None:
-        if fs.exists(p):
+        if _fs_exists(spark, f"{path}/tombstones"):
             raise ValueError(
                 f"{path} has tombstones but no _n_dead_tokens marker: "
                 "not written by this engine's delete path — rebuild"
@@ -481,28 +360,18 @@ def delete_from_lexical_store(
     (``n_distinct_docs < n_docs`` marker). Repair = rebuild, as with
     upsert drift; exactly-once is still NOT claimed."""
     from jaccard_mapreduce_spark.operators._cache import pin
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _fs_delete,
-        _fs_write_text,
-        _hadoop_fs,
-    )
 
     prev = _require_marker(spark, path, "_n_docs")
     prev_tok = _require_marker(spark, path, "_n_tokens")
     prev_dead = _dead_tokens_marker(spark, path)
-    fs0, pos_path = _hadoop_fs(spark, f"{path}/positions")
-    if not fs0.exists(pos_path):
+    if not _fs_exists(spark, f"{path}/positions"):
         raise ValueError(
             f"{path} has no positions dataset: pre-posv3 lexical store "
             "— rebuild with build_lexical_store instead of deleting"
         )
 
-    batch = doc_ids.select(F.col(id_col).alias("doc_id")).distinct()
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        batch = batch.join(tomb, "doc_id", "left_anti")
+    batch, tomb = _pending_deletes(spark, path, doc_ids, id_col, "doc_id")
     df_tmp = f"{path}/df__tmp"
-    tomb_tmp = f"{path}/tombstones__tmp"
     # pinned: the deleted docs' postings slice feeds the totals, the
     # per-token df decrement, AND the tombstone ids; released before
     # the promote (per-batch relation — the cache-hygiene rule)
@@ -535,19 +404,16 @@ def delete_from_lexical_store(
         )
         _fs_delete(spark, df_tmp)
         new_df.coalesce(1).write.mode("overwrite").parquet(df_tmp)
-        present = hit.select("doc_id").distinct()
-        new_tomb = (
-            present if tomb is None else tomb.unionByName(present)
+        tomb_tmp = _stage_tombstones(
+            spark, path, tomb, hit.select("doc_id").distinct()
         )
-        _fs_delete(spark, tomb_tmp)
-        new_tomb.coalesce(1).write.mode("overwrite").parquet(tomb_tmp)
     finally:
         hit.unpersist()
 
     # PROMOTE: tombstones first (masking is correct from this instant,
     # statistics follow), then df, then markers
-    _swap_dataset(spark, path, "tombstones", tomb_tmp)
-    _swap_dataset(spark, path, "df", df_tmp)
+    _swap(spark, f"{path}/tombstones", tomb_tmp)
+    _swap(spark, f"{path}/df", df_tmp)
     _fs_write_text(spark, f"{path}/_n_docs", str(prev - n_del))
     _fs_write_text(spark, f"{path}/_n_tokens", str(prev_tok - tok_del))
     _fs_write_text(
@@ -609,11 +475,6 @@ def lexical_store_stats(spark: SparkSession, path: str) -> dict:
     the distinct count and the drift is visible from the stats face.
     The postings scan the snapshot already pays (``n_postings``) now
     also carries the distinct aggregate — one pass, two statistics."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _count_parquet_files,
-        _hadoop_fs,
-    )
-
     dfr = spark.read.parquet(f"{path}/df")
     agg = dfr.agg(
         F.count(F.lit(1)).alias("n_tokens"), F.max("df").alias("max_df")
@@ -630,11 +491,6 @@ def lexical_store_stats(spark: SparkSession, path: str) -> dict:
         )
         .first()
     )
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _hadoop_fs as _hfs,
-    )
-
-    fs_t, tomb_path = _hfs(spark, f"{path}/tombstones")
     out = {
         "n_docs": _require_marker(spark, path, "_n_docs"),
         "n_token_occurrences": _require_marker(spark, path, "_n_tokens"),
@@ -656,14 +512,15 @@ def lexical_store_stats(spark: SparkSession, path: str) -> dict:
         # store that never deleted
         "n_tombstones": (
             _parquet_footer_rows(spark, f"{path}/tombstones")
-            if fs_t.exists(tomb_path)
+            if _fs_exists(spark, f"{path}/tombstones")
             else 0
         ),
         "n_dead_token_occurrences": _dead_tokens_marker(spark, path),
     }
     for name in ("postings", "df", "positions"):
-        fs, hpath = _hadoop_fs(spark, f"{path}/{name}")
-        out[f"{name}_files"], _ = _count_parquet_files(spark, fs, hpath)
+        out[f"{name}_files"], _ = _count_parquet_files(
+            spark, f"{path}/{name}"
+        )
     return out
 
 
@@ -686,29 +543,13 @@ def compact_lexical_store(
     per-dataset ``(files_before, files_after)``.
 
     Compaction is also the PHYSICAL-REMOVAL half of the merge-on-read
-    delete contract (:func:`delete_from_lexical_store`): when the
-    store carries tombstones, the rewrite folds them in (anti-join per
-    dataset inside the swap protocol), then clears the tombstones and
-    zeroes the ``_n_dead_tokens`` marker. Every crash point stays
-    serving-correct: a tombstone masking a doc that no longer exists
-    is a no-op anti-join, so datasets compacted before the clear serve
-    the same rows — only the stats invariants drift (stale dead
-    marker), and re-running compaction repairs exactly that."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _compact_datasets,
-        _fs_write_text,
-        _hadoop_fs,
-    )
-
-    tomb = _read_tombstones(spark, path)
-    transform = (
-        None
-        if tomb is None
-        else {
-            "postings": lambda rel: rel.join(tomb, "doc_id", "left_anti"),
-            "positions": lambda rel: rel.join(tomb, "doc_id", "left_anti"),
-        }
-    )
+    delete contract (:func:`delete_from_lexical_store`): the store
+    core's compactor folds the tombstones out of both rewrites and
+    clears them, then the ``_n_dead_tokens`` marker is zeroed. Every
+    crash point stays serving-correct: a tombstone masking a doc that
+    no longer exists is a no-op anti-join — only the stats invariants
+    drift (stale dead marker), and re-running compaction repairs
+    exactly that."""
     out = _compact_datasets(
         spark,
         path,
@@ -717,11 +558,9 @@ def compact_lexical_store(
         n_files,
         target_file_bytes,
         cluster_by={"postings": "doc_id", "positions": "doc_id"},
-        transform=transform,
     )
-    if tomb is not None:
-        fs, p = _hadoop_fs(spark, f"{path}/tombstones")
-        fs.delete(p, True)
+    # no dead rows are left: a marker exists iff the store ever deleted
+    if _fs_read_text(spark, f"{path}/_n_dead_tokens") is not None:
         _fs_write_text(spark, f"{path}/_n_dead_tokens", "0")
     return out
 

@@ -54,9 +54,15 @@ from jaccard_mapreduce_spark.operators.dedup import (
     minhash_signatures,
 )
 from jaccard_mapreduce_spark.operators.jaccard import doc_tokens
-from jaccard_mapreduce_spark.sources.vector_index import (
+from jaccard_mapreduce_spark.sources._store import (
+    _compact_datasets,
+    _count_parquet_files,
     _fs_read_text,
     _fs_write_text,
+    _read_live,
+    _read_tombstones,
+    _swap,
+    _tombstone_delete,
 )
 
 
@@ -163,29 +169,6 @@ def upsert_minhash_index(
     return n_new
 
 
-def _sig_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The signature store's tombstone relation ``(doc_id)`` — or
-    ``None`` when no delete has ever run (zero overhead then)."""
-    from jaccard_mapreduce_spark.sources.vector_index import _hadoop_fs
-
-    fs, p = _hadoop_fs(spark, f"{path}/tombstones")
-    if not fs.exists(p):
-        return None
-    return spark.read.parquet(f"{path}/tombstones")
-
-
-def _sig_live(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Read a store dataset (signatures / buckets) with deleted docs
-    MASKED — the merge-on-read recipe shared with the lexical store
-    and the LSH index (anti-join, no forced broadcast: AQE handles
-    small sets, large ones degrade to a shuffle join)."""
-    rel = spark.read.parquet(f"{path}/{name}")
-    tomb = _sig_tombstones(spark, path)
-    if tomb is None:
-        return rel
-    return rel.join(tomb, "doc_id", "left_anti")
-
-
 def delete_from_minhash_index(
     spark: SparkSession,
     path: str,
@@ -193,8 +176,9 @@ def delete_from_minhash_index(
     id_col: str = "doc_id",
 ) -> int:
     """Delete a document batch from the signature store —
-    MERGE-ON-READ like the LSH index's delete (MinHash params are
-    seed-derived, so there are no corpus statistics to correct): the
+    MERGE-ON-READ through the store core's tombstone engine, the one
+    the LSH and IVF indexes use (MinHash params are seed-derived, so
+    there are no corpus statistics to correct): the
     batch lands in a tombstone set that every probe anti-joins away
     from both the buckets (candidate generation) and the signatures
     (estimate fetch). IDEMPOTENT (the batch anti-joins existing
@@ -208,36 +192,9 @@ def delete_from_minhash_index(
 
     ID CONTRACT addendum: re-upserting a tombstoned doc_id would have
     its new rows masked by its own tombstone — compact first."""
-    from jaccard_mapreduce_spark.operators._cache import pin as _pin
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _fs_delete,
-        _swap_dataset,
+    return _tombstone_delete(
+        spark, path, doc_ids, id_col, "signatures", "doc_id"
     )
-
-    batch = doc_ids.select(F.col(id_col).alias("doc_id")).distinct()
-    tomb = _sig_tombstones(spark, path)
-    if tomb is not None:
-        batch = batch.join(tomb, "doc_id", "left_anti")
-    # no broadcast hint: AQE broadcasts a human-scale batch; a bulk
-    # delete degrades to a shuffle join instead of an executor OOM
-    present = _pin(
-        spark.read.parquet(f"{path}/signatures")
-        .select("doc_id")
-        .join(batch, "doc_id", "left_semi")
-        .distinct()
-    )
-    try:
-        n_del = present.count()
-        if n_del == 0:
-            return 0
-        new_tomb = present if tomb is None else tomb.unionByName(present)
-        tmp = f"{path}/tombstones__tmp"
-        _fs_delete(spark, tmp)
-        new_tomb.coalesce(1).write.mode("overwrite").parquet(tmp)
-    finally:
-        present.unpersist()
-    _swap_dataset(spark, path, "tombstones", tmp)
-    return n_del
 
 
 def dedup_incremental(
@@ -317,7 +274,7 @@ def _dedup_incremental_plan(
     ).withColumnRenamed("doc_id", "new_id")
     # tombstone-masked (merge-on-read deletes): a dead doc must not
     # surface as a dedup partner
-    stored_buckets = _sig_live(spark, path, "buckets")
+    stored_buckets = _read_live(spark, path, "buckets")
     # mixed id types (string batch ids against a long-id store, or the
     # reverse) would make the self-pair exclusion an ANSI cast throw —
     # same hazard the LSH index search guards; compare canonical
@@ -357,7 +314,7 @@ def _dedup_incremental_plan(
     # store-scale relation is pruned without a shuffle; past the gate
     # this degrades to a keyed shuffle like every other join here
     hit_sigs = (
-        _sig_live(spark, path, "signatures")
+        _read_live(spark, path, "signatures")
         .join(
             bc_cand(cand.select("stored_id").distinct()),
             F.col("doc_id") == F.col("stored_id"),
@@ -497,7 +454,7 @@ def reband_minhash_index(
     # LIVE signatures only: a reband folds merge-on-read deletes out
     # of the rebuilt buckets (the tombstones stay — the signatures
     # dataset still carries the dead rows until a compaction)
-    sigs = _sig_live(spark, path, "signatures")
+    sigs = _read_live(spark, path, "signatures")
     tmp = f"{path}/buckets__rebanding"
     (
         lsh_buckets(sigs, new_bands, p["k"] // new_bands)
@@ -511,18 +468,7 @@ def reband_minhash_index(
         .parquet(tmp)
     )
     _fs_write_text(spark, f"{tmp}/_banding", str(new_bands))
-    from jaccard_mapreduce_spark.sources.vector_index import _hadoop_fs
-
-    fs, live = _hadoop_fs(spark, f"{path}/buckets")
-    old = _hadoop_fs(spark, f"{path}/buckets__old")[1]
-    if fs.exists(old):
-        fs.delete(old, True)
-    if not fs.rename(live, old):
-        raise IOError(f"reband swap failed: {live} -> {old}")
-    if not fs.rename(_hadoop_fs(spark, tmp)[1], live):
-        fs.rename(old, live)
-        raise IOError(f"reband swap failed: {tmp} -> {live}")
-    fs.delete(old, True)
+    _swap(spark, f"{path}/buckets", tmp)
     _fs_write_text(
         spark,
         f"{path}/_params",
@@ -544,19 +490,14 @@ def minhash_index_stats(spark: SparkSession, path: str) -> dict:
     signal to retune toward fewer bands (:func:`bands_for` /
     :func:`reband_minhash_index`) — the same measure-then-retune
     discipline as ``lsh_params_for``."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _count_parquet_files,
-        _hadoop_fs,
-    )
-
     p = _stored_params(spark, path)
     out = dict(p)
     # LIVE relations (tombstones masked): occupancy is what probes pay
-    out["n_docs"] = _sig_live(spark, path, "signatures").count()
-    tomb = _sig_tombstones(spark, path)
+    out["n_docs"] = _read_live(spark, path, "signatures").count()
+    tomb = _read_tombstones(spark, path)
     out["n_tombstones"] = 0 if tomb is None else tomb.count()
     occ = (
-        _sig_live(spark, path, "buckets")
+        _read_live(spark, path, "buckets")
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(
@@ -568,8 +509,9 @@ def minhash_index_stats(spark: SparkSession, path: str) -> dict:
     out["n_bucket_groups"] = int(occ["groups"])
     out["max_bucket_docs"] = int(occ["mx"]) if occ["mx"] is not None else 0
     for name in ("signatures", "buckets"):
-        fs, hpath = _hadoop_fs(spark, f"{path}/{name}")
-        out[f"{name}_files"], _ = _count_parquet_files(spark, fs, hpath)
+        out[f"{name}_files"], _ = _count_parquet_files(
+            spark, f"{path}/{name}"
+        )
     return out
 
 
@@ -580,15 +522,13 @@ def compact_minhash_index(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict[str, tuple[int, int]]:
     """Size-targeted compaction of the signature store's append-heavy
-    datasets — the MinHash twin of :func:`~jaccard_mapreduce_spark.
-    sources.vector_index.compact_lsh_index` (same tmp-write +
-    two-rename swap, same row-identical contract). The buckets dataset
-    keeps its band partitioning: the rewrite hash-distributes the band
-    column so compaction cannot multiply files across partition dirs."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _compact_datasets,
-    )
-
+    datasets through the store core's compactor (row-identical
+    rewrite, two-rename swap). Both datasets are rewritten, so this is
+    the one maintenance op that folds the tombstones out completely
+    and clears them (a reband folds only the buckets). The buckets
+    dataset keeps its band partitioning: the rewrite hash-distributes
+    the band column so compaction cannot multiply files across
+    partition dirs."""
     # resolve the authoritative banding BEFORE the rewrite (the
     # compactor re-reads the dataset as parquet, which drops the
     # in-dataset _banding marker) and stamp it into the TMP dataset
@@ -599,21 +539,7 @@ def compact_minhash_index(
     # dataset has no authoritative marker and a stale _params could
     # silently band-mismatch every later dedup into zero results.
     p = _stored_params(spark, path)
-    # tombstone fold (merge-on-read deletes): both datasets are
-    # rewritten here, so this is the one maintenance op that clears
-    # the tombstones completely (a reband folds only the buckets)
-    tomb = _sig_tombstones(spark, path)
-    transform = (
-        None
-        if tomb is None
-        else {
-            "signatures": lambda rel: rel.join(
-                tomb, "doc_id", "left_anti"
-            ),
-            "buckets": lambda rel: rel.join(tomb, "doc_id", "left_anti"),
-        }
-    )
-    out = _compact_datasets(
+    return _compact_datasets(
         spark,
         path,
         ("signatures", "buckets"),
@@ -626,14 +552,7 @@ def compact_minhash_index(
                 spark, f"{tmp}/_banding", str(p["bands"])
             )
         },
-        transform=transform,
     )
-    if tomb is not None:
-        from jaccard_mapreduce_spark.sources.vector_index import _hadoop_fs
-
-        fs, pt = _hadoop_fs(spark, f"{path}/tombstones")
-        fs.delete(pt, True)
-    return out
 
 
 def _ensure_doc_index(

@@ -70,6 +70,17 @@ from jaccard_mapreduce_spark.operators.similarity import (
     ivf_centroids,
     vectors,
 )
+from jaccard_mapreduce_spark.sources._store import (
+    _compact_datasets,
+    _count_parquet_files,
+    _fs_delete,
+    _fs_read_text,
+    _fs_write_text,
+    _read_live,
+    _read_tombstones,
+    _swap,
+    _tombstone_delete,
+)
 
 # Compact stored form of the SQ8 scoring columns: the int8 codes plus
 # the per-vector scalars. ``qcode`` is the raw quantize_embeddings code
@@ -83,51 +94,6 @@ _SQ8_STORED_COLS = ("qcode", "scale", "zp", "qsum", "qnorm2")
 def _scratch_dir(spark: SparkSession, suffix: str = "") -> str:
     app = re.sub(r"[^a-zA-Z0-9]+", "_", spark.sparkContext.applicationId)
     return os.path.join(tempfile.gettempdir(), f"ivf_index_{app}{suffix}".lower())
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """Resolve ``path`` through Hadoop's FileSystem API so index-side
-    marker files work on whatever filesystem the index itself lives on
-    (``hdfs://``, ``s3a://``, plain local paths). Driver-local
-    ``os.path`` calls against a remote URI silently see nothing —
-    ``exists`` is always False — which would make the staleness counter
-    report 0 forever and write to a bogus local path; routing through
-    the same FileSystem the parquet writes use keeps the marker next to
-    the data on any deployment."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _fs_read_text(spark: SparkSession, path: str) -> str | None:
-    """Contents of a (small) text file via Hadoop FS, or None if absent."""
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    stream = fs.open(hpath)
-    try:
-        # commons-io ships with Hadoop; avoids byte-at-a-time py4j reads
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-
-
-def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
-    fs, hpath = _hadoop_fs(spark, path)
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(text, "utf-8"))
-    finally:
-        out.close()
-
-
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    fs, hpath = _hadoop_fs(spark, path)
-    if fs.exists(hpath):
-        fs.delete(hpath, False)
 
 
 def build_ivf_index(
@@ -228,7 +194,7 @@ def search_ivf_index(
     cents = spark.read.parquet(f"{path}/centroids")
     # tombstone-masked (merge-on-read deletes): every rerank tier
     # consumes this relation, so masking here covers all branches
-    cells = _vec_live(spark, path, "cells")
+    cells = _read_live(spark, path, "cells")
     qv = vectors(queries, id_col, vec_col)
     # The explicit (cell_id, vec_id) repartition is the load-bearing
     # line: the assignment's rank-window exchange hash-partitions by
@@ -529,7 +495,7 @@ def retrain_ivf_index(
     # whole-directory swap drops the tombstones with the old
     # generation — delete recovery and staleness recovery are one
     # mechanism
-    stored = _vec_live(spark, path, "cells").select("vec_id", "vec")
+    stored = _read_live(spark, path, "cells").select("vec_id", "vec")
     if n_cells is None:
         n_cells = cents_live.count()
     tmp = f"{path}__retraining"
@@ -541,16 +507,7 @@ def retrain_ivf_index(
         stored, tmp, n_cells=n_cells, iters=iters,
         id_col="vec_id", vec_col="vec",
     )
-    fs, live = _hadoop_fs(spark, path)
-    old = _hadoop_fs(spark, f"{path}__old")[1]
-    if fs.exists(old):
-        fs.delete(old, True)
-    if not fs.rename(live, old):
-        raise IOError(f"retrain swap failed: {path} -> {path}__old")
-    if not fs.rename(_hadoop_fs(spark, tmp)[1], live):
-        fs.rename(old, live)  # put the previous generation back
-        raise IOError(f"retrain swap failed: {tmp} -> {path}")
-    fs.delete(old, True)
+    _swap(spark, path, tmp)
     return True
 
 
@@ -587,9 +544,9 @@ def ivf_index_stats(spark: SparkSession, path: str) -> dict:
     compaction trigger (:func:`compact_ivf_index`)."""
     n_cells = spark.read.parquet(f"{path}/centroids").count()
     # LIVE cells (tombstones masked): occupancy is what searches pay
-    tomb = _read_vec_tombstones(spark, path)
+    tomb = _read_tombstones(spark, path)
     occ = (
-        _vec_live(spark, path, "cells")
+        _read_live(spark, path, "cells")
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(
@@ -610,99 +567,10 @@ def ivf_index_stats(spark: SparkSession, path: str) -> dict:
         "n_tombstones": 0 if tomb is None else tomb.count(),
     }
     for name in ("centroids", "cells"):
-        fs, hpath = _hadoop_fs(spark, f"{path}/{name}")
-        out[f"{name}_files"], _ = _count_parquet_files(spark, fs, hpath)
+        out[f"{name}_files"], _ = _count_parquet_files(
+            spark, f"{path}/{name}"
+        )
     return out
-
-
-def _swap_dataset(spark: SparkSession, path: str, name: str, tmp: str) -> None:
-    """Publish a staged dataset generation via the two-rename swap
-    (live → ``__old``, tmp → live, delete ``__old`` — the previous
-    generation survives until the new one is live). Tolerates a
-    missing live dataset (a first delete creates ``tombstones`` from
-    nothing). Shared by the lexical store's and the vector indexes'
-    mutation paths."""
-    fs, live = _hadoop_fs(spark, f"{path}/{name}")
-    old = _hadoop_fs(spark, f"{path}/{name}__old")[1]
-    if fs.exists(old):  # leftover from a crashed prior swap
-        fs.delete(old, True)
-    if fs.exists(live) and not fs.rename(live, old):
-        raise IOError(f"dataset swap failed: {path}/{name} -> __old")
-    if not fs.rename(_hadoop_fs(spark, tmp)[1], live):
-        fs.rename(old, live)  # put the previous generation back
-        raise IOError(f"dataset swap failed: {tmp} -> {path}/{name}")
-    if fs.exists(old):
-        fs.delete(old, True)
-
-
-def _read_vec_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """A vector index's tombstone relation ``(vec_id)`` — vectors
-    deleted but not yet physically removed — or ``None`` when no
-    delete has ever run (zero overhead on stores that never delete).
-    Shared by the LSH and IVF indexes (both key on ``vec_id``)."""
-    fs, p = _hadoop_fs(spark, f"{path}/tombstones")
-    if not fs.exists(p):
-        return None
-    return spark.read.parquet(f"{path}/tombstones")
-
-
-def _vec_live(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Read a vector-index dataset (LSH vectors/signatures, IVF cells)
-    with deleted vectors MASKED — the lexical store's merge-on-read
-    recipe on the vector side: anti-join the tombstones (no forced
-    broadcast; AQE broadcasts small sets and a grown set degrades to a
-    shuffle join instead of hard-failing)."""
-    rel = spark.read.parquet(f"{path}/{name}")
-    tomb = _read_vec_tombstones(spark, path)
-    if tomb is None:
-        return rel
-    return rel.join(tomb, "vec_id", "left_anti")
-
-
-def _tombstone_delete(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    id_col: str,
-    source_dataset: str,
-) -> int:
-    """The shared merge-on-read delete engine: distinct the batch,
-    anti-join existing tombstones (IDEMPOTENCE — a replay is a counted
-    no-op), keep only ids actually present in ``source_dataset``,
-    publish old ∪ present as the new tombstone generation via the
-    two-rename swap. Returns the number of rows actually deleted.
-    Used by the LSH and IVF indexes (``vec_id``); the signature
-    store's ``doc_id``-keyed delete mirrors it."""
-    from jaccard_mapreduce_spark.operators._cache import pin
-
-    batch = ids.select(F.col(id_col).alias("vec_id")).distinct()
-    tomb = _read_vec_tombstones(spark, path)
-    if tomb is not None:
-        batch = batch.join(tomb, "vec_id", "left_anti")
-    # pinned: the present set feeds the count AND the new tombstone
-    # generation; released before the swap. The batch join is NOT
-    # hint-broadcast (the ngram_contamination ADVICE lesson applied to
-    # the write side too): AQE broadcasts a human-scale batch on its
-    # own, and a bulk delete past the broadcast limit degrades to a
-    # shuffle join instead of an opaque executor OOM.
-    present = pin(
-        spark.read.parquet(f"{path}/{source_dataset}")
-        .select("vec_id")
-        .join(batch, "vec_id", "left_semi")
-        .distinct()
-    )
-    try:
-        n_del = present.count()
-        if n_del == 0:
-            return 0
-        new_tomb = present if tomb is None else tomb.unionByName(present)
-        tmp = f"{path}/tombstones__tmp"
-        _fs_delete(spark, tmp)
-        new_tomb.coalesce(1).write.mode("overwrite").parquet(tmp)
-    finally:
-        present.unpersist()
-    _swap_dataset(spark, path, "tombstones", tmp)
-    return n_del
 
 
 def delete_from_lsh_index(
@@ -729,7 +597,9 @@ def delete_from_lsh_index(
     ID CONTRACT addendum (mirrors the lexical store): re-upserting a
     tombstoned vec_id would have its new rows masked by its own
     tombstone — compact or retune first."""
-    return _tombstone_delete(spark, path, vec_ids, id_col, "vectors")
+    return _tombstone_delete(
+        spark, path, vec_ids, id_col, "vectors", "vec_id"
+    )
 
 
 def delete_from_ivf_index(
@@ -755,7 +625,9 @@ def delete_from_ivf_index(
     counted no-op; a tombstoned id must be compacted/retrained away
     before re-upsert. Returns the number of vectors actually
     deleted."""
-    return _tombstone_delete(spark, path, vec_ids, id_col, "cells")
+    return _tombstone_delete(
+        spark, path, vec_ids, id_col, "cells", "vec_id"
+    )
 
 
 def lsh_index_stats(spark: SparkSession, path: str) -> dict:
@@ -779,7 +651,7 @@ def lsh_index_stats(spark: SparkSession, path: str) -> dict:
     # LIVE relations (tombstones masked): occupancy is what searches
     # pay, and a search never sees a dead row
     occ = (
-        _vec_live(spark, path, "signatures")
+        _read_live(spark, path, "signatures")
         .groupBy("tbl", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(
@@ -788,11 +660,11 @@ def lsh_index_stats(spark: SparkSession, path: str) -> dict:
         )
         .first()
     )
-    tomb = _read_vec_tombstones(spark, path)
+    tomb = _read_tombstones(spark, path)
     out = {
         "n_tables": len(tables),
         "n_planes": len(tables[0]) if tables else 0,
-        "n_vectors": _vec_live(spark, path, "vectors").count(),
+        "n_vectors": _read_live(spark, path, "vectors").count(),
         "n_bucket_groups": int(occ["groups"]),
         "max_bucket_vectors": int(occ["mx"]) if occ["mx"] is not None else 0,
         # the delete path's observability (0 on a store that never
@@ -800,8 +672,9 @@ def lsh_index_stats(spark: SparkSession, path: str) -> dict:
         "n_tombstones": 0 if tomb is None else tomb.count(),
     }
     for name in ("planes", "vectors", "signatures"):
-        fs, hpath = _hadoop_fs(spark, f"{path}/{name}")
-        out[f"{name}_files"], _ = _count_parquet_files(spark, fs, hpath)
+        out[f"{name}_files"], _ = _count_parquet_files(
+            spark, f"{path}/{name}"
+        )
     return out
 
 
@@ -835,7 +708,7 @@ def read_index_cells(
     partition filter on the cells dataset (the scan reads ONLY those
     directories — plan-asserted). The serving-path shape when the
     probe set is known up front (e.g. re-scoring one cluster)."""
-    return _vec_live(spark, path, "cells").where(
+    return _read_live(spark, path, "cells").where(
         F.col("cell_id").isin([int(c) for c in cell_ids])
     )
 
@@ -954,7 +827,7 @@ def retune_lsh_index(
     # merge-on-read deletes — the rebuilt generation contains no dead
     # rows and the whole-directory swap drops the tombstones dataset
     # with the old generation
-    stored = _vec_live(spark, path, "vectors").select("vec_id", "vec")
+    stored = _read_live(spark, path, "vectors").select("vec_id", "vec")
     if n_planes is None:
         n_planes = lsh_params_for(stored.count())
     tmp = f"{path}__retuning"
@@ -963,16 +836,7 @@ def retune_lsh_index(
         stored, tmp, n_planes=n_planes, n_tables=n_tables, seed=seed,
         dim=dim, id_col="vec_id", vec_col="vec",
     )
-    fs, live = _hadoop_fs(spark, path)
-    old = _hadoop_fs(spark, f"{path}__old")[1]
-    if fs.exists(old):
-        fs.delete(old, True)
-    if not fs.rename(live, old):
-        raise IOError(f"retune swap failed: {path} -> {path}__old")
-    if not fs.rename(_hadoop_fs(spark, tmp)[1], live):
-        fs.rename(old, live)  # put the previous generation back
-        raise IOError(f"retune swap failed: {tmp} -> {path}")
-    fs.delete(old, True)
+    _swap(spark, path, tmp)
     return n_planes
 
 
@@ -1032,51 +896,21 @@ def compact_lsh_index(
     pre-compaction one (the graded ``lsh_index_compact`` contract).
 
     With ``n_files=None`` each dataset's output count is derived from
-    its current total bytes at ``target_file_bytes`` per file (the
-    production sizing: a fixed count would fragment a tiny index into
-    MORE files than the appends left, and under-split a huge one).
-
-    The rewrite goes to a sibling temp dataset first and swaps in via
-    two Hadoop-FS renames (live → ``__old``, tmp → live, then delete
-    ``__old``): every step keeps a complete copy of the data on disk,
-    a failed rename raises instead of being silently dropped, and a
-    crash mid-swap is recoverable (``__old`` still holds the previous
-    generation). The swap is NOT atomic across the renames —
-    single-writer maintenance windows are the operating assumption, the
-    same one every non-transactional parquet layout (including the
-    upsert path's appends) already makes. Returns per-dataset
-    ``(files_before, files_after)``.
-
-    Like the lexical store's compaction, this is also the
-    physical-removal half of merge-on-read deletes
-    (:func:`delete_from_lsh_index`): tombstoned rows are folded out of
-    both datasets inside the swap protocol, then the tombstones are
-    cleared — every crash point stays serving-correct (a tombstone
-    masking an already-removed row is a no-op anti-join)."""
-    tomb = _read_vec_tombstones(spark, path)
-    transform = (
-        None
-        if tomb is None
-        else {
-            "vectors": lambda rel: rel.join(tomb, "vec_id", "left_anti"),
-            "signatures": lambda rel: rel.join(
-                tomb, "vec_id", "left_anti"
-            ),
-        }
-    )
-    out = _compact_datasets(
+    its current total bytes at ``target_file_bytes`` per file. The
+    rewrite is staged and published by the store core's two-rename
+    swap (``sources/_store.py``), and — like the lexical store's
+    compaction — it is the physical-removal half of merge-on-read
+    deletes (:func:`delete_from_lsh_index`): tombstoned rows are folded
+    out of both datasets, then the tombstones are cleared. Returns
+    per-dataset ``(files_before, files_after)``."""
+    return _compact_datasets(
         spark,
         path,
         ("vectors", "signatures"),
         "an LSH index",
         n_files,
         target_file_bytes,
-        transform=transform,
     )
-    if tomb is not None:
-        fs, p = _hadoop_fs(spark, f"{path}/tombstones")
-        fs.delete(p, True)
-    return out
 
 
 def compact_ivf_index(
@@ -1097,139 +931,15 @@ def compact_ivf_index(
     Also the physical-removal half of merge-on-read deletes
     (:func:`delete_from_ivf_index`): tombstoned rows are folded out of
     the cells rewrite, then the tombstones are cleared."""
-    tomb = _read_vec_tombstones(spark, path)
-    transform = (
-        None
-        if tomb is None
-        else {"cells": lambda rel: rel.join(tomb, "vec_id", "left_anti")}
-    )
-    out = _compact_datasets(
+    return _compact_datasets(
         spark,
         path,
         ("cells",),
         "an IVF index",
         n_files,
         target_file_bytes,
-        transform=transform,
         partition_by={"cells": "cell_id"},
     )
-    if tomb is not None:
-        fs, pt = _hadoop_fs(spark, f"{path}/tombstones")
-        fs.delete(pt, True)
-    return out
-
-
-def _compact_datasets(
-    spark: SparkSession,
-    path: str,
-    names: tuple[str, ...],
-    kind: str,
-    n_files: int | None,
-    target_file_bytes: int,
-    partition_by: dict[str, str] | None = None,
-    pre_swap: dict | None = None,
-    cluster_by: dict[str, str] | None = None,
-    transform: dict | None = None,
-) -> dict[str, tuple[int, int]]:
-    """Shared size-targeted compaction over an index's append-heavy
-    datasets (see :func:`compact_lsh_index` for the contract). A
-    dataset named in ``partition_by`` keeps its partition column on
-    rewrite (file counting then recurses into partition dirs). A
-    dataset named in ``cluster_by`` is rewritten hash-distributed by
-    that column WITHOUT on-disk partition dirs — for datasets whose
-    write path co-locates a key (the lexical store's postings are
-    ``repartition("token")``-distributed so a probe's broadcast join
-    streams each executor's slice) and where a plain round-robin
-    rewrite would silently destroy that clustering. A dataset named in
-    ``pre_swap`` has its callback invoked with the tmp dataset path
-    AFTER the rewrite lands but BEFORE the swap — for in-dataset
-    metadata (the signature store's ``_banding`` marker) that the
-    parquet re-read drops and that must be present the instant the
-    rename publishes the new generation, not re-stamped after it (a
-    crash between swap and re-stamp would leave the dataset without
-    its authoritative marker). A dataset named in ``transform`` has
-    its relation mapped through the callback before the rewrite — the
-    lexical store's tombstone fold (compaction is the physical-removal
-    half of merge-on-read deletes), which must happen per-dataset
-    inside the swap protocol, not before it."""
-    partition_by = partition_by or {}
-    cluster_by = cluster_by or {}
-    pre_swap = pre_swap or {}
-    transform = transform or {}
-    out: dict[str, tuple[int, int]] = {}
-    for name in names:
-        ds = f"{path}/{name}"
-        fs, hpath = _hadoop_fs(spark, ds)
-        if not fs.exists(hpath):
-            raise ValueError(
-                f"not {kind} (missing {name} dataset): {path}"
-            )
-        before, total_bytes = _count_parquet_files(spark, fs, hpath)
-        if n_files is None:
-            n_out = max(1, -(-total_bytes // target_file_bytes))
-        else:
-            n_out = n_files
-        tmp = f"{path}/{name}__compacting"
-        rel = spark.read.parquet(ds)
-        if name in transform:
-            rel = transform[name](rel)
-        if name in partition_by:
-            # repartition BY the partition column: a plain round-robin
-            # repartition would put every partition value in every
-            # task, writing n_out files into EVERY partition dir —
-            # n_out x n_partitions files, worse than the fragmentation
-            # being fixed. Hash-distributing the partition column caps
-            # output at ~one file per (task, value) pair.
-            pcol = partition_by[name]
-            writer = (
-                rel.repartition(n_out, F.col(pcol))
-                .write.mode("overwrite")
-                .partitionBy(pcol)
-            )
-        elif name in cluster_by:
-            writer = rel.repartition(
-                n_out, F.col(cluster_by[name])
-            ).write.mode("overwrite")
-        else:
-            writer = rel.repartition(n_out).write.mode("overwrite")
-        writer.parquet(tmp)
-        if name in pre_swap:
-            pre_swap[name](tmp)
-        # swap keeping a full copy at every step: live -> __old,
-        # tmp -> live, delete __old. Hadoop FS rename reports failure
-        # by BOOLEAN, not exception — a dropped return value here would
-        # silently lose the live dataset; and delete-before-rename
-        # (the obvious shortcut) has a crash window with NO copy of the
-        # data at the live path.
-        old = _hadoop_fs(spark, f"{path}/{name}__old")[1]
-        if fs.exists(old):  # leftover from a crashed prior swap
-            fs.delete(old, True)
-        if not fs.rename(hpath, old):
-            raise IOError(f"compaction swap failed: {ds} -> {old}")
-        if not fs.rename(_hadoop_fs(spark, tmp)[1], hpath):
-            # put the previous generation back before raising
-            fs.rename(old, hpath)
-            raise IOError(f"compaction swap failed: {tmp} -> {ds}")
-        fs.delete(old, True)
-        after, _ = _count_parquet_files(spark, fs, hpath)
-        out[name] = (before, after)
-    return out
-
-
-def _count_parquet_files(spark: SparkSession, fs, hpath) -> tuple[int, int]:
-    """(count, total bytes) of ``*.parquet`` files under ``hpath``,
-    recursing one level into partition directories."""
-    n = 0
-    total = 0
-    for st in fs.listStatus(hpath):
-        if st.isDirectory():
-            sub_n, sub_b = _count_parquet_files(spark, fs, st.getPath())
-            n += sub_n
-            total += sub_b
-        elif st.getPath().getName().endswith(".parquet"):
-            n += 1
-            total += st.getLen()
-    return n, total
 
 
 def lsh_index_compact_demo(
@@ -1372,9 +1082,9 @@ def search_lsh_index(
     # tombstone-masked reads (merge-on-read deletes): every rerank
     # tier consumes these two relations, so masking here covers all
     # branches; a store that never deleted reads them untouched
-    sig_i = _vec_live(spark, path, "signatures")
+    sig_i = _read_live(spark, path, "signatures")
     _integral_types = ("tinyint", "smallint", "int", "bigint")
-    stored_v = _vec_live(spark, path, "vectors")
+    stored_v = _read_live(spark, path, "vectors")
     q_type = queries.schema[id_col].dataType.simpleString()
     s_type = stored_v.schema["vec_id"].dataType.simpleString()
     _check_rerank(rerank, allowed=("auto", "exact", "fast", "dist"))

@@ -163,9 +163,9 @@ def stream_bm25_serve(
         GRADED_MAX_DF_RATIO,
         df_weights,
     )
+    from jaccard_mapreduce_spark.sources._store import _read_live
     from jaccard_mapreduce_spark.sources.lexical_store import (
         _ensure_lex_store,
-        _read_live,
         _require_marker,
     )
     from jaccard_mapreduce_spark.sources.vector_index import _scratch_dir
@@ -273,9 +273,9 @@ def stream_phrase_serve(
     from jaccard_mapreduce_spark.operators.retrieval import (
         leading_phrases,
     )
+    from jaccard_mapreduce_spark.sources._store import _read_live
     from jaccard_mapreduce_spark.sources.lexical_store import (
         _ensure_lex_store,
-        _read_live,
     )
     from jaccard_mapreduce_spark.sources.vector_index import _scratch_dir
 
@@ -391,9 +391,9 @@ def stream_proximity_serve(
     from jaccard_mapreduce_spark.operators.retrieval import (
         leading_phrases,
     )
+    from jaccard_mapreduce_spark.sources._store import _read_live
     from jaccard_mapreduce_spark.sources.lexical_store import (
         _ensure_lex_store,
-        _read_live,
     )
     from jaccard_mapreduce_spark.sources.vector_index import _scratch_dir
 

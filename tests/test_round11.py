@@ -28,7 +28,7 @@ def test_upsert_refuses_a_store_without_the_tf_marker(spark, tmp_path):
         lexical_store_stats,
         upsert_lexical_store,
     )
-    from jaccard_mapreduce_spark.sources.vector_index import _fs_delete
+    from jaccard_mapreduce_spark.sources._store import _fs_delete
 
     path = str(tmp_path / "store")
     docs = _tiny_docs(spark)

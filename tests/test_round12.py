@@ -229,8 +229,8 @@ def test_upsert_stages_then_promotes(spark, tmp_path):
 def test_stats_positions_count_comes_from_footers(spark, tmp_path):
     """round-11 ADVICE: n_positions must equal the scan count while
     costing only footer metadata reads."""
+    from jaccard_mapreduce_spark.sources._store import _parquet_footer_rows
     from jaccard_mapreduce_spark.sources.lexical_store import (
-        _parquet_footer_rows,
         build_lexical_store,
     )
 

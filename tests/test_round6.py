@@ -5,6 +5,7 @@ path's invariants."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 
@@ -153,27 +154,63 @@ def test_streaming_upsert_appends_each_microbatch(spark, emb, tmp_path):
 def test_index_search_parallelism_survives_aqe(spark, emb):
     """The rerank must not serialize onto one task (the round-5
     perf-weak finding: AQE coalesced the probe side to one partition).
-    Since the round-12 optimization the exact store search runs in the
-    cell-local kernel, whose anti-serialization mechanism is the
-    block-grid group shuffle: work is keyed by (tbl, bucket, gq, gi),
-    so a hot cell decomposes into bounded block-pair groups that hash
-    across partitions instead of pair-expanding inside one task. The
-    plan must carry the group kernel and its grid-keyed partitioning."""
+    The exact store search has two plans, picked by the estimated pair
+    volume against ``IVF_EXACT_KERNEL_MIN_PAIRS`` (round 13), and each
+    carries its own anti-serialization mechanism:
+
+    - above the gate, the cell-local kernel's block-grid group shuffle:
+      work is keyed by (tbl, bucket, gq, gi), so a hot cell decomposes
+      into bounded block-pair groups that hash across partitions;
+    - below it, the relational cell join, whose probe side is the
+      user-numbered ``repartition(cell_id, vec_id)`` — an exchange AQE
+      may not coalesce, so the join keeps every shuffle partition."""
+    from jaccard_mapreduce_spark.operators.similarity import (
+        IVF_EXACT_KERNEL_MIN_PAIRS,
+    )
     from jaccard_mapreduce_spark.sources.vector_index import (
         build_ivf_index,
         search_ivf_index,
     )
 
+    n_cells, n_probe = 8, 3
+    # 20 id-disjoint copies of the corpus as the probing batch
+    big = emb.crossJoin(spark.range(20).withColumnRenamed("id", "rep")).select(
+        (F.col("vec_id") * 20 + F.col("rep")).alias("vec_id"), "embedding"
+    )
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with tempfile.TemporaryDirectory() as td:
-        build_ivf_index(emb, td, n_cells=8)
-        plan = (
-            search_ivf_index(spark, td, emb, k=5, n_probe=3)
+        build_ivf_index(emb, td, n_cells=n_cells)
+        n_stored = emb.count()
+
+        def est_pairs(queries):
+            return queries.count() * n_probe * n_stored / n_cells
+
+        assert est_pairs(big) > IVF_EXACT_KERNEL_MIN_PAIRS
+        kernel = (
+            search_ivf_index(spark, td, big, k=5, n_probe=n_probe)
             ._jdf.queryExecution()
             .sparkPlan()
             .toString()
         )
-    assert "FlatMapGroupsInPandas" in plan
-    assert "gq" in plan and "gi" in plan
+        assert "FlatMapGroupsInPandas" in kernel
+        assert "gq" in kernel and "gi" in kernel
+
+        assert est_pairs(emb) <= IVF_EXACT_KERNEL_MIN_PAIRS
+        small = search_ivf_index(spark, td, emb, k=5, n_probe=n_probe)
+        small.collect()  # the final adaptive plan exists once it ran
+        final = small._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in final
+    assert re.search(
+        rf"Exchange hashpartitioning\(cell_id#\d+L?, vec_id#\d+L?, "
+        rf"{n_shuffle}\), REPARTITION_BY_NUM",
+        final,
+    ), final
+    # no coalescing read sits on top of the probe-side exchange
+    assert not re.search(
+        r"AQEShuffleRead[^\n]*\n[^\n]*ShuffleQueryStage[^\n]*\n"
+        r"[^\n]*Exchange hashpartitioning\(cell_id",
+        final,
+    ), final
 
 
 def test_containment_recall_audit_pruned_subset_of_exact(spark):

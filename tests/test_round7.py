@@ -1065,7 +1065,7 @@ def test_banding_marker_survives_stale_params_and_compaction(
     # simulate the crash window: buckets are rebanded, _params stale
     # (written through Hadoop FS like the library does — a raw Python
     # write would orphan the LocalFS .crc sidecar)
-    from jaccard_mapreduce_spark.sources.vector_index import _fs_write_text
+    from jaccard_mapreduce_spark.sources._store import _fs_write_text
 
     _fs_write_text(
         spark, path + "/_params", json.dumps({"k": 32, "bands": 8, "seed": 42})

@@ -44,7 +44,7 @@ def test_compact_minhash_stamps_banding_before_swap(spark, tmp_path):
         build_minhash_index,
         compact_minhash_index,
     )
-    from jaccard_mapreduce_spark.sources.vector_index import (
+    from jaccard_mapreduce_spark.sources._store import (
         _fs_read_text,
         _fs_write_text,
     )
@@ -64,7 +64,7 @@ def test_compact_minhash_stamps_banding_before_swap(spark, tmp_path):
 
 
 def test_compact_pre_swap_hook_sees_tmp_before_publish(spark, tmp_path):
-    from jaccard_mapreduce_spark.sources.vector_index import (
+    from jaccard_mapreduce_spark.sources._store import (
         _compact_datasets,
     )
 
