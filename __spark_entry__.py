@@ -300,7 +300,7 @@ def _q_ivf_index_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # rank projection: the dist kernel's scores differ from the fold
-    # in the last ulp (the lsh_fast_ranks precedent)
+    # in the last ulp (the lsh_dist_ranks precedent)
     return ivf_index_dist_demo(spark, sf_dir).select(
         "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
     )
@@ -976,21 +976,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # twice-green exact-kernel entries (ann_cosine_topk,
         # ann_fast_ranks, quantize_embeddings) rotate to the tail. ---
         "ann_lsh_topk": lambda s, d: S.ann_lsh_topk(_emb(s, d), k=10),
-        # new round 7: the Arrow/numpy rerank fast path, rank-agreement
-        # graded (scores dropped from the projection — numpy pairwise
-        # summation differs from the sequential fold in the last ulp,
-        # the ann_fast_ranks precedent): same candidates, same ranks as
-        # the exact tier, 1-2 orders more rerank throughput (SCALE.md)
-        "lsh_fast_ranks": lambda s, d: S.ann_lsh_topk(
-            _emb(s, d), k=10, rerank="fast"
-        ).select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        ),
         # new round 8: the fully DISTRIBUTED vectorized rerank — pairs
-        # are scored where they collide (bucket-local applyInPandas,
-        # fast-kernel arithmetic), removing the fast tier's
-        # driver-matrix cap: no broadcast matrix, no collect, fast
-        # throughput at any corpus size. Rank-graded like the fast tier
+        # are scored where they collide (bucket-local applyInPandas):
+        # no broadcast matrix, no collect, at any corpus size.
+        # Rank-graded (scores dropped from the projection — numpy
+        # pairwise summation differs from the sequential fold in the
+        # last ulp, the ann_fast_ranks precedent)
         "lsh_dist_ranks": lambda s, d: S.ann_lsh_topk(
             _emb(s, d), k=10, rerank="dist"
         ).select(
@@ -2175,15 +2166,9 @@ def oracle_sql() -> dict[str, str]:
         "semantic_dedup": oracles.semantic_dedup_sql(),
         "ann_fast_ranks": oracles.ann_fast_ranks_sql(10),
         "ann_lsh_topk": oracles.ann_lsh_topk_sql(10, S.lsh_tables(64)),
-        # the fast tier must reproduce the EXACT tier's ranking — the
-        # oracle is the exact-kernel LSH SQL with score projected away
-        "lsh_fast_ranks": (
-            "SELECT query_id, neighbor_id, rank FROM ("
-            + oracles.ann_lsh_topk_sql(10, S.lsh_tables(64))
-            + ")"
-        ),
-        # the distributed kernel must reproduce the exact tier's
-        # ranking too — same oracle shape as the fast tier's
+        # the distributed kernel must reproduce the EXACT tier's
+        # ranking — the oracle is the exact-kernel LSH SQL with score
+        # projected away
         "lsh_dist_ranks": (
             "SELECT query_id, neighbor_id, rank FROM ("
             + oracles.ann_lsh_topk_sql(10, S.lsh_tables(64))

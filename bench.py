@@ -123,7 +123,6 @@ def main() -> None:
         "clustered_split_leakage",
         "prepare_corpus",
         "effective_token_stats",
-        "lsh_fast_ranks",
         # (dedup_cluster_sizes / dedup_minhash_lsh / bigram_surprise
         # rotate OUT this round — mid-pack ~3-5 s keys displaced by the
         # delete-family additions under the 40-key core cap; they stay

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import math
 import random
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -75,183 +76,11 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _check_rerank(
-    rerank: str, allowed: tuple[str, ...] = ("exact", "fast")
-) -> None:
+def _check_rerank(rerank: str, allowed: tuple[str, ...]) -> None:
     if rerank not in allowed:
         raise ValueError(
             f"rerank must be one of {'/'.join(allowed)}, got {rerank!r}"
         )
-
-
-def _score_pairs_fast(
-    cand: DataFrame,
-    va_df: DataFrame,
-    vb_df: DataFrame | None = None,
-    max_index_rows: int | None = None,
-) -> DataFrame:
-    """Vectorized rerank of a skinny candidate-pair relation — the
-    production ``rerank="fast"`` tier behind the ANN searches.
-
-    ``cand`` is ``(query_id, neighbor_id)``; ``va_df``/``vb_df`` are the
-    ``(vec_id, vec, norm2)`` relations the two id columns resolve
-    against (one relation passed twice for the self-search shapes). The
-    vector matrix is collected ONCE, broadcast, and each Arrow batch of
-    id pairs scores with one numpy gather + einsum — candidates cross
-    to Python as two ids (16 bytes), never as 2×dim doubles.
-
-    Why this shape: the exact tier's interpreted
-    ``aggregate(zip_with(...))`` fold measures ~1–3 M scored pairs/s on
-    32 threads and is the constant every ANN retune budgets against. A
-    first cut that swapped only the dot product for a pandas_udf over
-    the joined (vec_a, vec_b) columns measured SLOWER than the fold
-    (0.9 vs 2.8 M pairs/s at 4 M pairs — shipping 2×64 doubles per
-    candidate through Arrow dominates), so the fast tier instead ships
-    ids and gathers from a broadcast matrix, the ``cosine_topk_fast``
-    precedent. That imports its smallness assumption too, so the same
-    guard is ENFORCED: above ``max_index_rows`` the operator refuses
-    rather than OOM the driver — at that scale use the exact tier
-    (fully distributed, linear in candidates) or shard the serving
-    corpus so each index partition fits.
-
-    Scores differ from the fold in the last ulp (numpy pairwise
-    summation), so the fast tier is rank-graded, never hash-graded —
-    the ``lsh_fast_ranks`` contract entry and the round-7 SCALE.md
-    measurement pin agreement and speedup."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    spark = cand.sparkSession
-    if max_index_rows is None:
-        max_index_rows = MAX_FAST_INDEX_ROWS
-
-    def _matrix(df: DataFrame):
-        n = df.count()
-        if n > max_index_rows:
-            raise ValueError(
-                f"rerank='fast': vector relation has {n} rows > "
-                f"max_index_rows={max_index_rows}; collecting it would "
-                "exhaust driver memory. Use the exact rerank tier for "
-                "corpora this size, or shard the index."
-            )
-        pdf = df.select("vec_id", "vec", "norm2").toPandas()
-        ids = pdf["vec_id"].to_numpy()
-        m = np.vstack(pdf["vec"].to_numpy()).astype("float64")
-        norm = np.sqrt(pdf["norm2"].to_numpy().astype("float64"))
-        norm[norm == 0] = np.inf  # zero vectors score 0 (the _cosine guard)
-        return ids, m, norm
-
-    same = vb_df is None or vb_df is va_df
-    a_side = _matrix(va_df)
-    b_side = a_side if same else _matrix(vb_df)
-    bc = spark.sparkContext.broadcast((a_side, b_side))
-
-    def score(batches):
-        import pandas as pd
-
-        (a_ids, am, an), (b_ids, bm, bn) = bc.value
-
-        def _lookup(ids):
-            # id -> matrix-row resolver: a dense numpy LUT when the ids
-            # are a compact non-negative integer range (one vectorized
-            # gather per batch), else a per-element dict map — the LUT
-            # is the difference between ~2 M and ~20 M pairs/s (the
-            # pandas .map hash loop was the measured bottleneck)
-            if np.issubdtype(np.asarray(ids).dtype, np.integer):
-                arr = np.asarray(ids, dtype="int64")
-                if len(arr) and arr.min() >= 0 and arr.max() < 4 * len(arr) + 1024:
-                    lut = np.full(int(arr.max()) + 1, -1, dtype="int64")
-                    lut[arr] = np.arange(len(arr))
-
-                    def _gather(s):
-                        ix = s.to_numpy(dtype="int64")
-                        # a candidate id absent from the vector relation
-                        # must FAIL like the dict path's KeyError, not
-                        # silently gather row -1 (the LUT's fill value
-                        # wraps to the LAST matrix row) and emit a wrong
-                        # score — the one failure mode of this kernel
-                        # that corrupts instead of erroring
-                        if len(ix) and (
-                            ix.min() < 0 or ix.max() >= len(lut)
-                        ):
-                            bad = ix[(ix < 0) | (ix >= len(lut))]
-                            raise KeyError(
-                                "candidate ids absent from the vector"
-                                f" relation: {sorted(set(bad))[:5]}"
-                            )
-                        out = lut[ix]
-                        if (out < 0).any():
-                            bad = ix[out < 0]
-                            raise KeyError(
-                                "candidate ids absent from the vector"
-                                f" relation: {sorted(set(bad))[:5]}"
-                            )
-                        return out
-
-                    return _gather
-            # general resolver (sparse integer ids — e.g. the 10x
-            # probe's stride-1M replica ids — and non-integer ids):
-            # pandas' C hash table, one vectorized probe per batch.
-            # Measured 11x the per-element Series.map dict loop this
-            # replaces (0.031 vs 0.339 s per 2M lookups against 20k
-            # ids); a numpy searchsorted variant measured SLOWER than
-            # the dict (log-n random probes lose to one hash hit).
-            # get_indexer returns -1 for absent ids — same loud-failure
-            # contract as the LUT path above
-            index = pd.Index(ids)
-
-            def _probe(s):
-                out = index.get_indexer(np.asarray(s))
-                if len(out) and (out < 0).any():
-                    bad = np.asarray(s)[out < 0]
-                    raise KeyError(
-                        "candidate ids absent from the vector"
-                        f" relation: {sorted(set(bad))[:5]}"
-                    )
-                return out
-
-            return _probe
-
-        a_look = _lookup(a_ids)
-        b_look = a_look if b_ids is a_ids else _lookup(b_ids)
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            qi = a_look(batch["query_id"])
-            ni = b_look(batch["neighbor_id"])
-            s = np.einsum("ij,ij->i", am[qi], bm[ni]) / (an[qi] * bn[ni])
-            yield pd.DataFrame(
-                {
-                    "query_id": batch["query_id"],
-                    "neighbor_id": batch["neighbor_id"],
-                    "score": s,
-                }
-            )
-
-    schema = T.StructType(
-        [
-            cand.schema["query_id"],
-            cand.schema["neighbor_id"],
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    # spread the skinny pairs before the Python stage: the candidate
-    # relation often arrives on the upstream join's few (or AQE-
-    # coalesced) partitions, which would serialize the Arrow workers
-    # the same way the round-6 single-task fold did — an explicit
-    # user-numbered repartition of 16-byte pairs is cheap insurance
-    # (measured: IVF fast tier 9.8 s -> beats exact only with this).
-    # HASH on the full pair, not round-robin (round-13, guide §2.4):
-    # a keyless repartition(n) first pays a local sort of its input
-    # (sortBeforeRepartition, needed for deterministic retries);
-    # hashing (query_id, neighbor_id) skips that sort, spreads evenly
-    # even for a single-query batch, and scores are per-pair so
-    # placement is invisible to the (rank-graded) output.
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return cand.repartition(
-        n_shuffle, "query_id", "neighbor_id"
-    ).mapInPandas(score, schema=schema)
 
 
 DIST_BLOCK_ROWS = 4096
@@ -262,11 +91,7 @@ DIST_BLOCK_ROWS = 4096
 # (docs/SCALE.md round 8 protocol): at ~4M estimated pairs (sf0.1
 # defaults, 2k vectors) exact wins 3.3 s vs dist 4.2 s; at the 20k/
 # 9-plane probe's 79M candidates dist wins 170 s vs exact 731 s. The
-# threshold sits near the geometric middle of the bracket. The "fast"
-# broadcast-matrix tier is never auto-chosen: it carries a hard
-# driver-matrix cap and measured SLOWER than dist at the large shape
-# (649 s) — it remains an explicit override for midrange corpora that
-# fit comfortably under its cap.
+# threshold sits near the geometric middle of the bracket.
 AUTO_DIST_PAIRS = 16_000_000
 
 
@@ -282,6 +107,54 @@ def _auto_rerank(est_pairs: float, auto_dist_pairs: int) -> str:
     return "dist" if est_pairs > auto_dist_pairs else "exact"
 
 
+def _resolve_rerank(
+    rerank: str,
+    allowed: tuple[str, ...],
+    estimate: Callable[[], float],
+    auto_dist_pairs: int,
+    kernel_min_pairs: int | None = None,
+    id_types: tuple[str, str] | None = None,
+) -> str:
+    """The one rerank-tier dispatch of the ANN family
+    (``ann_lsh_topk``, ``ann_ivf_topk``, ``search_lsh_index``,
+    ``search_ivf_index``): validate ``rerank`` against the caller's
+    ``allowed`` tiers and return the plan form the caller builds —
+    ``"dist"``, ``"exact_kernel"``, ``"exact_relational"`` or ``"sq8"``.
+
+    ``estimate`` is the caller's occupancy estimate of scored candidate
+    pairs (it runs count jobs); it is evaluated at most once, and only
+    when ``auto`` (:func:`_auto_rerank` against ``auto_dist_pairs``) or
+    the exact-kernel gate needs it. ``kernel_min_pairs`` is the
+    stored-index searches' gate: an exact search estimated at or below
+    it takes the bit-identical relational plan, whose per-pair fold
+    beats the kernel's fixed Arrow overhead at small volumes. The
+    one-plan searches pass ``None`` and always run the exact kernel.
+
+    ``id_types`` is the stored-index searches' ``(query, store)`` id
+    type pair. The kernels emit one id type for both columns, so a
+    mixed pair resolves ``auto``/``exact`` to the relational plan (its
+    self-pair compare handles the mix) and refuses ``dist``."""
+    _check_rerank(rerank, allowed)
+    if id_types is not None and id_types[0] != id_types[1]:
+        if rerank == "dist":
+            raise ValueError(
+                "rerank='dist' requires matching query/store id types "
+                f"(got {id_types[0]} vs {id_types[1]}); use rerank='exact'"
+            )
+        return "sq8" if rerank == "sq8" else "exact_relational"
+    est = None
+    if rerank == "auto":
+        est = estimate()
+        rerank = _auto_rerank(est, auto_dist_pairs)
+    if rerank != "exact":
+        return rerank
+    if kernel_min_pairs is None:
+        return "exact_kernel"
+    if est is None:
+        est = estimate()
+    return "exact_kernel" if est > kernel_min_pairs else "exact_relational"
+
+
 def _score_bucket_local(
     sigv: DataFrame,
     id_type: str,
@@ -289,9 +162,8 @@ def _score_bucket_local(
     local_k: int | None = None,
     kernel: str = "einsum",
 ) -> DataFrame:
-    """Fully distributed vectorized rerank for the LSH family — the
-    third rerank tier (``rerank="dist"``), removing the fast tier's
-    driver-matrix cap: candidates are scored WHERE THEY COLLIDE.
+    """Fully distributed vectorized rerank for the LSH family
+    (``rerank="dist"``): candidates are scored WHERE THEY COLLIDE.
 
     ``sigv`` is the signature relation with the vectors AND the full
     per-table signature array riding along —
@@ -331,15 +203,14 @@ def _score_bucket_local(
     (which Spark's WindowGroupLimit pre-prunes map-side). NO broadcast
     matrix, NO driver collect, no cap. Scores differ from the
     interpreted fold in the last ulp (numpy pairwise summation), so
-    the tier is rank-graded (``lsh_dist_ranks``), the
-    ``lsh_fast_ranks`` precedent.
+    the tier is rank-graded (``lsh_dist_ranks``).
 
     The kernel closure is deliberately SELF-CONTAINED (no references
     to module helpers): it serializes by value and runs on any worker
     without the package installed — the per-pair arithmetic (einsum
     row reduction, then one divide, chunked so numpy temporaries stay
-    batch-sized per the round-7 host finding) is the fast tier's,
-    bit-identical for a pair regardless of which group scores it.
+    batch-sized per the round-7 host finding) is bit-identical for a
+    pair regardless of which group scores it.
 
     ``kernel="fold"`` (optimization round 12) swaps the einsum row
     reduction for a SEQUENTIAL-ORDER accumulation over the dimension
@@ -1130,9 +1001,15 @@ def _lsh_sigs_kernel(v: DataFrame, tables: list[list[list[float]]]) -> DataFrame
     that row alone). A NaN accumulation emits '1' exactly like the SQL
     CASE (Spark orders NaN above every double, so ``NaN >= 0`` is true
     there — numpy's IEEE ``False`` would silently flip the bucket,
-    round-13 ADVICE). Verified bitwise against the expression form for
-    every LSH-family graded query plus the NaN/ragged fixtures."""
+    round-13 ADVICE). A NULL element (or a NULL vector) nulls every
+    SQL fold, so every CASE takes its ELSE '0' — but Arrow hands a
+    NULL element to pandas as NaN, which would bucket '1', so such rows
+    are flagged in Spark before the kernel and emit the all-'0'
+    signatures. Verified bitwise against the expression form for every
+    LSH-family graded query plus the NaN/NULL/ragged fixtures."""
     tbls = [[list(p) for p in planes] for planes in tables]
+    zero_sigs = ["0" * len(planes) for planes in tbls]
+    flag = "_sigs_null"
 
     def sigs(batches):
         import numpy as np
@@ -1161,15 +1038,19 @@ def _lsh_sigs_kernel(v: DataFrame, tables: list[list[list[float]]]) -> DataFrame
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            has_null = pdf.pop(flag).to_numpy(dtype=bool)
             vec_arr = pdf["vec"].to_numpy()
-            lens = np.fromiter(
-                (len(x) for x in vec_arr), dtype="int64", count=len(vec_arr)
-            )
             sig_rows = np.empty(len(vec_arr), dtype=object)
+            for pos in np.flatnonzero(has_null):
+                sig_rows[pos] = list(zero_sigs)
+            ok = np.flatnonzero(~has_null)
+            lens = np.fromiter(
+                (len(vec_arr[i]) for i in ok), dtype="int64", count=len(ok)
+            )
             # group rows by vector width: vstack needs uniform rows, and
             # the SQL form's degrade-to-'0' is a per-ROW decision
             for wdt in np.unique(lens):
-                sel = np.flatnonzero(lens == wdt)
+                sel = ok[lens == wdt]
                 V = np.vstack(vec_arr[sel]).astype("float64")
                 per_table = [table_bits(V, planes) for planes in P]
                 for pos, row_sigs in zip(sel, zip(*per_table)):
@@ -1181,7 +1062,12 @@ def _lsh_sigs_kernel(v: DataFrame, tables: list[list[list[float]]]) -> DataFrame
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in v.schema.fields
     )
-    return v.mapInPandas(sigs, schema=f"{fields}, sigs array<string>")
+    has_null = F.coalesce(
+        F.exists("vec", lambda x: x.isNull()), F.lit(True)
+    )
+    return v.withColumn(flag, has_null).mapInPandas(
+        sigs, schema=f"{fields}, sigs array<string>"
+    )
 
 
 def _distinct_directed_pairs(joined: DataFrame, packed: bool) -> DataFrame:
@@ -1190,9 +1076,9 @@ def _distinct_directed_pairs(joined: DataFrame, packed: bool) -> DataFrame:
     plan (collision multiplicity × bucket fanout rows in, one row per
     distinct pair out). With ``packed`` (ids fit 31 bits) the pair is
     packed into ONE long for the dedup and unpacked after: half the
-    shuffle bytes, a single-column hash dedup. The single copy of the
-    pack/unpack for the directed ``vec_id`` pair paths (one-plan LSH +
-    the persisted-index search); ``dedup.py``'s undirected doc-pair
+    shuffle bytes, a single-column hash dedup. The copy of the
+    pack/unpack for the directed ``vec_id`` pairs of the persisted-index
+    search's relational plan; ``dedup.py``'s undirected doc-pair
     twin keeps its own regression-tested copy because its canonical
     ``a < b`` direction and column names differ. The round-5 review
     found that ``shiftleft`` on a 32-bit int column is a silent no-op
@@ -1226,7 +1112,6 @@ def ann_lsh_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ids_fit_31_bits: bool | None = None,
     rerank: str = "auto",
     block_rows: int = DIST_BLOCK_ROWS,
     auto_dist_pairs: int = AUTO_DIST_PAIRS,
@@ -1234,14 +1119,10 @@ def ann_lsh_topk(
     """Approximate cosine top-k: candidates share an LSH bucket in ANY
     of ``n_tables`` independent hash tables (the classic multi-table
     construction), exact rerank over the deduplicated candidate set.
-    ``rerank="fast"`` swaps the rerank dot product for the Arrow/numpy
-    kernel (:func:`_dot_fast`) — same candidates, same ranks, scores
-    identical to float error; the graded ``lsh_fast_ranks`` audit pins
-    the rank agreement.
 
     ``rerank="auto"`` (the default) derives the tier from the
     occupancy estimate ``n_tables · n² / 2^n_planes`` against
-    ``auto_dist_pairs`` (:func:`_auto_rerank` — small corpora rerank
+    ``auto_dist_pairs`` (:func:`_resolve_rerank` — small corpora rerank
     exactly, candidate volumes past the measured crossover go to the
     distributed kernel). Auto is EAGER by design — it counts the
     corpus before choosing, like the ``jaccard_pairs`` auto strategy —
@@ -1260,100 +1141,55 @@ def ann_lsh_topk(
     (SCALE.md round 5).
 
     Plan shape: the signature relation is ``n_tables`` rows per vector
-    (one explode — planes are literals, signatures pure projections),
-    candidates come from an equi-join on ``(table, bucket)`` followed
-    by a pair ``distinct`` (a pair found in several tables reranks
-    once), and scoring joins the skinny pair relation back to the
-    vector relation by id — every stage a hash shuffle on a real key,
-    no broadcast of data-sized state.
+    (one explode of the kernel-computed signature array), and both
+    tiers score in ONE hash shuffle on ``(table, bucket)`` — every pair
+    is scored once, in the first table where it collides
+    (:func:`_score_bucket_local`), so there is no candidate ``distinct``
+    and no vector join-back; nothing data-sized is broadcast.
     """
     from jaccard_mapreduce_spark.operators._cache import pin as _pin
 
-    _check_rerank(rerank, allowed=("auto", "exact", "fast", "dist"))
     tables = lsh_tables(dim, n_planes, n_tables, seed)
-    # pinned: feeds the id-range probe, the signature explode, AND both
-    # score join-backs (the probe also materializes the pin up front)
+    # pinned: the auto tier's count and the signature kernel both read it
     v = _pin(vectors(embeddings, id_col, vec_col))
-    if rerank == "auto":
+
+    def estimate() -> float:
         n = v.count()
-        est = n_tables * n * (n / float(2 ** min(n_planes, 62)))
-        rerank = _auto_rerank(est, auto_dist_pairs)
-    # signatures for every tier come from the vectorized kernel
-    # (optimization round 12 — the per-plane interpreted folds were
-    # the dominant cost of the probe-scale searches); bit-identical
-    # bucket strings, see _lsh_sigs_kernel
-    sigv_src = _lsh_sigs_kernel(v, tables)
-    if rerank in ("dist", "exact"):
-        # bucket-local scoring: the vectors AND the full signature
-        # array ride the signature explode into the (tbl, bucket)
-        # shuffle, and every pair is scored exactly once, in the first
-        # table where it collides — no candidate distinct, no vector
-        # join-backs, no broadcast matrix (see _score_bucket_local).
-        # Optimization round 12: the EXACT tier runs through the same
-        # kernel with ``kernel="fold"`` (sequential-order accumulation,
-        # bit-identical to the interpreted ``_dot`` fold — hash-graded
-        # scores unchanged, verified bitwise at sf0.01/sf0.1 and vs the
-        # DuckDB oracle). Same candidate set by construction: a pair
-        # colliding in ≥1 table is scored exactly once in its first
-        # colliding table, which is the relational plan's
-        # distinct-pairs set. This removes the pair ``distinct``
-        # exchange, both vector join-backs, and the id-range probe
-        # from the exact plan (guide §2.4), and replaces ~1–3 M
-        # interpreted pair-folds/s with ~2.4 M/s PER THREAD.
-        sigv = sigv_src.select(
-            "vec_id",
-            "vec",
-            "norm2",
-            "sigs",
-            F.posexplode("sigs").alias("tbl", "bucket"),
-        )
-        id_type = embeddings.schema[id_col].dataType.simpleString()
-        return _topk(
-            _score_bucket_local(
-                sigv,
-                id_type,
-                block_rows=block_rows,
-                local_k=k,
-                kernel="fold" if rerank == "exact" else "einsum",
-            ),
-            k,
-        )
-    sig = sigv_src.select(
-        "vec_id", F.posexplode("sigs").alias("tbl", "bucket")
+        return n_tables * n * (n / float(2 ** min(n_planes, 62)))
+
+    form = _resolve_rerank(
+        rerank, ("auto", "exact", "dist"), estimate, auto_dist_pairs
     )
-    a = sig.alias("a")
-    b = sig.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.tbl") == F.col("b.tbl"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.vec_id") != F.col("b.vec_id")),
+    # bucket-local scoring: the vectors AND the full signature array
+    # (from the vectorized kernel — bit-identical bucket strings, see
+    # _lsh_sigs_kernel) ride the signature explode into the (tbl,
+    # bucket) shuffle, and every pair is scored exactly once, in the
+    # first table where it collides. Optimization round 12: the EXACT
+    # tier runs through the same kernel with ``kernel="fold"``
+    # (sequential-order accumulation, bit-identical to the interpreted
+    # ``_dot`` fold — hash-graded scores unchanged, verified bitwise at
+    # sf0.01/sf0.1 and vs the DuckDB oracle). Same candidate set by
+    # construction: a pair colliding in ≥1 table is scored exactly
+    # once in its first colliding table, which is the relational
+    # plan's distinct-pairs set.
+    sigv = _lsh_sigs_kernel(v, tables).select(
+        "vec_id",
+        "vec",
+        "norm2",
+        "sigs",
+        F.posexplode("sigs").alias("tbl", "bucket"),
     )
-    # The pair `distinct` is the dominant shuffle (collision
-    # multiplicity × bucket fanout rows). When ids fit 31 bits, pack the
-    # directed pair into ONE long for the dedup and unpack after — the
-    # minhash_lsh_candidates trick: half the shuffle bytes, a
-    # single-column hash dedup.
-    # ids_fit_31_bits=None probes eagerly (and pre-materializes the
-    # pin); passing True/False keeps plan construction fully lazy for
-    # composability (ADVICE r5, the minhash_lsh_candidates convention)
-    integral = embeddings.schema[id_col].dataType.simpleString() in (
-        "tinyint", "smallint", "int", "bigint"
+    id_type = embeddings.schema[id_col].dataType.simpleString()
+    return _topk(
+        _score_bucket_local(
+            sigv,
+            id_type,
+            block_rows=block_rows,
+            local_k=k,
+            kernel="fold" if form == "exact_kernel" else "einsum",
+        ),
+        k,
     )
-    if ids_fit_31_bits is None:
-        rng = v.agg(
-            F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
-        ).first()
-        ids_fit_31_bits = (
-            integral
-            and rng["lo"] is not None
-            and rng["lo"] >= 0
-            and rng["hi"] < (1 << 31)
-        )
-    cand = _distinct_directed_pairs(joined, integral and ids_fit_31_bits)
-    # only the fast tier reaches here (exact now shares the dist plan
-    # shape with fold arithmetic above)
-    return _topk(_score_pairs_fast(cand, v), k)
 
 
 def embedding_duplicates(
@@ -1727,18 +1563,21 @@ def ann_ivf_topk(
     round 6).
 
     ``rerank="auto"`` (the default) resolves via the occupancy
-    estimate ``n · n_probe · n / n_cells`` (:func:`_auto_rerank`);
+    estimate ``n · n_probe · n / n_cells`` (:func:`_resolve_rerank`);
     like the LSH twin's, the resolution is EAGER (one count) — pass an
     explicit tier for lazy plan construction.
     """
     from jaccard_mapreduce_spark.operators._cache import pin as _pin
 
     v = vectors(embeddings, id_col, vec_col)
-    _check_rerank(rerank, allowed=("auto", "exact", "fast", "dist"))
-    if rerank == "auto":
+
+    def estimate() -> float:
         n = embeddings.count()
-        est = n * n_probe * (n / float(max(n_cells, 1)))
-        rerank = _auto_rerank(est, auto_dist_pairs)
+        return n * n_probe * (n / float(max(n_cells, 1)))
+
+    form = _resolve_rerank(
+        rerank, ("auto", "exact", "dist"), estimate, auto_dist_pairs
+    )
     # training collects the tiny codebook to the driver (the MLlib loop
     # shape) — pass prebuilt ``cents`` (cell_id, cvec, cnorm2) to keep
     # plan construction fully lazy, e.g. a codebook read from a
@@ -1748,45 +1587,24 @@ def ann_ivf_topk(
             embeddings, n_cells, iters=iters, dim=dim,
             id_col=id_col, vec_col=vec_col,
         )
-    # ONE assignment pass serves both sides: the index relation is the
-    # crank==1 slice of the n_probe assignment (pinned — computing
-    # ivf_assign twice doubled the crossJoin + rank window, measured
-    # ~2.5 s of the 10.6 s at sf0.1)
-    if rerank in ("dist", "exact"):
-        # cell-local scoring: ONE applyInPandas per cell over the
-        # PINNED assignment relation; no dedup needed since the index
-        # side is single-cell. Optimization round 12: the exact tier
-        # shares this plan with ``kernel="fold"`` (hash-exact
-        # sequential-order arithmetic — see ann_lsh_topk), removing
-        # the pinned relational cell self-join and its ~2M interpreted
-        # pair-folds. The pin matters here too: the kernel adapter
-        # reads the assignment twice (query side + crank==1 index
-        # side), and unpinned each branch would recompute the
-        # crossJoin + rank window (the ~2.5 s double-compute the
-        # relational exact path already pinned away).
-        id_type = embeddings.schema[id_col].dataType.simpleString()
-        return _topk(
-            _score_cell_local(
-                _pin(ivf_assign(v, cents, n_probe)),
-                id_type,
-                local_k=k,
-                kernel="fold" if rerank == "exact" else "einsum",
-            ),
-            k,
-        )
-    assigned = _pin(ivf_assign(v, cents, n_probe))
-    queries = assigned.alias("a")
-    index = assigned.where(F.col("crank") == 1).alias("b")
-    cond = (F.col("a.cell_id") == F.col("b.cell_id")) & (
-        F.col("a.vec_id") != F.col("b.vec_id")
+    # cell-local scoring: ONE applyInPandas per cell over the PINNED
+    # assignment relation; no dedup needed since the index side is
+    # single-cell. Optimization round 12: the exact tier shares this
+    # plan with ``kernel="fold"`` (hash-exact sequential-order
+    # arithmetic — see ann_lsh_topk). The pin matters: the kernel
+    # adapter reads the ONE n_probe assignment twice (query side +
+    # crank==1 index side), and unpinned each branch would recompute
+    # the assignment (measured ~2.5 s of the 10.6 s at sf0.1).
+    id_type = embeddings.schema[id_col].dataType.simpleString()
+    return _topk(
+        _score_cell_local(
+            _pin(ivf_assign(v, cents, n_probe)),
+            id_type,
+            local_k=k,
+            kernel="fold" if form == "exact_kernel" else "einsum",
+        ),
+        k,
     )
-    # only the fast tier reaches here: the cell join stays relational;
-    # only the skinny id pairs cross to the broadcast-matrix scorer
-    cand = queries.join(index, cond).select(
-        F.col("a.vec_id").alias("query_id"),
-        F.col("b.vec_id").alias("neighbor_id"),
-    )
-    return _topk(_score_pairs_fast(cand, v), k)
 
 
 def ann_sq8_topk(

@@ -32,6 +32,10 @@ def _rows(df):
     )
 
 
+def _plan(df):
+    return df._jdf.queryExecution().sparkPlan().toString()
+
+
 def test_exact_slice_gate_forms_identical(spark):
     """exact_slice_topk: the small-slice relational broadcast plan ==
     the bipartite fold kernel, bitwise (the gate is semantics-free)."""
@@ -67,6 +71,7 @@ def test_lsh_sigs_kernel_nan_matches_sql_semantics(spark):
             (2, [1.0, -2.0, nan, 0.5]),
             (3, [0.25, -1.5, 2.0, -0.75]),
             (4, [0.0, 0.0, 0.0, 0.0]),
+            (5, [1.0, None, -2.0, 0.5]),
         ],
         "vec_id bigint, embedding array<double>",
     )
@@ -84,6 +89,9 @@ def test_lsh_sigs_kernel_nan_matches_sql_semantics(spark):
     assert got_rows == want_rows
     # the NaN rows must actually exercise the fixed branch: all-'1'
     assert got_rows[1] == ["111", "111"]
+    # a NULL element nulls the SQL fold (ELSE '0'), though pandas sees
+    # it as NaN
+    assert got_rows[5] == ["000", "000"]
 
 
 def test_lsh_sigs_kernel_ragged_widths_degrade_per_row(spark):
@@ -190,10 +198,12 @@ def test_store_search_gate_forms_identical(spark, tmp_path, monkeypatch):
         spark, path, batch, k=5, rerank="exact"
     )
     rel_rows = _rows(relational)
+    assert "FlatMapGroupsInPandas" not in _plan(relational)
     monkeypatch.setattr(V, "LSH_EXACT_KERNEL_MIN_PAIRS", 0)
     kernel = V.search_lsh_index(
         spark, path, batch, k=5, rerank="exact"
     )
+    assert "FlatMapGroupsInPandas" in _plan(kernel)
     assert rel_rows == _rows(kernel)
 
 
@@ -209,10 +219,12 @@ def test_ivf_search_gate_forms_identical(spark, tmp_path, monkeypatch):
         spark, path, batch, k=5, rerank="exact"
     )
     rel_rows = _rows(relational)
+    assert "FlatMapGroupsInPandas" not in _plan(relational)
     monkeypatch.setattr(V, "IVF_EXACT_KERNEL_MIN_PAIRS", 0)
     kernel = V.search_ivf_index(
         spark, path, batch, k=5, rerank="exact"
     )
+    assert "FlatMapGroupsInPandas" in _plan(kernel)
     assert rel_rows == _rows(kernel)
 
 

@@ -263,7 +263,7 @@ def test_plan_only_construction_runs_no_jobs(spark, emb):
         # rerank='exact' skips the auto tier resolution's corpus count —
         # rerank='auto' is eager BY DESIGN (it measures before choosing
         # the tier), same as jaccard strategy='auto' below
-        ann_lsh_topk(emb, k=5, ids_fit_31_bits=True, rerank="exact")
+        ann_lsh_topk(emb, k=5, rerank="exact")
         # strategy='join' skips the auto gate's sketch probe — auto is
         # eager BY DESIGN (it measures before choosing the kernel)
         jaccard_formatted(docs, id_range=(0, 10_000), strategy="join")
@@ -271,14 +271,6 @@ def test_plan_only_construction_runs_no_jobs(spark, emb):
         sc.setJobGroup(None, None)
     ran = tracker.getJobIdsForGroup("plan-only-probe")
     assert not ran, f"plan construction ran jobs: {ran} (before={before})"
-
-
-def test_ann_lsh_topk_gated_probe_matches_probed(spark, emb):
-    from jaccard_mapreduce_spark.operators.similarity import ann_lsh_topk
-
-    probed = ann_lsh_topk(emb, k=5).collect()
-    gated = ann_lsh_topk(emb, k=5, ids_fit_31_bits=True).collect()
-    assert sorted(map(tuple, probed)) == sorted(map(tuple, gated))
 
 
 def test_jaccard_formatted_id_range_matches_probed(spark):

@@ -1,5 +1,5 @@
 """Round-7 additions: corpus-size-derived IVF sizing (ivf_params_for)
-and the vectorized ANN rerank fast path."""
+and the operators that landed alongside it."""
 
 from __future__ import annotations
 
@@ -79,7 +79,7 @@ def test_cells_monotone_in_n(n):
     assert c2 >= c1
 
 
-# --- vectorized rerank fast path: rank agreement with the exact fold ---
+# --- shared embedding fixture ---
 
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -95,54 +95,6 @@ def _ranks(df):
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in df.select("query_id", "neighbor_id", "rank").collect()
     )
-
-
-def _scores(df):
-    return {
-        (r["query_id"], r["neighbor_id"]): r["score"] for r in df.collect()
-    }
-
-
-def test_lsh_fast_rerank_matches_exact_ranks(spark, emb_small):
-    from jaccard_mapreduce_spark.operators.similarity import ann_lsh_topk
-
-    exact = ann_lsh_topk(emb_small, k=5)
-    fast = ann_lsh_topk(emb_small, k=5, rerank="fast")
-    assert _ranks(fast) == _ranks(exact)
-    # scores agree to float error (numpy pairwise vs sequential fold)
-    se, sf_ = _scores(exact), _scores(fast)
-    assert all(abs(se[p] - sf_[p]) < 1e-9 for p in se)
-
-
-def test_ivf_fast_rerank_matches_exact_ranks(spark, emb_small):
-    from jaccard_mapreduce_spark.operators.similarity import ann_ivf_topk
-
-    exact = ann_ivf_topk(emb_small, k=5, n_cells=4, n_probe=2)
-    fast = ann_ivf_topk(emb_small, k=5, n_cells=4, n_probe=2, rerank="fast")
-    assert _ranks(fast) == _ranks(exact)
-
-
-def test_index_searches_accept_fast_rerank(spark, emb_small, tmp_path):
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        build_ivf_index,
-        build_lsh_index,
-        search_ivf_index,
-        search_lsh_index,
-    )
-
-    ivf = str(tmp_path / "ivf")
-    build_ivf_index(emb_small, ivf, n_cells=4)
-    exact = search_ivf_index(spark, ivf, emb_small, k=5, n_probe=2)
-    fast = search_ivf_index(
-        spark, ivf, emb_small, k=5, n_probe=2, rerank="fast"
-    )
-    assert _ranks(fast) == _ranks(exact)
-
-    lsh = str(tmp_path / "lsh")
-    build_lsh_index(emb_small, lsh)
-    exact = search_lsh_index(spark, lsh, emb_small, k=5)
-    fast = search_lsh_index(spark, lsh, emb_small, k=5, rerank="fast")
-    assert _ranks(fast) == _ranks(exact)
 
 
 def test_replicate_embeddings_shape_and_determinism(spark, emb_small):
@@ -613,49 +565,34 @@ def test_boilerplate_scrub_fully_scrubbed_doc_yields_empty_text(spark):
         assert got[vid]["scrubbed_text"] == ""
 
 
-def test_unknown_rerank_kind_refused(spark, emb_small):
-    from jaccard_mapreduce_spark.operators.similarity import ann_lsh_topk
-
-    with pytest.raises(ValueError, match="rerank"):
-        ann_lsh_topk(emb_small, k=5, rerank="blazing")
-
-
-def test_fast_rerank_guard_refuses_oversized_index(spark, emb_small):
+def test_unknown_rerank_kind_refused(spark, emb_small, tmp_path):
+    """Unknown tiers, and the retired broadcast-matrix ``fast`` tier,
+    are refused by all four ANN entry points."""
     from jaccard_mapreduce_spark.operators.similarity import (
-        _score_pairs_fast,
-        vectors,
+        ann_ivf_topk,
+        ann_lsh_topk,
+    )
+    from jaccard_mapreduce_spark.sources.vector_index import (
+        build_ivf_index,
+        build_lsh_index,
+        search_ivf_index,
+        search_lsh_index,
     )
 
-    v = vectors(emb_small)
-    cand = spark.createDataFrame(
-        [(0, 1)], "query_id long, neighbor_id long"
+    ivf = str(tmp_path / "ivf")
+    build_ivf_index(emb_small, ivf, n_cells=4)
+    lsh = str(tmp_path / "lsh")
+    build_lsh_index(emb_small, lsh)
+    searches = (
+        lambda r: ann_lsh_topk(emb_small, k=5, rerank=r),
+        lambda r: ann_ivf_topk(emb_small, k=5, n_cells=4, rerank=r),
+        lambda r: search_ivf_index(spark, ivf, emb_small, k=5, rerank=r),
+        lambda r: search_lsh_index(spark, lsh, emb_small, k=5, rerank=r),
     )
-    with pytest.raises(ValueError, match="max_index_rows"):
-        _score_pairs_fast(cand, v, max_index_rows=3)
-
-
-def test_fast_rerank_zero_vector_scores_zero(spark):
-    """The broadcast-matrix kernel must reproduce the _cosine zero-norm
-    guard: pairs touching a zero vector score 0.0, not NaN."""
-    from jaccard_mapreduce_spark.operators.similarity import (
-        _score_pairs_fast,
-        vectors,
-    )
-
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    v = vectors(emb)
-    cand = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3)], "query_id long, neighbor_id long"
-    )
-    got = {
-        (r["query_id"], r["neighbor_id"]): r["score"]
-        for r in _score_pairs_fast(cand, v).collect()
-    }
-    assert got[(1, 2)] == 0.0 and got[(2, 3)] == 0.0
-    assert abs(got[(1, 3)] - 1 / 2**0.5) < 1e-12
+    for search in searches:
+        for rerank in ("blazing", "fast"):
+            with pytest.raises(ValueError, match="rerank"):
+                search(rerank)
 
 
 # --- persisted MinHash signature store: incremental dedup lifecycle ---

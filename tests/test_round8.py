@@ -1,5 +1,5 @@
-"""Round-8 additions: fast-rerank id-mismatch guard, compaction
-marker ordering, and the Z-order demo's build-once gate."""
+"""Round-8 additions: compaction marker ordering, the Z-order demo's
+build-once gate, and the distributed rerank over the stored indexes."""
 
 from __future__ import annotations
 
@@ -9,29 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE, SF_SMALL
-
-
-def test_fast_rerank_missing_id_raises_not_corrupts(spark):
-    """ADVICE r7: the dense-LUT resolver filled absences with -1, and a
-    candidate id absent from the vector relation would silently gather
-    the LAST matrix row (a wrong score) while the dict fallback raised.
-    Both paths must now fail loudly."""
-    from pyspark.errors.exceptions.captured import PythonException
-
-    from jaccard_mapreduce_spark.operators.similarity import (
-        _score_pairs_fast,
-        vectors,
-    )
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(8)], "vec_id long, embedding array<double>"
-    )
-    v = vectors(emb)
-    cand = spark.createDataFrame(
-        [(0, 5), (1, 99)], "query_id long, neighbor_id long"
-    )
-    with pytest.raises(PythonException, match="absent"):
-        _score_pairs_fast(cand, v).collect()
 
 
 def test_compact_minhash_stamps_banding_before_swap(spark, tmp_path):
@@ -337,44 +314,51 @@ def test_stored_index_dist_refuses_mixed_id_types(spark, tmp_path):
         search_lsh_index(spark, base, batch, rerank="dist")
 
 
-def test_fast_rerank_sparse_ids_resolve_vectorized_and_stay_correct(spark):
-    """Sparse integer ids (the 10x probe's stride-1M replica ids) miss
-    the dense-LUT range and used to fall back to the per-element pandas
-    dict map; the hash-table get_indexer resolver must return the same
-    scores and fail the same way on an absent id."""
-    from pyspark.errors.exceptions.captured import PythonException
+@pytest.mark.parametrize(
+    "family, rerank",
+    [
+        ("lsh", "exact"),
+        ("lsh", "auto"),
+        ("ivf", "exact"),
+        ("ivf", "auto"),
+        ("ivf", "sq8"),
+    ],
+)
+def test_stored_index_mixed_id_types_search_relationally(
+    spark, tmp_path, monkeypatch, family, rerank
+):
+    """A string-id store probed by a bigint-id batch takes the
+    relational plan, whose self-pair compare runs on canonical string
+    forms (a plain ``!=`` casts the string ids to bigint and throws).
+    ``auto`` must resolve there even when its estimate would pick the
+    dist tier, which refuses mixed id types."""
+    import jaccard_mapreduce_spark.sources.vector_index as V
 
-    from jaccard_mapreduce_spark.operators.similarity import (
-        _score_pairs_fast,
-        vectors,
-    )
-
-    ids = [0, 1_000_000, 3_000_000, 7_000_000, 9_000_001]
+    monkeypatch.setattr(V, "AUTO_DIST_PAIRS", 0)
+    vecs = {f"d{i}": [float(i % 7), 1.0, float(i % 3)] for i in range(32)}
     emb = spark.createDataFrame(
-        [(i, [float((i % 97) + 1), 2.0]) for i in ids],
-        "vec_id long, embedding array<double>",
+        list(vecs.items()), "vec_id string, embedding array<double>"
     )
-    v = vectors(emb)
-    cand = spark.createDataFrame(
-        [(a, b) for a in ids for b in ids if a != b],
-        "query_id long, neighbor_id long",
+    base = str(tmp_path / family)
+    batch = spark.createDataFrame(
+        [(1, [1.0, 1.0, 1.0])], "vec_id long, embedding array<double>"
     )
-    got = {
-        (r.query_id, r.neighbor_id): r.score
-        for r in _score_pairs_fast(cand, v).collect()
-    }
-    import math
-
-    vec = {i: ((i % 97) + 1.0, 2.0) for i in ids}
-    for (a, b), s in got.items():
-        va, vb = vec[a], vec[b]
-        want = (va[0] * vb[0] + va[1] * vb[1]) / (
-            math.hypot(*va) * math.hypot(*vb)
+    if family == "lsh":
+        V.build_lsh_index(emb, base, dim=3)
+        got = V.search_lsh_index(spark, base, batch, k=5, rerank=rerank)
+    else:
+        V.build_ivf_index(emb, base, n_cells=4, dim=3)
+        got = V.search_ivf_index(
+            spark, base, batch, k=5, n_probe=2, rerank=rerank
         )
-        assert abs(s - want) < 1e-12
-    assert len(got) == len(ids) * (len(ids) - 1)
-    bad = spark.createDataFrame(
-        [(0, 42)], "query_id long, neighbor_id long"
-    )
-    with pytest.raises(PythonException, match="absent"):
-        _score_pairs_fast(bad, v).collect()
+    rows = got.collect()
+    assert rows
+    assert {r["query_id"] for r in rows} == {1}
+    assert sorted(r["rank"] for r in rows) == list(range(1, len(rows) + 1))
+    if rerank == "sq8":
+        return
+    norm = 3**0.5
+    for r in rows:
+        v = vecs[r["neighbor_id"]]
+        want = sum(v) / (norm * sum(x * x for x in v) ** 0.5)
+        assert abs(r["score"] - want) < 1e-12
