@@ -35,8 +35,11 @@ from jaccard_mapreduce_spark.functions.text import (
     word_ngrams,
 )
 from jaccard_mapreduce_spark.operators.jaccard import (
+    _integral_id,
+    _verify_sets,
     doc_tokens,
     jaccard_from_tokens,
+    jaccard_similarity,
     jaccard_threshold,
 )
 
@@ -65,15 +68,6 @@ def _gated_broadcast(df: DataFrame, n_rows_estimate: int, max_rows: int) -> tupl
     if n_rows_estimate <= max_rows:
         return F.broadcast(df), True
     return df, False
-
-
-def _integral_id(df: DataFrame, col: str) -> bool:
-    from pyspark.sql import types as T
-
-    return isinstance(
-        df.schema[col].dataType,
-        (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-    )
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -355,12 +349,8 @@ def minhash_lsh_dedup(
         documents, k, bands, seed, id_col, text_col,
         broadcast_max_docs, max_bucket_size,
     )
-    union = F.col("size_a") + F.col("size_b") - F.col("intersection")
     return (
-        scored.withColumn(
-            "similarity",
-            F.when(union > 0, F.col("intersection") / union).otherwise(F.lit(0.0)),
-        )
+        scored.withColumn("similarity", jaccard_similarity())
         .where(F.col("similarity") >= threshold)
         .select("doc_a", "doc_b", "similarity")
     )
@@ -383,47 +373,21 @@ def _lsh_scored_pairs(
     projection).
 
     The verify pass touches ONLY candidate pairs: each doc's token set
-    is collected once (a set is small — it's a document, not a posting
-    list) and candidates are scored with ``array_intersect`` — per-pair
-    O(|set|) work, never the full Σ C(df,2) pair-vote matrix of the
-    all-pairs pipeline.
+    is built once (a set is small — it's a document, not a posting
+    list) and candidates are scored per pair, never through the full
+    Σ C(df,2) pair-vote matrix of the all-pairs pipeline. The probe,
+    the set representation (bitmask or token array) and its
+    intersection come from the verify gate, ``jaccard._verify_sets``.
 
     Below ``broadcast_max_docs`` the per-doc relations (buckets, token
     sets) broadcast — the candidate relation never shuffles; above it
     they join shuffled on their keys, the 10^9-doc plan. See
     ``minhash_lsh_candidates`` for ``max_bucket_size``.
     """
-    from jaccard_mapreduce_spark.operators.jaccard import (
-        _BITMASK_MAX_VOCAB,
-        mask_intersection,
-        token_masks,
-    )
-
-    # pinned: read by the signature pipeline, the vocab probe, and the
-    # token-set/bitmask build — one tokenize pass instead of four
+    # pinned: read by the signature pipeline, the verify gate's probe,
+    # and the token-set/bitmask build — one tokenize pass instead of four
     tokens = _pin(doc_tokens(documents, id_col, text_col))
-    # ONE probe job gates every broadcast and decides the packed-pair
-    # and bitmask fast paths — it also materializes the tokens pin as a
-    # side effect (previously three sequential jobs: a documents scan
-    # for count/min/max, the pin's first use, and a separate HLL pass).
-    # Broadcast gates take the HLL doc count inflated 1.3x (~6 sigma at
-    # rsd=0.05 — an undercount can't sneak past a gate); the id range
-    # for pair packing is EXACT min/max over the docs that can ever
-    # appear in a pair (pairs arise only from bucket rows, i.e. docs
-    # with tokens).
-    probe = tokens.agg(
-        F.approx_count_distinct("doc_id", rsd=0.05).alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.approx_count_distinct("token", rsd=0.05).alias("v"),
-    ).first()
-    n_docs = int(probe["n"] * 1.3)
-    ids_fit = (
-        _integral_id(documents, id_col)
-        and probe["lo"] is not None
-        and probe["lo"] >= 0
-        and probe["hi"] < (1 << 31)
-    )
+    n_docs, ids_fit, sets, intersection = _verify_sets(tokens)
     cands = minhash_lsh_candidates(
         tokens, k, bands, seed,
         n_docs=n_docs,
@@ -431,36 +395,6 @@ def _lsh_scored_pairs(
         max_bucket_size=max_bucket_size,
         ids_fit_31_bits=ids_fit,
     )
-
-    # Mask-path decision from the sketch alone when it is decisive
-    # (±1.3x ≈ 6 sigma at rsd=0.05): clearly small vocab -> bitmask
-    # verify sized at the INFLATED estimate (an upper bound is fine —
-    # masks carry a few zero words; token_masks raises loudly if the
-    # estimate somehow still under-covered, so wrong results are
-    # impossible); clearly large -> collect_set verify. Only the
-    # ambiguous band around the cap pays an exact distinct-count job.
-    approx_vocab = probe["v"]
-    if approx_vocab * 1.3 <= _BITMASK_MAX_VOCAB:
-        vocab_size = int(approx_vocab * 1.3)
-    elif approx_vocab > _BITMASK_MAX_VOCAB * 1.3:
-        vocab_size = _BITMASK_MAX_VOCAB + 1
-    else:
-        vocab_size = tokens.select("token").distinct().count()
-    if vocab_size <= _BITMASK_MAX_VOCAB:
-        # small-vocab verify: popcount(AND) on bitmasks — pure codegen,
-        # ~10x faster than string-array intersection per candidate
-        n_words = (vocab_size + 63) // 64
-        sets = token_masks(tokens, max(vocab_size, 1))
-        inter = mask_intersection(
-            F.col("sa.mask"), F.col("sb.mask"), n_words
-        )
-    else:
-        sets = tokens.groupBy("doc_id").agg(
-            F.collect_set("token").alias("mask"), F.count("*").alias("size")
-        )
-        inter = F.size(
-            F.array_intersect(F.col("sa.mask"), F.col("sb.mask"))
-        ).cast("long")
     # one row per document — below the gate, broadcast both probe sides
     # so the (possibly huge) candidate relation never shuffles; above it,
     # shuffle equi-joins on the pair keys (the candidate relation is
@@ -475,7 +409,7 @@ def _lsh_scored_pairs(
         .select(
             "doc_a",
             "doc_b",
-            inter.alias("intersection"),
+            intersection("sa", "sb").alias("intersection"),
             F.col("sa.size").alias("size_a"),
             F.col("sb.size").alias("size_b"),
         )
@@ -592,66 +526,26 @@ def minhash_error_audit(
     oracle-checkable — unlike HLL/quantile sketches whose estimates are
     implementation-defined (see ``events_approx_check`` for that tier).
 
-    Scale shape: exactly the `minhash_lsh_dedup` verify plan with the
+    Scale shape: the `minhash_lsh_dedup` verify plan with the
     signature columns riding along — candidates come from the banded
-    bucket join (never all pairs); the exact intersection uses the
-    popcount-AND bitmask whenever the vocabulary probe says it fits
-    (`array_intersect` on raw token sets costs ~30x more at this
-    corpus's candidate density: measured 117 s vs ~4 s at sf0.1); the
+    bucket join (never all pairs); the probe, the set representation and
+    the exact intersection come from the same verify gate,
+    ``jaccard._verify_sets`` (its popcount-AND bitmask beats
+    `array_intersect` on raw token sets ~30x at this corpus's candidate
+    density: measured 117 s vs ~4 s at sf0.1); the
     per-doc relation broadcasts below the gate so the candidate
     relation never shuffles, with shuffled doc-keyed equi-joins as the
     10^9-doc fallback. At 100 TB this audit runs on a sampled corpus
     slice; nothing in the plan requires the sample.
     """
-    from jaccard_mapreduce_spark.operators.jaccard import (
-        _BITMASK_MAX_VOCAB,
-        mask_intersection,
-        token_masks,
-    )
-
     tokens = _pin(doc_tokens(documents, id_col, text_col))
-    # ONE probe job (the minhash_lsh_dedup pattern): HLL doc/vocab
-    # estimates for the gates, exact id range for pair packing
-    probe = tokens.agg(
-        F.approx_count_distinct("doc_id", rsd=0.05).alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.approx_count_distinct("token", rsd=0.05).alias("v"),
-    ).first()
-    n_docs = int(probe["n"] * 1.3)
-    ids_fit = (
-        _integral_id(documents, id_col)
-        and probe["lo"] is not None
-        and probe["lo"] >= 0
-        and probe["hi"] < (1 << 31)
-    )
+    n_docs, ids_fit, sets, intersection = _verify_sets(tokens)
     cands = minhash_lsh_candidates(
         tokens, k, bands, seed,
         n_docs=n_docs,
         broadcast_max_docs=broadcast_max_docs,
         ids_fit_31_bits=ids_fit,
     )
-    # same sketch-decided set representation as minhash_lsh_dedup
-    approx_vocab = probe["v"]
-    if approx_vocab * 1.3 <= _BITMASK_MAX_VOCAB:
-        vocab_size = int(approx_vocab * 1.3)
-    elif approx_vocab > _BITMASK_MAX_VOCAB * 1.3:
-        vocab_size = _BITMASK_MAX_VOCAB + 1
-    else:
-        vocab_size = tokens.select("token").distinct().count()
-    if vocab_size <= _BITMASK_MAX_VOCAB:
-        n_words = (vocab_size + 63) // 64
-        sets = token_masks(tokens, max(vocab_size, 1))
-        inter = mask_intersection(
-            F.col("da.mask"), F.col("db.mask"), n_words
-        )
-    else:
-        sets = tokens.groupBy("doc_id").agg(
-            F.collect_set("token").alias("mask"), F.count("*").alias("size")
-        )
-        inter = F.size(
-            F.array_intersect(F.col("da.mask"), F.col("db.mask"))
-        ).cast("long")
     # signature columns join the set relation once per doc (skinny,
     # doc-keyed) so the candidate join probes ONE per-doc relation
     docrel = sets.join(_minhash_wide(tokens, k, seed, "portable"), "doc_id")
@@ -670,16 +564,13 @@ def minhash_error_audit(
             "doc_a",
             "doc_b",
             est_matches.alias("est_matches"),
-            inter.alias("intersection"),
+            intersection("da", "db").alias("intersection"),
             F.col("da.size").alias("size_a"),
             F.col("db.size").alias("size_b"),
         )
     )
-    union = F.col("size_a") + F.col("size_b") - F.col("intersection")
     est_sim = F.col("est_matches").cast("double") / F.lit(float(k))
-    exact_sim = F.when(
-        union > 0, F.col("intersection") / union
-    ).otherwise(F.lit(0.0))
+    exact_sim = jaccard_similarity()
     return scored.select(
         "doc_a",
         "doc_b",

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from jaccard_mapreduce_spark.functions.text import tokenize_unique
 from jaccard_mapreduce_spark.operators._cache import pin as _pin
@@ -84,6 +85,14 @@ def pair_intersections(tokens: DataFrame) -> DataFrame:
     )
 
 
+def jaccard_similarity():
+    """The guarded Jaccard column over ``intersection``, ``size_a`` and
+    ``size_b``: ``|A∩B| / (|A|+|B|-|A∩B|)``, 0.0 when the union is empty
+    (Reducer:103-104). Every token-set scorer projects this one column."""
+    union = F.col("size_a") + F.col("size_b") - F.col("intersection")
+    return F.when(union > 0, F.col("intersection") / union).otherwise(F.lit(0.0))
+
+
 def _score(pairs: DataFrame, sizes: DataFrame) -> DataFrame:
     """Join |A|,|B| (broadcast — the DistributedCache analog, Reducer:67-88;
     inner join drops pairs with missing sizes, Reducer:101) and compute
@@ -101,11 +110,7 @@ def _score(pairs: DataFrame, sizes: DataFrame) -> DataFrame:
             F.col("sb.size").alias("size_b"),
         )
     )
-    union = F.col("size_a") + F.col("size_b") - F.col("intersection")
-    return joined.withColumn(
-        "similarity",
-        F.when(union > 0, F.col("intersection") / union).otherwise(F.lit(0.0)),
-    )
+    return joined.withColumn("similarity", jaccard_similarity())
 
 
 def jaccard_from_tokens(tokens: DataFrame) -> DataFrame:
@@ -114,10 +119,6 @@ def jaccard_from_tokens(tokens: DataFrame) -> DataFrame:
     or any other set representation."""
     tokens = _pin(tokens)  # three consumers: two join sides + sizes
     return _score(pair_intersections(tokens), doc_sizes(tokens))
-
-
-def _jaccard_pairs_join(tokens: DataFrame) -> DataFrame:
-    return jaccard_from_tokens(tokens)
 
 
 def token_masks(tokens: DataFrame, vocab_size: int) -> DataFrame:
@@ -185,15 +186,133 @@ def token_masks(tokens: DataFrame, vocab_size: int) -> DataFrame:
 
 
 def mask_intersection(mask_a, mask_b, n_words: int):
-    """popcount(a AND b) over equal-width mask arrays (codegen-friendly
-    plain column for single-word masks)."""
+    """popcount(a AND b) — the engine's one bitmask intersection.
+
+    ``mask_a``/``mask_b`` are equal-width ``array<long>`` masks of
+    ``n_words`` words. A one-word mask is passed as its word (``mask[0]``,
+    or a mask column already narrowed to it), so scoring stays a plain
+    ``bit_count(long & long)`` inside whole-stage codegen (higher-order
+    array functions are interpreted per element)."""
     if n_words == 1:
-        return F.bit_count(mask_a[0].bitwiseAND(mask_b[0])).cast("long")
+        return F.bit_count(mask_a.bitwiseAND(mask_b)).cast("long")
     return F.aggregate(
         F.zip_with(mask_a, mask_b, lambda x, y: F.bit_count(x.bitwiseAND(y))),
         F.lit(0),
         lambda acc, v: acc + v,
     ).cast("long")
+
+
+def _integral_id(df: DataFrame, col: str) -> bool:
+    return isinstance(
+        df.schema[col].dataType,
+        (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
+    )
+
+
+# The two gates below size masks by different rules on purpose. The
+# all-pairs bitmask path scores n² pairs, and one extra mask word moves it
+# off the single-word codegen path, so it pays an exact count and sizes
+# masks to the exact vocabulary. The verify path scores only candidate
+# pairs, so it sizes masks from the sketch (a few spare zero words cost
+# little) and pays an exact count only in the ambiguous band at the cap.
+
+
+def _allpairs_mask_vocab(tokens: DataFrame, force: bool = False) -> int | None:
+    """All-pairs gate, shared by :func:`jaccard_pairs` and the streaming
+    frontier: the exact vocabulary size to build bitmasks with, or
+    ``None`` for the token join. ``force`` skips the caps (the forced
+    ``strategy='bitmask'``).
+
+    Two tiers: an HLL probe (approx_count_distinct — partial-agg sketch,
+    no distinct shuffle of the token relation) decides whether the
+    bitmask path is even plausible; only then pay the exact count the
+    mask width needs — cheap at that point, because the distinct set is
+    small after map-side partial aggregation. At 100 TB the common
+    outcome is "vocab too big", which costs one narrow pass instead of a
+    full distinct shuffle."""
+    if not force:
+        probe = tokens.agg(
+            F.approx_count_distinct("token", rsd=0.05).alias("v"),
+            F.approx_count_distinct("doc_id", rsd=0.05).alias("d"),
+        ).first()
+        # 1.3x headroom over the 5% rsd so a small-vocab input never
+        # misses the exact recheck
+        if (
+            probe["v"] > _BITMASK_MAX_VOCAB * 1.3
+            or probe["d"] > _BITMASK_MAX_DOCS * 1.3
+        ):
+            return None
+    stats = tokens.agg(
+        F.countDistinct("token").alias("v"),
+        F.countDistinct("doc_id").alias("d"),
+    ).first()
+    if force or (
+        stats["v"] <= _BITMASK_MAX_VOCAB and stats["d"] <= _BITMASK_MAX_DOCS
+    ):
+        return max(int(stats["v"]), 1)
+    return None
+
+
+def _verify_sets(tokens: DataFrame):
+    """Verify gate, shared by the MinHash-LSH verify paths
+    (``dedup._lsh_scored_pairs``, ``dedup.minhash_error_audit``).
+
+    Returns ``(n_docs, ids_fit_31_bits, sets, intersection)``: the HLL
+    doc count inflated 1.3x (~6 sigma at rsd=0.05 — an undercount can't
+    sneak past a broadcast gate); whether every doc id fits 31 bits (the
+    candidate pair-packing test; the id range is EXACT over the docs
+    that can ever appear in a pair, i.e. docs with tokens); the per-doc
+    set relation ``(doc_id, size, mask)``; and ``intersection(a, b)``,
+    the matching ``|A∩B|`` column for two aliases of ``sets``.
+
+    ONE probe job decides all of it and materializes a pinned
+    ``tokens`` as a side effect. The set representation comes from the
+    sketch alone when it is decisive (±1.3x): clearly small vocab ->
+    bitmasks sized at the INFLATED estimate (an upper bound is fine;
+    ``token_masks`` raises loudly if it still under-covered, so wrong
+    results are impossible), scored by popcount(AND) — pure codegen,
+    ~10x faster than string-array intersection per candidate; clearly
+    large -> ``collect_set`` token arrays scored with ``array_intersect``.
+    Only the ambiguous band around the cap pays an exact distinct count.
+    """
+    probe = tokens.agg(
+        F.approx_count_distinct("doc_id", rsd=0.05).alias("n"),
+        F.min("doc_id").alias("lo"),
+        F.max("doc_id").alias("hi"),
+        F.approx_count_distinct("token", rsd=0.05).alias("v"),
+    ).first()
+    ids_fit = (
+        _integral_id(tokens, "doc_id")
+        and probe["lo"] is not None
+        and probe["lo"] >= 0
+        and probe["hi"] < (1 << 31)
+    )
+    approx_vocab = probe["v"]
+    if approx_vocab * 1.3 <= _BITMASK_MAX_VOCAB:
+        vocab_size = int(approx_vocab * 1.3)
+    elif approx_vocab > _BITMASK_MAX_VOCAB * 1.3:
+        vocab_size = _BITMASK_MAX_VOCAB + 1
+    else:
+        vocab_size = tokens.select("token").distinct().count()
+    if vocab_size <= _BITMASK_MAX_VOCAB:
+        n_words = (vocab_size + 63) // 64
+        sets = token_masks(tokens, max(vocab_size, 1))
+
+        def intersection(a: str, b: str):
+            ma, mb = F.col(f"{a}.mask"), F.col(f"{b}.mask")
+            if n_words == 1:
+                ma, mb = ma[0], mb[0]
+            return mask_intersection(ma, mb, n_words)
+    else:
+        sets = tokens.groupBy("doc_id").agg(
+            F.collect_set("token").alias("mask"), F.count("*").alias("size")
+        )
+
+        def intersection(a: str, b: str):
+            return F.size(
+                F.array_intersect(F.col(f"{a}.mask"), F.col(f"{b}.mask"))
+            ).cast("long")
+    return int(probe["n"] * 1.3), ids_fit, sets, intersection
 
 
 def _jaccard_pairs_bitmask(tokens: DataFrame, vocab_size: int) -> DataFrame:
@@ -206,35 +325,18 @@ def _jaccard_pairs_bitmask(tokens: DataFrame, vocab_size: int) -> DataFrame:
     n_words = (vocab_size + 63) // 64
     # pinned: masks feed the repartitioned probe AND the broadcast side
     masks = _pin(token_masks(tokens, vocab_size))
-
-    # spread the probe side to full parallelism: the mask relation is tiny
-    # (one row per doc) so AQE coalesces it, but the pair fanout is O(n²)
-    n_par = tokens.sparkSession.sparkContext.defaultParallelism
     if n_words == 1:
-        # single-word fast path: a plain long column keeps the O(n²) pair
-        # scoring inside whole-stage codegen (higher-order array functions
-        # are interpreted per element)
+        # narrowed to a plain long column: every one of the O(n²) pairs
+        # scores in whole-stage codegen
         masks = masks.select(
             "doc_id", "size", F.col("mask")[0].alias("mask")
         )
-        a = masks.repartition(n_par).alias("a")
-        b = F.broadcast(masks).alias("b")
-        inter = F.bit_count(
-            F.col("a.mask").bitwiseAND(F.col("b.mask"))
-        ).cast("long")
-    else:
-        a = masks.repartition(n_par).alias("a")
-        b = F.broadcast(masks).alias("b")
-        inter = F.aggregate(
-            F.zip_with(
-                F.col("a.mask"),
-                F.col("b.mask"),
-                lambda x, y: F.bit_count(x.bitwiseAND(y)),
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("long")
-    union = F.col("size_a") + F.col("size_b") - F.col("intersection")
+    # spread the probe side to full parallelism: the mask relation is tiny
+    # (one row per doc) so AQE coalesces it, but the pair fanout is O(n²)
+    n_par = tokens.sparkSession.sparkContext.defaultParallelism
+    a = masks.repartition(n_par).alias("a")
+    b = F.broadcast(masks).alias("b")
+    inter = mask_intersection(F.col("a.mask"), F.col("b.mask"), n_words)
     return (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
@@ -247,10 +349,7 @@ def _jaccard_pairs_bitmask(tokens: DataFrame, vocab_size: int) -> DataFrame:
         # co-occurring pairs only — reference pairs exist solely via
         # shared-word votes (Reducer:43-48)
         .where(F.col("intersection") >= 1)
-        .withColumn(
-            "similarity",
-            F.when(union > 0, F.col("intersection") / union).otherwise(F.lit(0.0)),
-        )
+        .withColumn("similarity", jaccard_similarity())
     )
 
 
@@ -266,44 +365,16 @@ def jaccard_pairs(
     ``strategy``: ``'join'`` | ``'bitmask'`` | ``'auto'`` (inspect vocab /
     doc counts and pick; the two are semantically identical — tested).
     """
+    if strategy not in ("join", "bitmask", "auto"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     # pinned: the token relation feeds both join sides + the size agg
     # (join strategy) or the strategy-gate stats + mask build (bitmask)
     tokens = _pin(doc_tokens(documents, id_col, text_col))
-    if strategy == "join":
-        return _jaccard_pairs_join(tokens)
-
-    if strategy in ("bitmask", "auto"):
-        # Two-tier gate: an HLL probe (approx_count_distinct — partial-agg
-        # sketch, no distinct shuffle of the token relation) decides
-        # whether the bitmask path is even plausible; only then pay the
-        # exact count the mask width needs — cheap at that point, because
-        # the distinct set is small after map-side partial aggregation.
-        # At 100 TB the common outcome is "vocab too big", which now costs
-        # one narrow pass instead of a full distinct shuffle.
-        if strategy == "auto":
-            probe = tokens.agg(
-                F.approx_count_distinct("token", rsd=0.05).alias("v"),
-                F.approx_count_distinct("doc_id", rsd=0.05).alias("d"),
-            ).first()
-            # 1.3x headroom over the 5% rsd so a small-vocab input never
-            # misses the exact recheck
-            if (
-                probe["v"] > _BITMASK_MAX_VOCAB * 1.3
-                or probe["d"] > _BITMASK_MAX_DOCS * 1.3
-            ):
-                return _jaccard_pairs_join(tokens)
-        stats = tokens.agg(
-            F.countDistinct("token").alias("v"),
-            F.countDistinct("doc_id").alias("d"),
-        ).first()
-        vocab_size, n_docs = stats["v"], stats["d"]
-        if strategy == "bitmask" or (
-            vocab_size <= _BITMASK_MAX_VOCAB and n_docs <= _BITMASK_MAX_DOCS
-        ):
-            return _jaccard_pairs_bitmask(tokens, max(int(vocab_size), 1))
-        return _jaccard_pairs_join(tokens)
-
-    raise ValueError(f"unknown strategy {strategy!r}")
+    if strategy != "join":
+        vocab_size = _allpairs_mask_vocab(tokens, force=strategy == "bitmask")
+        if vocab_size is not None:
+            return _jaccard_pairs_bitmask(tokens, vocab_size)
+    return jaccard_from_tokens(tokens)
 
 
 def jaccard_threshold(pairs: DataFrame, min_similarity: float) -> DataFrame:
@@ -408,8 +479,6 @@ def jaccard_formatted(
     if lo is None:  # empty corpus -> empty formatted relation, with the
         # pair columns typed like the input ids (the non-empty branch
         # inherits that type, so the schema must not depend on emptiness)
-        from pyspark.sql import types as T
-
         spark = documents.sparkSession
         idt = documents.schema[id_col].dataType
         return spark.createDataFrame(

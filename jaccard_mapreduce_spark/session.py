@@ -26,7 +26,9 @@ def get_spark(
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
 
-    Env overrides: ``SPARK_GRAFT_CPUS`` sets local parallelism.
+    Env overrides: ``SPARK_GRAFT_CPUS`` sets local parallelism (default:
+    every core, ``os.cpu_count()``); ``SPARK_GRAFT_DRIVER_MEM`` sets the
+    driver heap (default: a quarter of the host's physical RAM).
     """
     # executor Python workers must be able to import this package (UDF
     # closures are pickled by module reference)
@@ -37,7 +39,11 @@ def get_spark(
             repo_root + (os.pathsep + existing if existing else "")
         )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not driver_mem:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        driver_mem = f"{max(1024, ram_mb // 4)}m"
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         try:
@@ -66,9 +72,9 @@ def get_spark(
         # TIMESTAMP(NANOS) parquet (the events table) reads as raw int64;
         # sources.tables.load_events normalizes to a µs timestamp.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         # Local mode runs driver and executor in ONE JVM, so a long
-        # driver-side stall (a full-heap GC pause on the 48g heap, or
+        # driver-side stall (a full-heap GC pause on a large heap, or
         # host-level contention) starves the executor heartbeat too —
         # and the default 120 s timeout then KILLS the only executor,
         # collapsing the context mid-run (observed in a 53-minute bench:

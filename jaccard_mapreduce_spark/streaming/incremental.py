@@ -5,8 +5,8 @@ appended to a distributed token-state directory (parquet; a production
 deployment would use Delta/Iceberg for atomic appends), and scored
 against the full accumulated corpus — new-vs-all pairs only, never
 recomputing old-vs-old. This is the streaming analog of the reference's
-batch pipeline: the same ``jaccard_from_tokens`` machinery applied to the
-(new × all) frontier.
+batch pipeline: the batch kernel's gate, bitmask intersection and scoring
+(``operators/jaccard.py``) applied to the (new × all) frontier.
 """
 
 from __future__ import annotations
@@ -17,10 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jaccard_mapreduce_spark.operators.jaccard import (
-    _BITMASK_MAX_DOCS,
-    _BITMASK_MAX_VOCAB,
+    _allpairs_mask_vocab,
+    _score,
     doc_sizes,
     doc_tokens,
+    jaccard_similarity,
+    mask_intersection,
     token_masks,
 )
 
@@ -28,12 +30,11 @@ from jaccard_mapreduce_spark.operators.jaccard import (
 class IncrementalJaccard:
     """Accumulates token state and emits new-pair scores per micro-batch.
 
-    The per-batch scorer mirrors ``jaccard_pairs``' auto-strategy: a
-    sketch probe of the ACCUMULATED state picks the bitmask frontier
-    kernel (small global vocabulary — popcount(AND) over broadcast
-    masks, no token-level join at all) or the token-join frontier (the
-    general path). The gate constants are the batch kernel's own, so
-    the streaming scorer inherits every batch-side retune."""
+    The per-batch scorer calls ``jaccard_pairs``' all-pairs gate
+    (``jaccard._allpairs_mask_vocab``) on the ACCUMULATED state: it picks
+    the bitmask frontier kernel (small global vocabulary — popcount(AND)
+    over broadcast masks, no token-level join at all) or the token-join
+    frontier (the general path)."""
 
     def __init__(self, spark: SparkSession, state_dir: str, out_dir: str):
         self.spark = spark
@@ -42,27 +43,11 @@ class IncrementalJaccard:
 
     def _score_new(self, new_tokens: DataFrame, all_tokens: DataFrame) -> DataFrame:
         """Frontier scores — pairs touching at least one NEW doc —
-        strategy-gated exactly like the batch ``jaccard_pairs``."""
-        probe = all_tokens.agg(
-            F.approx_count_distinct("token", rsd=0.05).alias("v"),
-            F.approx_count_distinct("doc_id", rsd=0.05).alias("d"),
-        ).first()
-        if (
-            probe["v"] <= _BITMASK_MAX_VOCAB * 1.3
-            and probe["d"] <= _BITMASK_MAX_DOCS * 1.3
-        ):
-            stats = all_tokens.agg(
-                F.countDistinct("token").alias("v"),
-                F.countDistinct("doc_id").alias("d"),
-            ).first()
-            if (
-                stats["v"] <= _BITMASK_MAX_VOCAB
-                and stats["d"] <= _BITMASK_MAX_DOCS
-            ):
-                return self._score_new_bitmask(
-                    new_tokens, all_tokens, max(int(stats["v"]), 1)
-                )
-        return self._score_new_join(new_tokens, all_tokens)
+        strategy-gated by the batch ``jaccard_pairs`` gate."""
+        vocab_size = _allpairs_mask_vocab(all_tokens)
+        if vocab_size is None:
+            return self._score_new_join(new_tokens, all_tokens)
+        return self._score_new_bitmask(new_tokens, all_tokens, vocab_size)
 
     def _score_new_bitmask(
         self, new_tokens: DataFrame, all_tokens: DataFrame, vocab_size: int
@@ -96,28 +81,16 @@ class IncrementalJaccard:
             (F.col("a.doc_id") != F.col("b.doc_id"))
             & F.col("b.is_new").isNull()
         )
+        a_mask, b_mask = F.col("a.mask"), F.col("b.mask")
         if n_words == 1:
-            inter = F.bit_count(
-                F.col("a.mask")[0].bitwiseAND(F.col("b.mask")[0])
-            ).cast("long")
-        else:
-            inter = F.aggregate(
-                F.zip_with(
-                    F.col("a.mask"),
-                    F.col("b.mask"),
-                    lambda x, y: F.bit_count(x.bitwiseAND(y)),
-                ),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            ).cast("long")
+            a_mask, b_mask = a_mask[0], b_mask[0]
         a_first = F.col("a.doc_id") < F.col("b.doc_id")
-        union = F.col("size_a") + F.col("size_b") - F.col("intersection")
         return (
             a.join(b, emit_once)
             .select(
                 F.least("a.doc_id", "b.doc_id").alias("doc_a"),
                 F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-                inter.alias("intersection"),
+                mask_intersection(a_mask, b_mask, n_words).alias("intersection"),
                 F.when(a_first, F.col("a.size"))
                 .otherwise(F.col("b.size"))
                 .alias("size_a"),
@@ -127,12 +100,7 @@ class IncrementalJaccard:
             )
             # co-occurring pairs only (the batch kernel's contract)
             .where(F.col("intersection") >= 1)
-            .withColumn(
-                "similarity",
-                F.when(union > 0, F.col("intersection") / union).otherwise(
-                    F.lit(0.0)
-                ),
-            )
+            .withColumn("similarity", jaccard_similarity())
         )
 
     def _score_new_join(
@@ -194,24 +162,7 @@ class IncrementalJaccard:
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").alias("intersection"))
         )
-        sa = F.broadcast(sizes).alias("sa")
-        sb = F.broadcast(sizes).alias("sb")
-        union = F.col("size_a") + F.col("size_b") - F.col("intersection")
-        return (
-            cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-            .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-            .select(
-                "doc_a",
-                "doc_b",
-                "intersection",
-                F.col("sa.size").alias("size_a"),
-                F.col("sb.size").alias("size_b"),
-            )
-            .withColumn(
-                "similarity",
-                F.when(union > 0, F.col("intersection") / union).otherwise(F.lit(0.0)),
-            )
-        )
+        return _score(cand, sizes)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         new_tokens = doc_tokens(batch_df)

@@ -178,6 +178,39 @@ def test_lsh_dedup_big_ids_use_fallback(spark):
     assert got == {(base + 1, base + 2): 1.0}
 
 
+def test_set_verify_branch_matches_join_scores(spark):
+    """Above the bitmask cap (2,048 x 1.3 tokens) the MinHash verify gate
+    builds ``collect_set`` token arrays scored with ``array_intersect``;
+    both verify consumers must score exactly like the token join."""
+    from jaccard_mapreduce_spark.operators.jaccard import jaccard_pairs
+
+    # 200 docs x 20 private tokens = 4,000 distinct tokens, plus 10
+    # planted near-dups with one token of twenty replaced (J = 19/21)
+    rows = [
+        (i, " ".join(f"w{i}a{j}" for j in range(20))) for i in range(200)
+    ]
+    rows += [
+        (1000 + i, " ".join(f"w{i}a{j}" for j in range(19)) + f" x{i}")
+        for i in range(10)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    join = {
+        (r["doc_a"], r["doc_b"]): r["similarity"]
+        for r in jaccard_pairs(df, strategy="join").collect()
+    }
+    lsh = D.minhash_lsh_dedup(df, threshold=0.5)
+    plan = lsh._jdf.queryExecution().optimizedPlan().toString()
+    assert "array_intersect" in plan  # the set branch, not the bitmask
+    got = {(r["doc_a"], r["doc_b"]): r["similarity"] for r in lsh.collect()}
+    audit = {
+        (r["doc_a"], r["doc_b"]): r["exact_sim"]
+        for r in D.minhash_error_audit(df).collect()
+    }
+    assert got
+    assert got == {p: join[p] for p in got}
+    assert audit == {p: join.get(p, 0.0) for p in audit}
+
+
 def test_dedup_representatives_picks_heaviest_then_lowest_id(spark):
     from jaccard_mapreduce_spark.operators.dedup import dedup_representatives
 

@@ -10,11 +10,19 @@ HALF_UP behavior.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from jaccard_mapreduce_spark.operators.jaccard import run_reference_pipeline
 
 from tests.conftest import REF
+
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REF),
+    reason=f"reference datasets and golden outputs not found at {REF}; "
+    "they cannot be rebuilt from this repository",
+)
 
 
 def _golden(size: str) -> list[str]:

@@ -196,7 +196,7 @@ def test_bipartite_one_sided_hot_bucket_has_no_phantom_groups(spark):
 
 
 def test_incremental_join_frontier_emit_once_multi_batch(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, corpus_txt
 ):
     """The round-9 join frontier replaced the (pair, token) DISTINCT
     with an emit-once join condition (both-new pairs via the a < b
@@ -204,14 +204,19 @@ def test_incremental_join_frontier_emit_once_multi_batch(
     shrinking the bitmask gate, drive 3 micro-batches, and require
     byte-equality with the batch pipeline — any double- or missed
     emission changes an intersection count."""
-    from jaccard_mapreduce_spark.operators.jaccard import jaccard_pairs
+    from jaccard_mapreduce_spark.operators import jaccard as jaccard_mod
+    from jaccard_mapreduce_spark.operators.jaccard import (
+        doc_tokens,
+        jaccard_pairs,
+    )
     from jaccard_mapreduce_spark.sources.corpus import read_corpus_text
     from jaccard_mapreduce_spark.streaming import incremental as inc_mod
     from pyspark.sql import functions as F
 
-    monkeypatch.setattr(inc_mod, "_BITMASK_MAX_VOCAB", 0)
+    # the cap is read by the all-pairs gate in operators/jaccard.py
+    monkeypatch.setattr(jaccard_mod, "_BITMASK_MAX_VOCAB", 0)
 
-    corpus = read_corpus_text(spark, "/root/reference/datasets/small.txt")
+    corpus = read_corpus_text(spark, corpus_txt)
     in_dir = str(tmp_path / "in")
     parts = corpus.withColumn(
         "part", (F.crc32(F.col("doc_id").cast("binary")) % 3).cast("int")
@@ -228,6 +233,11 @@ def test_incremental_join_frontier_emit_once_multi_batch(
     inc = inc_mod.IncrementalJaccard(
         spark, str(tmp_path / "state"), str(tmp_path / "scores")
     )
+    # the patched gate must route to the join frontier: no popcount
+    tokens = doc_tokens(corpus)
+    frontier = inc._score_new(tokens, tokens)
+    plan = frontier._jdf.queryExecution().optimizedPlan().toString()
+    assert "bit_count" not in plan
     q = inc.attach(stream)
     q.processAllAvailable()
     q.stop()

@@ -12,11 +12,9 @@ from jaccard_mapreduce_spark.sources.corpus import (
     write_documents_parquet,
 )
 
-from tests.conftest import REF
 
-
-def test_csv_and_json_sources_match_text(spark, tmp_path):
-    corpus = read_corpus_text(spark, f"{REF}/datasets/small.txt")
+def test_csv_and_json_sources_match_text(spark, tmp_path, corpus_txt):
+    corpus = read_corpus_text(spark, corpus_txt)
     csv_path = str(tmp_path / "c.csv")
     json_path = str(tmp_path / "c.json")
     corpus.write.option("header", "true").csv(csv_path)

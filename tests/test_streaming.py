@@ -20,7 +20,7 @@ from jaccard_mapreduce_spark.streaming import (
     windowed_event_counts,
 )
 
-from tests.conftest import REF, SF_SMALL
+from tests.conftest import SF_SMALL
 
 
 def _run(stream_df, mode: str, spark):
@@ -75,8 +75,8 @@ def test_stateful_user_counts_accumulate(spark):
     assert final == want
 
 
-def test_incremental_jaccard_matches_batch(spark, tmp_path):
-    corpus = read_corpus_text(spark, f"{REF}/datasets/small.txt")
+def test_incremental_jaccard_matches_batch(spark, tmp_path, corpus_txt):
+    corpus = read_corpus_text(spark, corpus_txt)
     # split the corpus into 3 files so maxFilesPerTrigger=1 gives 3 batches
     in_dir = str(tmp_path / "in")
     parts = corpus.withColumn(
