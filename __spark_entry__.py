@@ -294,28 +294,6 @@ def _q_lsh_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_index_search_demo(spark, sf_dir)
 
 
-def _q_ivf_index_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        ivf_index_dist_demo,
-    )
-
-    # rank projection: the dist kernel's scores differ from the fold
-    # in the last ulp (the lsh_dist_ranks precedent)
-    return ivf_index_dist_demo(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-    )
-
-
-def _q_lsh_index_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        lsh_index_dist_demo,
-    )
-
-    return lsh_index_dist_demo(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-    )
-
-
 def _q_lsh_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jaccard_mapreduce_spark.sources.vector_index import (
         lsh_index_upsert_demo,
@@ -976,58 +954,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # twice-green exact-kernel entries (ann_cosine_topk,
         # ann_fast_ranks, quantize_embeddings) rotate to the tail. ---
         "ann_lsh_topk": lambda s, d: S.ann_lsh_topk(_emb(s, d), k=10),
-        # new round 8: the fully DISTRIBUTED vectorized rerank — pairs
-        # are scored where they collide (bucket-local applyInPandas):
-        # no broadcast matrix, no collect, at any corpus size.
-        # Rank-graded (scores dropped from the projection — numpy
-        # pairwise summation differs from the sequential fold in the
-        # last ulp, the ann_fast_ranks precedent)
-        "lsh_dist_ranks": lambda s, d: S.ann_lsh_topk(
-            _emb(s, d), k=10, rerank="dist"
-        ).select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        ),
-        # new round 8: the IVF twin — cell-local scoring of (probing
-        # queries × resident vectors), no pair dedup needed (index side
-        # is single-cell)
-        "ivf_dist_ranks": lambda s, d: S.ann_ivf_topk(
-            _emb(s, d), k=10, rerank="dist"
-        ).select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        ),
-        # new round 9: rerank="auto" graded on BOTH sides of the
-        # crossover. The default entries above (ann_lsh_topk,
-        # ann_ivf_topk, the index searches) now resolve auto -> exact
-        # at graded scale and hash-match the exact oracles; these two
-        # lower auto_dist_pairs so the occupancy estimate routes to the
-        # DIST kernel (sf0.01: LSH est 250k, IVF est 125k pairs > 1000)
-        # and the ranking must still match the exact oracle — proving
-        # auto == the explicitly-chosen tier on the dist side too
-        # (lsh_dist_ranks / ivf_dist_ranks pin the explicit-dist side
-        # against the same oracles).
-        "lsh_auto_dist": lambda s, d: S.ann_lsh_topk(
-            _emb(s, d), k=10, auto_dist_pairs=1000
-        ).select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        ),
-        "ivf_auto_dist": lambda s, d: S.ann_ivf_topk(
-            _emb(s, d), k=10, auto_dist_pairs=1000
-        ).select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        ),
-        # new round 9: the dist tier's skew fixture — ONE plane per
-        # table gives two dominant buckets (~n/2 members each, the
-        # stop-word analog for vectors), and block_rows=64 forces the
-        # hot-bucket block-grid decomposition at graded scale (sf0.01:
-        # ~250-row buckets decompose into 4 hash blocks / 10 block-pair
-        # groups per bucket — tests/test_round9.py asserts the
-        # threshold crossing). Rank parity through the decomposed path
-        # must still match the exact oracle at the same (1, 2) params.
+        # new round 9: the kernel's skew fixture — ONE plane per table
+        # gives two dominant buckets (~n/2 members each, the stop-word
+        # analog for vectors), and block_rows=64 forces the hot-bucket
+        # block-grid decomposition at graded scale (sf0.01: ~250-row
+        # buckets decompose into 4 hash blocks / 10 block-pair groups
+        # per bucket — tests/test_round9.py asserts the threshold
+        # crossing). The decomposed path must hash-match the exact
+        # oracle at the same (1, 2) params, scores included.
         "lsh_dist_skew": lambda s, d: S.ann_lsh_topk(
-            _emb(s, d), k=10, n_planes=1, n_tables=2,
-            rerank="dist", block_rows=64,
-        ).select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
+            _emb(s, d), k=10, n_planes=1, n_tables=2, block_rows=64
         ),
         "ann_ivf_topk": lambda s, d: S.ann_ivf_topk(_emb(s, d), k=10),
         # new round 7: the rerank run entirely in int8-quantized space
@@ -1111,12 +1047,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # hash-match the one-plan ann_sq8_topk over the same codebook,
         # proving the quantized layout equals on-the-fly quantization
         "ivf_index_sq8": _q_ivf_index_sq8,
-        # new round 8: the distributed rerank tier SERVED from the
-        # stored layouts — rerank="dist" on both index searches
-        # (role-tagged cell kernel / bipartite bucket kernel); ranks
-        # must match the exact tier's over the same stored index
-        "ivf_index_dist": _q_ivf_index_dist,
-        "lsh_index_dist": _q_lsh_index_dist,
         # new round 9: the IVF batch-serving shape — the missing
         # symmetric twin of lsh_index_serve (a deterministic 10% batch
         # against the full stored index; oracle = the one-plan SQL with
@@ -1897,20 +1827,6 @@ def oracle_sql() -> dict[str, str]:
         "ivf_index_search": oracles.ann_ivf_topk_sql(
             10, S.DEFAULT_IVF_CELLS, S.DEFAULT_IVF_PROBE
         ),
-        # the distributed rerank over the STORED layouts must reproduce
-        # the exact tier's ranking (rank projection — last-ulp scores)
-        "ivf_index_dist": (
-            "SELECT query_id, neighbor_id, rank FROM ("
-            + oracles.ann_ivf_topk_sql(
-                10, S.DEFAULT_IVF_CELLS, S.DEFAULT_IVF_PROBE
-            )
-            + ")"
-        ),
-        "lsh_index_dist": (
-            "SELECT query_id, neighbor_id, rank FROM ("
-            + oracles.ann_lsh_topk_sql(10, S.lsh_tables(64))
-            + ")"
-        ),
         # build-then-upsert must equal build-over-union with the
         # base-trained codebook held fixed
         "lsh_index_search": oracles.ann_lsh_topk_sql(10, S.lsh_tables(64)),
@@ -2166,43 +2082,9 @@ def oracle_sql() -> dict[str, str]:
         "semantic_dedup": oracles.semantic_dedup_sql(),
         "ann_fast_ranks": oracles.ann_fast_ranks_sql(10),
         "ann_lsh_topk": oracles.ann_lsh_topk_sql(10, S.lsh_tables(64)),
-        # the distributed kernel must reproduce the EXACT tier's
-        # ranking — the oracle is the exact-kernel LSH SQL with score
-        # projected away
-        "lsh_dist_ranks": (
-            "SELECT query_id, neighbor_id, rank FROM ("
-            + oracles.ann_lsh_topk_sql(10, S.lsh_tables(64))
-            + ")"
-        ),
-        "ivf_dist_ranks": (
-            "SELECT query_id, neighbor_id, rank FROM ("
-            + oracles.ann_ivf_topk_sql(
-                10, S.DEFAULT_IVF_CELLS, S.DEFAULT_IVF_PROBE
-            )
-            + ")"
-        ),
-        # auto routed to the dist kernel (lowered threshold) must
-        # reproduce the exact tier's ranking — same oracles as the
-        # explicit-dist entries above
-        "lsh_auto_dist": (
-            "SELECT query_id, neighbor_id, rank FROM ("
-            + oracles.ann_lsh_topk_sql(10, S.lsh_tables(64))
-            + ")"
-        ),
-        "ivf_auto_dist": (
-            "SELECT query_id, neighbor_id, rank FROM ("
-            + oracles.ann_ivf_topk_sql(
-                10, S.DEFAULT_IVF_CELLS, S.DEFAULT_IVF_PROBE
-            )
-            + ")"
-        ),
-        # the skew fixture's decomposed path vs the exact ranking at
-        # the same deliberately-degenerate (1 plane, 2 tables) params
-        "lsh_dist_skew": (
-            "SELECT query_id, neighbor_id, rank FROM ("
-            + oracles.ann_lsh_topk_sql(10, S.lsh_tables(64, 1, 2))
-            + ")"
-        ),
+        # the skew fixture's decomposed path vs the exact oracle at the
+        # same deliberately-degenerate (1 plane, 2 tables) params
+        "lsh_dist_skew": oracles.ann_lsh_topk_sql(10, S.lsh_tables(64, 1, 2)),
         "ann_ivf_topk": oracles.ann_ivf_topk_sql(
             10, S.DEFAULT_IVF_CELLS, S.DEFAULT_IVF_PROBE
         ),

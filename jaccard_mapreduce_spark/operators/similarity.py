@@ -76,42 +76,13 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _check_rerank(rerank: str, allowed: tuple[str, ...]) -> None:
-    if rerank not in allowed:
-        raise ValueError(
-            f"rerank must be one of {'/'.join(allowed)}, got {rerank!r}"
-        )
-
-
 DIST_BLOCK_ROWS = 4096
-
-# rerank="auto" crossover: estimated candidate-pair volume above which
-# the distributed bucket/cell-local kernel ("dist") beats the exact
-# relational rerank. Bracketed by same-day isolated measurements
-# (docs/SCALE.md round 8 protocol): at ~4M estimated pairs (sf0.1
-# defaults, 2k vectors) exact wins 3.3 s vs dist 4.2 s; at the 20k/
-# 9-plane probe's 79M candidates dist wins 170 s vs exact 731 s. The
-# threshold sits near the geometric middle of the bracket.
-AUTO_DIST_PAIRS = 16_000_000
-
-
-def _auto_rerank(est_pairs: float, auto_dist_pairs: int) -> str:
-    """Resolve ``rerank="auto"`` from bucket-occupancy math — the
-    ``jaccard_pairs`` auto-strategy precedent applied to the ANN tiers.
-    ``est_pairs`` is the caller's uniform-occupancy estimate of scored
-    candidate pairs (LSH: ``n_tables · n_q · n_i / 2^n_planes``; IVF:
-    ``n_q · n_probe · n_i / n_cells``). Uniformity understates skewed
-    corpora, but the dist tier's hot-group block decomposition absorbs
-    exactly that case, so the estimate only has to be right near the
-    crossover."""
-    return "dist" if est_pairs > auto_dist_pairs else "exact"
 
 
 def _resolve_rerank(
     rerank: str,
     allowed: tuple[str, ...],
-    estimate: Callable[[], float],
-    auto_dist_pairs: int,
+    estimate: Callable[[], float] | None = None,
     kernel_min_pairs: int | None = None,
     id_types: tuple[str, str] | None = None,
 ) -> str:
@@ -119,40 +90,163 @@ def _resolve_rerank(
     (``ann_lsh_topk``, ``ann_ivf_topk``, ``search_lsh_index``,
     ``search_ivf_index``): validate ``rerank`` against the caller's
     ``allowed`` tiers and return the plan form the caller builds —
-    ``"dist"``, ``"exact_kernel"``, ``"exact_relational"`` or ``"sq8"``.
+    ``"exact_kernel"``, ``"exact_relational"`` or ``"sq8"``. ``auto``
+    and ``exact`` name the same tier: every form is bit-identical.
 
-    ``estimate`` is the caller's occupancy estimate of scored candidate
-    pairs (it runs count jobs); it is evaluated at most once, and only
-    when ``auto`` (:func:`_auto_rerank` against ``auto_dist_pairs``) or
-    the exact-kernel gate needs it. ``kernel_min_pairs`` is the
-    stored-index searches' gate: an exact search estimated at or below
-    it takes the bit-identical relational plan, whose per-pair fold
-    beats the kernel's fixed Arrow overhead at small volumes. The
-    one-plan searches pass ``None`` and always run the exact kernel.
+    ``kernel_min_pairs`` is the stored-index searches' gate: a search
+    whose ``estimate`` (the caller's occupancy estimate of scored
+    candidate pairs; it runs count jobs and is evaluated once) is at or
+    below it takes the relational plan, whose per-pair fold beats the
+    kernel's fixed Arrow overhead at small volumes. The one-plan
+    searches pass ``None`` and always run the exact kernel without
+    counting anything.
 
     ``id_types`` is the stored-index searches' ``(query, store)`` id
     type pair. The kernels emit one id type for both columns, so a
-    mixed pair resolves ``auto``/``exact`` to the relational plan (its
-    self-pair compare handles the mix) and refuses ``dist``."""
-    _check_rerank(rerank, allowed)
+    mixed pair takes the relational plan (its self-pair compare handles
+    the mix)."""
+    if rerank not in allowed:
+        raise ValueError(
+            f"rerank must be one of {'/'.join(allowed)}, got {rerank!r}"
+        )
+    if rerank == "sq8":
+        return "sq8"
     if id_types is not None and id_types[0] != id_types[1]:
-        if rerank == "dist":
-            raise ValueError(
-                "rerank='dist' requires matching query/store id types "
-                f"(got {id_types[0]} vs {id_types[1]}); use rerank='exact'"
-            )
-        return "sq8" if rerank == "sq8" else "exact_relational"
-    est = None
-    if rerank == "auto":
-        est = estimate()
-        rerank = _auto_rerank(est, auto_dist_pairs)
-    if rerank != "exact":
-        return rerank
-    if kernel_min_pairs is None:
+        return "exact_relational"
+    if kernel_min_pairs is None or estimate() > kernel_min_pairs:
         return "exact_kernel"
-    if est is None:
-        est = estimate()
-    return "exact_kernel" if est > kernel_min_pairs else "exact_relational"
+    return "exact_relational"
+
+
+def _pair_core():
+    """The worker-side pair scoring shared by the fold kernels
+    (:func:`_score_bucket_local`, :func:`_score_bipartite_local`,
+    :func:`_score_cell_sq8_local`). It is built inside a function so
+    that cloudpickle ships it BY VALUE with the kernel closures: the
+    kernels run on any worker without the package installed.
+
+    - ``side(rows, t)``: one side's ids, float64 matrix, norms and
+      zero-norm mask, plus the signatures of the tables before ``t``
+      for the canonical-table ownership check (``None`` in table 0,
+      which owns every collision it sees).
+    - ``pairs(li, rj)``: LAZY enumeration of ``li × rj``. Chunks of the
+      flattened pair index decode with divmod instead of materializing
+      O(pairs) index arrays up front — a maximal block pair is
+      ~block_rows² ≈ 16.7M pairs, ~400 MB per task as eager int64
+      index+keep arrays (round-8 ADVICE). Chunks are L2-sized: the
+      fold's ordered passes over the product array thrash cache at
+      larger chunks (measured 1.7 s vs 3.7 s per 4M pairs at 4k vs 32k
+      rows). Per-pair arithmetic is row-independent, so chunk
+      boundaries never change a score.
+    - ``cosine(a, b, q, j)``: the SEQUENTIAL-ORDER fold (``acc +=
+      p[:, i]`` in index order, from 0.0), so each pair's dot product
+      is bit-identical to the interpreted ``_dot`` and to DuckDB's
+      ``list_dot_product``. Zero-norm pairs get literal +0.0, the JVM
+      ``otherwise(0.0)`` (an inf division would keep the dot's sign
+      bit).
+    - ``local_topk(qa, na, sa, k)``: the positions of the per-query
+      local top-``k`` under the EXACT global tie order (score desc,
+      neighbor asc). Every global top-k candidate is in its owning
+      group's local top-k, so pruning is invisible to the final
+      ranking, and it shrinks the Arrow return from O(pairs) to
+      O(queries·k) per group.
+    - ``scored(a, b, li, rj, rule, local_k)``: a kernel's output frame
+      over ``li × rj``. ``rule`` is the kernel's own self-pair rule;
+      ownership, the fold and the local top-k follow."""
+    import types
+
+    import numpy as np
+    import pandas as pd
+
+    def side(rows, t=0):
+        norm = np.sqrt(rows["norm2"].to_numpy().astype("float64"))
+        zero = norm == 0
+        norm[zero] = np.inf
+        # signatures compare as STRINGS: a decimal astype('int64')
+        # parse overflows at >= 19 '1'-bits (lsh_params_for emits >= 20
+        # planes above ~33M vectors — round-13 ADVICE)
+        sig = np.vstack(rows["sigs"].to_numpy())[:, :t] if t > 0 else None
+        return types.SimpleNamespace(
+            ids=rows["vec_id"].to_numpy(),
+            m=np.vstack(rows["vec"].to_numpy()).astype("float64"),
+            norm=norm,
+            zero=zero,
+            sig=sig,
+        )
+
+    def pairs(li, rj, chunk=1 << 12):
+        n, nr = len(li) * len(rj), len(rj)
+        for lo in range(0, n, chunk):
+            idx = np.arange(lo, min(lo + chunk, n))
+            yield li[idx // nr], rj[idx % nr]
+
+    def cosine(a, b, q, j):
+        p = a.m[q] * b.m[j]
+        acc = np.zeros(len(p))
+        for i in range(p.shape[1]):
+            acc += p[:, i]
+        s = acc / (a.norm[q] * b.norm[j])
+        bad = a.zero[q] | b.zero[j]
+        if bad.any():
+            s[bad] = 0.0
+        return s
+
+    def local_topk(qa, na, sa, k):
+        order = np.lexsort((na, -sa, qa))
+        qs = qa[order]
+        starts = np.r_[0, np.flatnonzero(qs[1:] != qs[:-1]) + 1]
+        sizes = np.diff(np.r_[starts, len(qs)])
+        ranks = np.arange(len(qs)) - np.repeat(starts, sizes)
+        return order[ranks < k]
+
+    def empty():
+        return pd.DataFrame({"query_id": [], "neighbor_id": [], "score": []})
+
+    def scored(a, b, li, rj, rule, local_k):
+        parts_q, parts_n, parts_s = [], [], []
+        for q, j in pairs(li, rj):
+            q, j = rule(q, j)
+            if a.sig is not None:
+                owned = ~(a.sig[q] == b.sig[j]).any(axis=1)
+                q, j = q[owned], j[owned]
+            if len(q) == 0:
+                continue
+            parts_q.append(a.ids[q])
+            parts_n.append(b.ids[j])
+            parts_s.append(cosine(a, b, q, j))
+        if not parts_s:
+            return empty()
+        qa = np.concatenate(parts_q)
+        na = np.concatenate(parts_n)
+        sa = np.concatenate(parts_s)
+        if local_k is not None and len(qa) > local_k:
+            sel = local_topk(qa, na, sa, local_k)
+            qa, na, sa = qa[sel], na[sel], sa[sel]
+        return pd.DataFrame({"query_id": qa, "neighbor_id": na, "score": sa})
+
+    return types.SimpleNamespace(
+        side=side,
+        pairs=pairs,
+        cosine=cosine,
+        local_topk=local_topk,
+        empty=empty,
+        scored=scored,
+    )
+
+
+def _one_table(df: DataFrame, bucket: Column, *extra) -> DataFrame:
+    """The kernel input frame of a scoring without LSH tables: null
+    ``sigs`` and table 0 (no ownership check), ``bucket`` as the group
+    key, then ``extra`` columns (the bipartite kernel's ``role``)."""
+    return df.select(
+        "vec_id",
+        "vec",
+        "norm2",
+        F.lit(None).cast("array<bigint>").alias("sigs"),
+        F.lit(0).alias("tbl"),
+        bucket.alias("bucket"),
+        *extra,
+    )
 
 
 def _score_bucket_local(
@@ -160,22 +254,24 @@ def _score_bucket_local(
     id_type: str,
     block_rows: int = DIST_BLOCK_ROWS,
     local_k: int | None = None,
-    kernel: str = "einsum",
 ) -> DataFrame:
-    """Fully distributed vectorized rerank for the LSH family
-    (``rerank="dist"``): candidates are scored WHERE THEY COLLIDE.
+    """Distributed vectorized scoring for the LSH family and the
+    all-pairs kernels: candidates are scored WHERE THEY COLLIDE.
 
     ``sigv`` is the signature relation with the vectors AND the full
     per-table signature array riding along —
-    ``(vec_id, vec, norm2, sigs array<bigint>, tbl, bucket)``,
-    n_tables rows per vector. One ``applyInPandas`` per (tbl, bucket)
-    group scores in-bucket ordered pairs with the numpy gather+einsum
-    kernel. Two design points make it scale:
+    ``(vec_id, vec, norm2, sigs, tbl, bucket)``, n_tables rows per
+    vector (one row per vector with null ``sigs`` and ``tbl`` 0 for the
+    all-pairs and cluster-scoped callers, :func:`_one_table`). One
+    ``applyInPandas`` per (tbl, bucket) group scores the in-bucket
+    ordered pairs with the hash-exact fold of :func:`_pair_core`, so
+    scores are bit-identical to the interpreted ``_dot`` plan and the
+    DuckDB oracle. Two design points make it scale:
 
     **Canonical-table ownership.** A pair colliding in several tables
     is scored ONCE, in the lowest table where it collides: the kernel
     checks ``sigs[:t]`` equality between the two rows and skips pairs
-    already owned by an earlier table. The first cut of this tier
+    already owned by an earlier table. The first cut of this kernel
     scored every collision and collapsed duplicates with a
     (query, neighbor) max-aggregate afterward — measured 496.7 s at
     the 20k/9-plane probe shape, because a replica-heavy corpus
@@ -198,93 +294,29 @@ def _score_bucket_local(
 
     Scale shape: the only data-sized shuffles are ``sigv``
     hash-partitioned on (tbl, bucket, block-pair) — n_tables × corpus
-    rows, the same expansion the exact tier's signature equi-join
-    shuffles — and the distinct scored pairs flowing into the top-k
-    (which Spark's WindowGroupLimit pre-prunes map-side). NO broadcast
-    matrix, NO driver collect, no cap. Scores differ from the
-    interpreted fold in the last ulp (numpy pairwise summation), so
-    the tier is rank-graded (``lsh_dist_ranks``).
-
-    The kernel closure is deliberately SELF-CONTAINED (no references
-    to module helpers): it serializes by value and runs on any worker
-    without the package installed — the per-pair arithmetic (einsum
-    row reduction, then one divide, chunked so numpy temporaries stay
-    batch-sized per the round-7 host finding) is bit-identical for a
-    pair regardless of which group scores it.
-
-    ``kernel="fold"`` (optimization round 12) swaps the einsum row
-    reduction for a SEQUENTIAL-ORDER accumulation over the dimension
-    axis (``acc += p[:, i]`` in index order, starting from 0.0): each
-    pair's dot product is then bit-identical to the interpreted
-    ``_dot`` fold (and DuckDB's ``list_dot_product``), so this mode is
-    HASH-exact, not just rank-exact — it is what lets the exact rerank
-    tier run in this distributed kernel shape instead of the
-    candidate-``distinct``-plus-two-join-backs relational plan.
-    Verified bitwise against the JVM fold on ~100k sampled pairs and
-    against every graded exact-tier output at sf0.01+sf0.1 (round-12
-    optimization notes). The zero-norm guard emits literal +0.0 in
-    fold mode (the JVM ``otherwise(0.0)``); the einsum mode is
-    byte-for-byte the round-8 kernel."""
+    rows, the same expansion a signature equi-join shuffles — and the
+    distinct scored pairs flowing into the top-k (which Spark's
+    WindowGroupLimit pre-prunes map-side). NO broadcast matrix, NO
+    driver collect, no cap."""
+    core = _pair_core()
 
     def score(pdf):
         import numpy as np
-        import pandas as pd
 
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "score": []})
         if len(pdf) < 2:
-            return empty
-        t = int(pdf["tbl"].iloc[0])
+            return core.empty()
+        a = core.side(pdf, int(pdf["tbl"].iloc[0]))
         gi = int(pdf["gi"].iloc[0])
         gj = int(pdf["gj"].iloc[0])
-        ids = pdf["vec_id"].to_numpy()
-        m = np.vstack(pdf["vec"].to_numpy()).astype("float64")
-        norm = np.sqrt(pdf["norm2"].to_numpy().astype("float64"))
-        norm[norm == 0] = np.inf  # zero vectors score 0 (_cosine guard)
-        if kernel == "fold":
-            # sequential-order accumulation — bit-identical to the
-            # interpreted _dot fold; zero-norm pairs get literal +0.0
-            # (inf-division would keep the dot's sign bit)
-            zero_norm = np.isinf(norm)
-
-            def _pair_dot(A, B):
-                p = A * B
-                acc = np.zeros(len(p))
-                for i in range(p.shape[1]):
-                    acc += p[:, i]
-                return acc
-
-        else:
-            zero_norm = None
-
-            def _pair_dot(A, B):
-                return np.einsum("ij,ij->i", A, B)
-
-        # earlier-table signatures, for the ownership check (skipped
-        # wholesale in table 0, which owns every collision it sees).
-        # Compared as STRINGS: the former decimal astype('int64') parse
-        # overflows at >= 19 '1'-bits (lsh_params_for emits >= 20
-        # planes above ~33M vectors — round-13 ADVICE), and fixed-width
-        # unicode equality is the same per-table memcmp without the cap
-        sig = (
-            np.vstack(pdf["sigs"].to_numpy())[:, :t] if t > 0 else None
-        )
-        # Pair enumeration is LAZY: chunks of the flattened pair index
-        # are decoded with divmod instead of materializing the full
-        # O(pairs) np.repeat/np.tile arrays up front — a maximal block
-        # pair is ~block_rows² ≈ 16.7M pairs, which as eager int64
-        # index+keep arrays is ~400 MB per task and multiplies across
-        # concurrent kernel tasks (round-8 ADVICE). Per-pair arithmetic
-        # is row-independent, so chunk boundaries never change a score.
-        # Fold mode uses L2-sized chunks: its 64 ordered passes over
-        # the product array thrash cache at the einsum chunk size
-        # (measured 1.7 s vs 3.7 s per 4M pairs at 4k vs 32k rows).
-        CHUNK = (1 << 12) if kernel == "fold" else (1 << 16)
         if gi == gj:
             # within one block (or the whole of a normal-sized bucket):
-            # all ordered pairs minus the diagonal
-            n = len(pdf)
-            li = rj = np.arange(n)
-            directed = False
+            # all ordered pairs minus the diagonal, by position
+            li = rj = np.arange(len(pdf))
+
+            def rule(q, b):
+                keep = q != b
+                return q[keep], b[keep]
+
         else:
             # cross-block group of a hot bucket: block gi × block gj,
             # both directions (each ordered pair lands in exactly one
@@ -292,54 +324,11 @@ def _score_bucket_local(
             blk = pdf["blk"].to_numpy()
             li = np.flatnonzero(blk == gi)
             rj = np.flatnonzero(blk == gj)
-            if len(li) == 0 or len(rj) == 0:
-                return empty
-            directed = True
-        nr = len(rj)
-        parts_q, parts_n, parts_s = [], [], []
-        for lo in range(0, len(li) * nr, CHUNK):
-            idx = np.arange(lo, min(lo + CHUNK, len(li) * nr))
-            q, b = li[idx // nr], rj[idx % nr]
-            if directed:
-                # emit both directions of the cross-block cell
-                q, b = np.concatenate([q, b]), np.concatenate([b, q])
-            else:
-                keep = q != b
-                q, b = q[keep], b[keep]
-            if sig is not None:
-                owned = ~(sig[q] == sig[b]).any(axis=1)
-                q, b = q[owned], b[owned]
-            if len(q) == 0:
-                continue
-            s = _pair_dot(m[q], m[b]) / (norm[q] * norm[b])
-            if zero_norm is not None:
-                bad = zero_norm[q] | zero_norm[b]
-                if bad.any():
-                    s[bad] = 0.0
-            parts_q.append(ids[q])
-            parts_n.append(ids[b])
-            parts_s.append(s)
-        if not parts_s:
-            return empty
-        qa = np.concatenate(parts_q)
-        na = np.concatenate(parts_n)
-        sa = np.concatenate(parts_s)
-        if local_k is not None and len(qa) > local_k:
-            # per-query LOCAL top-k under the EXACT global tie order
-            # (score desc, neighbor asc): every global top-k candidate
-            # is in its owning group's local top-k, so pruning here is
-            # invisible to the final ranking — and it shrinks the
-            # Arrow return from O(pairs) to O(queries·k) per group
-            order = np.lexsort((na, -sa, qa))
-            qs = qa[order]
-            starts = np.r_[0, np.flatnonzero(qs[1:] != qs[:-1]) + 1]
-            sizes = np.diff(np.r_[starts, len(qs)])
-            ranks = np.arange(len(qs)) - np.repeat(starts, sizes)
-            sel = order[ranks < local_k]
-            qa, na, sa = qa[sel], na[sel], sa[sel]
-        return pd.DataFrame(
-            {"query_id": qa, "neighbor_id": na, "score": sa}
-        )
+
+            def rule(q, b):
+                return np.concatenate([q, b]), np.concatenate([b, q])
+
+        return core.scored(a, a, li, rj, rule, local_k)
 
     schema = f"query_id {id_type}, neighbor_id {id_type}, score double"
     # hot-bucket overrides: the count aggregate prunes to (tbl, bucket)
@@ -378,105 +367,36 @@ def _score_bipartite_local(
     id_type: str,
     block_rows: int = DIST_BLOCK_ROWS,
     local_k: int | None = None,
-    kernel: str = "einsum",
 ) -> DataFrame:
-    """The asymmetric twin of :func:`_score_bucket_local`, for
-    searching a QUERY batch against a STORED corpus (the persisted LSH
-    index's ``rerank="dist"``): ``sv`` is the role-tagged union of both
-    sides' signature explodes —
+    """The asymmetric form of :func:`_score_bucket_local`, for
+    searching a QUERY batch against a STORED corpus or a query slice
+    against its corpus: ``sv`` is the role-tagged union of both sides —
     ``(vec_id, vec, norm2, sigs, tbl, bucket, role)`` with ``role``
     ``'q'`` (query) or ``'i'`` (indexed) — and each kernel group scores
-    (its q rows) × (its i rows), one direction only. Canonical-table
-    ownership and the per-query local top-k work exactly as in the
-    symmetric kernel; hot buckets decompose on an ASYMMETRIC block
-    grid (q rows hash into ``ceil(n_q/block_rows)`` blocks, i rows
-    into ``ceil(n_i/block_rows)``, one group per (q-block, i-block)
-    cell), so a (q, i) pair lands in exactly one group and no task
-    scores more than ~``block_rows``² pairs.
-
-    ``kernel="fold"`` — the hash-exact sequential-order dot product;
-    see :func:`_score_bucket_local`."""
+    (its q rows) × (its i rows), one direction only, skipping pairs
+    whose ids are equal. Canonical-table ownership, the fold and the
+    per-query local top-k are the shared :func:`_pair_core`; hot
+    buckets decompose on an ASYMMETRIC block grid
+    (:func:`_block_bipartite`), so a (q, i) pair lands in exactly one
+    group and no task scores more than ~``block_rows``² pairs."""
+    core = _pair_core()
 
     def score(pdf):
         import numpy as np
-        import pandas as pd
 
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "score": []})
         qrows = pdf[pdf["role"] == "q"]
         irows = pdf[pdf["role"] == "i"]
         if len(qrows) == 0 or len(irows) == 0:
-            return empty
+            return core.empty()
         t = int(pdf["tbl"].iloc[0])
-        if kernel == "fold":
-            # sequential-order accumulation — bit-identical to the
-            # interpreted _dot fold (see the symmetric kernel)
-            def _pair_dot(A, B):
-                p = A * B
-                acc = np.zeros(len(p))
-                for i in range(p.shape[1]):
-                    acc += p[:, i]
-                return acc
+        a, b = core.side(qrows, t), core.side(irows, t)
 
-        else:
+        def rule(q, j):
+            keep = a.ids[q] != b.ids[j]
+            return q[keep], j[keep]
 
-            def _pair_dot(A, B):
-                return np.einsum("ij,ij->i", A, B)
-
-        def mat(sl):
-            ids = sl["vec_id"].to_numpy()
-            m = np.vstack(sl["vec"].to_numpy()).astype("float64")
-            norm = np.sqrt(sl["norm2"].to_numpy().astype("float64"))
-            norm[norm == 0] = np.inf
-            # string compare, not decimal parse — see the symmetric
-            # kernel's ownership-check note (>= 19-bit overflow)
-            sig = (
-                np.vstack(sl["sigs"].to_numpy())[:, :t] if t > 0 else None
-            )
-            return ids, m, norm, sig
-
-        q_ids, qm, qn, qsig = mat(qrows)
-        i_ids, im, inorm, isig = mat(irows)
-        q_zero = np.isinf(qn) if kernel == "fold" else None
-        i_zero = np.isinf(inorm) if kernel == "fold" else None
-        # lazy pair enumeration — see the symmetric kernel: chunks of
-        # the flattened q×i index space decode with divmod, so no
-        # O(pairs) index array ever materializes
-        CHUNK = (1 << 12) if kernel == "fold" else (1 << 16)
-        nq, ni_n = len(qrows), len(irows)
-        parts_q, parts_n, parts_s = [], [], []
-        for lo in range(0, nq * ni_n, CHUNK):
-            idx = np.arange(lo, min(lo + CHUNK, nq * ni_n))
-            q, b = idx // ni_n, idx % ni_n
-            keep = q_ids[q] != i_ids[b]
-            q, b = q[keep], b[keep]
-            if qsig is not None and len(q):
-                owned = ~(qsig[q] == isig[b]).any(axis=1)
-                q, b = q[owned], b[owned]
-            if len(q) == 0:
-                continue
-            s = _pair_dot(qm[q], im[b]) / (qn[q] * inorm[b])
-            if q_zero is not None:
-                bad = q_zero[q] | i_zero[b]
-                if bad.any():
-                    s[bad] = 0.0
-            parts_q.append(q_ids[q])
-            parts_n.append(i_ids[b])
-            parts_s.append(s)
-        if not parts_s:
-            return empty
-        qa = np.concatenate(parts_q)
-        na = np.concatenate(parts_n)
-        sa = np.concatenate(parts_s)
-        if local_k is not None and len(qa) > local_k:
-            order = np.lexsort((na, -sa, qa))
-            qs = qa[order]
-            starts = np.r_[0, np.flatnonzero(qs[1:] != qs[:-1]) + 1]
-            sizes = np.diff(np.r_[starts, len(qs)])
-            ranks = np.arange(len(qs)) - np.repeat(starts, sizes)
-            sel = order[ranks < local_k]
-            qa, na, sa = qa[sel], na[sel], sa[sel]
-        return pd.DataFrame(
-            {"query_id": qa, "neighbor_id": na, "score": sa}
+        return core.scored(
+            a, b, np.arange(len(qrows)), np.arange(len(irows)), rule, local_k
         )
 
     schema = f"query_id {id_type}, neighbor_id {id_type}, score double"
@@ -541,7 +461,7 @@ def _score_cell_sq8_local(
     with_exact: bool = False,
 ) -> DataFrame:
     """Cell-local SQ8 rerank kernel (optimization round 12) — the
-    quantized-space twin of :func:`_score_cell_local`, replacing the
+    quantized-space form of :func:`_score_cell_local`, replacing the
     relational cell join's per-pair interpreted integer fold
     (:func:`_sq8_pair_score`) with a vectorized kernel that is
     HASH-exact by construction: the only pair-level reduction is the
@@ -555,11 +475,12 @@ def _score_cell_sq8_local(
     With ``with_exact`` the rows also carry ``vec, norm2`` and the
     kernel emits BOTH scores per pair — ``(query_id, neighbor_id,
     score_exact, score_sq8)`` — computing the exact score with the
-    sequential-order fold (bit-identical to ``_dot``); the local
-    top-``local_k`` prune then keeps the UNION of the per-query local
-    top-k under each score, so both downstream global top-k windows
-    are preserved exactly (any pair in a global top-k is in its
+    shared fold of :func:`_pair_core` (bit-identical to ``_dot``); the
+    local top-``local_k`` prune then keeps the UNION of the per-query
+    local top-k under each score, so both downstream global top-k
+    windows are preserved exactly (any pair in a global top-k is in its
     group's local top-k under that score)."""
+    core = _pair_core()
 
     def score(pdf):
         import numpy as np
@@ -589,23 +510,14 @@ def _score_cell_sq8_local(
             # cancel to ~0 or slightly negative in float)
             out["sqn"] = np.sqrt(np.where(ok, qn2, 1.0))
             out["qzero"] = ~ok
-            if with_exact:
-                out["vec"] = np.vstack(sl["vec"].to_numpy()).astype(
-                    "float64"
-                )
-                n2 = sl["norm2"].to_numpy(dtype="float64")
-                out["norm"] = np.sqrt(n2)
-                out["nzero"] = ~(n2 > 0)
             return out
 
         A = mat(qrows)
         B = mat(irows)
-        CHUNK = 1 << 12
-        nq, ni = len(qrows), len(irows)
+        if with_exact:
+            xa, xb = core.side(qrows), core.side(irows)
         parts = {k2: [] for k2 in cols}
-        for lo in range(0, nq * ni, CHUNK):
-            idx = np.arange(lo, min(lo + CHUNK, nq * ni))
-            q, b = idx // ni, idx % ni
+        for q, b in core.pairs(np.arange(len(qrows)), np.arange(len(irows))):
             keep = A["ids"][q] != B["ids"][b]
             q, b = q[keep], b[keep]
             if len(q) == 0:
@@ -624,34 +536,17 @@ def _score_cell_sq8_local(
             parts["neighbor_id"].append(B["ids"][b])
             parts["score_sq8"].append(s8)
             if with_exact:
-                p = A["vec"][q] * B["vec"][b]
-                acc = np.zeros(len(p))
-                for i in range(p.shape[1]):
-                    acc += p[:, i]
-                se = acc / (A["norm"][q] * B["norm"][b])
-                badx = A["nzero"][q] | B["nzero"][b]
-                if badx.any():
-                    se[badx] = 0.0
-                parts["score_exact"].append(se)
+                parts["score_exact"].append(core.cosine(xa, xb, q, b))
         if not parts["score_sq8"]:
             return empty
         out = {k2: np.concatenate(v) for k2, v in parts.items()}
         if local_k is not None and len(out["query_id"]) > local_k:
             qa, na = out["query_id"], out["neighbor_id"]
-
-            def _local_sel(sa):
-                order = np.lexsort((na, -sa, qa))
-                qs_ = qa[order]
-                starts = np.r_[
-                    0, np.flatnonzero(qs_[1:] != qs_[:-1]) + 1
-                ]
-                sizes = np.diff(np.r_[starts, len(qs_)])
-                ranks = np.arange(len(qs_)) - np.repeat(starts, sizes)
-                return order[ranks < local_k]
-
-            sel = _local_sel(out["score_sq8"])
+            sel = core.local_topk(qa, na, out["score_sq8"], local_k)
             if with_exact:
-                sel = np.union1d(sel, _local_sel(out["score_exact"]))
+                sel = np.union1d(
+                    sel, core.local_topk(qa, na, out["score_exact"], local_k)
+                )
             out = {k2: v[sel] for k2, v in out.items()}
         return pd.DataFrame(out)
 
@@ -674,30 +569,27 @@ def _score_cell_local(
     id_type: str,
     local_k: int | None = None,
     block_rows: int = DIST_BLOCK_ROWS,
-    kernel: str = "einsum",
 ) -> DataFrame:
-    """The IVF twin of :func:`_score_bucket_local`: score (every
+    """The IVF form of :func:`_score_bucket_local`: score (every
     probing query) × (the cell's resident vectors), cell-locally. No
     ownership check or post-dedup is needed — the index side is
     single-cell, so a query meets a neighbor at most once (the same
     argument ``ann_ivf_topk`` makes for skipping its pair dedup).
 
     Implemented as a thin adapter over :func:`_score_bipartite_local`
-    (``tbl = 0`` disables the ownership check, the cell id is the
-    bucket): ``assigned`` in the one-plan form —
-    ``(vec_id, vec, norm2, cell_id, crank)`` — is split into the
-    role-tagged union the bipartite kernel expects (every assignment
-    row probes as ``'q'``; the ``crank == 1`` slice additionally rides
-    as ``'i'``, ≈ 1/n_probe extra rows), while a caller that already
-    role-tags (the stored-index search) passes through unchanged.
-    Sharing the kernel buys the IVF family the asymmetric hot-group
-    block decomposition for free: ``ivf_params_for`` keeps WELL-TUNED
-    cells near 32 residents, but the public API accepts any stored
-    codebook, and a mistuned ``n_cells`` (or a corpus-scale probing
-    batch) can concentrate one cell — previously that single group
-    materialized full O(n_q·n_i) pair-index arrays in one task; now it
-    decomposes into ≤ ``block_rows``² blocks like any hot LSH bucket
-    (round-8 ADVICE, medium)."""
+    (:func:`_one_table` frame, the cell id as the bucket): ``assigned``
+    in the one-plan form — ``(vec_id, vec, norm2, cell_id, crank)`` —
+    is split into the role-tagged union the bipartite kernel expects
+    (every assignment row probes as ``'q'``; the ``crank == 1`` slice
+    additionally rides as ``'i'``, ≈ 1/n_probe extra rows), while a
+    caller that already role-tags (the stored-index search) passes
+    through unchanged. Sharing the kernel buys the IVF family the
+    asymmetric hot-group block decomposition for free:
+    ``ivf_params_for`` keeps WELL-TUNED cells near 32 residents, but
+    the public API accepts any stored codebook, and a mistuned
+    ``n_cells`` (or a corpus-scale probing batch) can concentrate one
+    cell — it decomposes into ≤ ``block_rows``² blocks like any hot
+    LSH bucket (round-8 ADVICE, medium)."""
     if "role" in assigned.columns:
         sv = assigned
     else:
@@ -708,17 +600,11 @@ def _score_cell_local(
             "vec_id", "vec", "norm2", "cell_id", F.lit("i").alias("role")
         )
         sv = qside.unionByName(iside)
-    sv = sv.select(
-        "vec_id",
-        "vec",
-        "norm2",
-        F.lit(None).cast("array<bigint>").alias("sigs"),
-        F.lit(0).alias("tbl"),
-        F.col("cell_id").alias("bucket"),
-        "role",
-    )
     return _score_bipartite_local(
-        sv, id_type, block_rows=block_rows, local_k=local_k, kernel=kernel
+        _one_table(sv, F.col("cell_id"), "role"),
+        id_type,
+        block_rows=block_rows,
+        local_k=local_k,
     )
 
 
@@ -860,10 +746,10 @@ def exact_slice_topk(
     audits' exact baseline.
 
     Routes by estimated scored-pair volume ``|slice| · |corpus|``
-    (one cheap two-count aggregate over the id column — EAGER, the
-    auto-rerank convention): small slices take the broadcast
-    nested-loop join + interpreted ``_dot`` fold (whose per-query cost
-    beats the kernel's fixed Arrow overhead), large ones the bipartite
+    (one cheap two-count aggregate over the id column — EAGER): small
+    slices take the broadcast nested-loop join + interpreted ``_dot``
+    fold (whose per-query cost beats the kernel's fixed Arrow
+    overhead), large ones the bipartite
     block-grid fold kernel (hash-exact sequential-order scores,
     per-group local top-k). Both forms are bit-identical — verified
     for every hybrid-family graded key in round 12 and pinned by
@@ -893,25 +779,12 @@ def exact_slice_topk(
         )
         return _topk(scored, k)
 
-    def side(df, role):
-        return df.select(
-            "vec_id",
-            "vec",
-            "norm2",
-            F.lit(None).cast("array<bigint>").alias("sigs"),
-            F.lit(0).alias("tbl"),
-            F.lit(0).alias("bucket"),
-            F.lit(role).alias("role"),
-        )
-
-    sv = side(v.where(query_pred), "q").unionByName(side(v, "i"))
+    sv = _one_table(
+        v.where(query_pred), F.lit(0), F.lit("q").alias("role")
+    ).unionByName(_one_table(v, F.lit(0), F.lit("i").alias("role")))
     return _topk(
         _score_bipartite_local(
-            sv,
-            id_type,
-            block_rows=ALLPAIRS_BLOCK_ROWS,
-            local_k=k,
-            kernel="fold",
+            sv, id_type, block_rows=ALLPAIRS_BLOCK_ROWS, local_k=k
         ),
         k,
     )
@@ -922,7 +795,7 @@ def cosine_topk(embeddings: DataFrame, k: int = 10, id_col: str = "vec_id", vec_
     ``(query_id, neighbor_id, score, rank)``.
 
     Optimization round 12: runs as ONE all-pairs "bucket" through the
-    hash-exact ``kernel="fold"`` block kernel instead of the broadcast
+    hash-exact fold block kernel instead of the broadcast
     nested-loop join + 4M interpreted ``_dot`` folds + full-pair
     window. The block grid (``ALLPAIRS_BLOCK_ROWS``-row blocks, one
     group per unordered block pair) spreads the O(n²) scoring across
@@ -934,21 +807,12 @@ def cosine_topk(embeddings: DataFrame, k: int = 10, id_col: str = "vec_id", vec_
     relational form for full-pair-relation consumers."""
     v = vectors(embeddings, id_col, vec_col)
     id_type = embeddings.schema[id_col].dataType.simpleString()
-    sv = v.select(
-        "vec_id",
-        "vec",
-        "norm2",
-        F.lit(None).cast("array<bigint>").alias("sigs"),
-        F.lit(0).alias("tbl"),
-        F.lit(0).alias("bucket"),
-    )
     return _topk(
         _score_bucket_local(
-            sv,
+            _one_table(v, F.lit(0)),
             id_type,
             block_rows=ALLPAIRS_BLOCK_ROWS,
             local_k=k,
-            kernel="fold",
         ),
         k,
     )
@@ -1114,22 +978,17 @@ def ann_lsh_topk(
     vec_col: str = "embedding",
     rerank: str = "auto",
     block_rows: int = DIST_BLOCK_ROWS,
-    auto_dist_pairs: int = AUTO_DIST_PAIRS,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates share an LSH bucket in ANY
     of ``n_tables`` independent hash tables (the classic multi-table
     construction), exact rerank over the deduplicated candidate set.
 
-    ``rerank="auto"`` (the default) derives the tier from the
-    occupancy estimate ``n_tables · n² / 2^n_planes`` against
-    ``auto_dist_pairs`` (:func:`_resolve_rerank` — small corpora rerank
-    exactly, candidate volumes past the measured crossover go to the
-    distributed kernel). Auto is EAGER by design — it counts the
-    corpus before choosing, like the ``jaccard_pairs`` auto strategy —
-    so plan-only callers should pass an explicit tier.
-    ``block_rows`` tunes the dist tier's hot-bucket decomposition
-    threshold (the graded ``lsh_dist_skew`` fixture lowers it to force
-    the block-grid path at test scale).
+    ``rerank`` accepts ``"auto"`` (the default) and ``"exact"``; both
+    run the hash-exact fold kernel, and plan construction is LAZY (no
+    Spark job runs until the result is consumed). ``block_rows`` tunes
+    the kernel's hot-bucket decomposition threshold (the graded
+    ``lsh_dist_skew`` fixture lowers it to force the block-grid path at
+    test scale).
 
     One wide table (many planes) has miss probability ``1-(1-θ/π)^p``
     per neighbor — round-4's audit measured recall 0.045 at 6 planes
@@ -1141,8 +1000,8 @@ def ann_lsh_topk(
     (SCALE.md round 5).
 
     Plan shape: the signature relation is ``n_tables`` rows per vector
-    (one explode of the kernel-computed signature array), and both
-    tiers score in ONE hash shuffle on ``(table, bucket)`` — every pair
+    (one explode of the kernel-computed signature array), and pairs
+    score in ONE hash shuffle on ``(table, bucket)`` — every pair
     is scored once, in the first table where it collides
     (:func:`_score_bucket_local`), so there is no candidate ``distinct``
     and no vector join-back; nothing data-sized is broadcast.
@@ -1150,28 +1009,17 @@ def ann_lsh_topk(
     from jaccard_mapreduce_spark.operators._cache import pin as _pin
 
     tables = lsh_tables(dim, n_planes, n_tables, seed)
-    # pinned: the auto tier's count and the signature kernel both read it
+    _resolve_rerank(rerank, ("auto", "exact"))
+    # pinned: the kernel's hot-bucket count and its scoring shuffle
+    # both read the signature relation built from it
     v = _pin(vectors(embeddings, id_col, vec_col))
-
-    def estimate() -> float:
-        n = v.count()
-        return n_tables * n * (n / float(2 ** min(n_planes, 62)))
-
-    form = _resolve_rerank(
-        rerank, ("auto", "exact", "dist"), estimate, auto_dist_pairs
-    )
     # bucket-local scoring: the vectors AND the full signature array
     # (from the vectorized kernel — bit-identical bucket strings, see
     # _lsh_sigs_kernel) ride the signature explode into the (tbl,
     # bucket) shuffle, and every pair is scored exactly once, in the
-    # first table where it collides. Optimization round 12: the EXACT
-    # tier runs through the same kernel with ``kernel="fold"``
-    # (sequential-order accumulation, bit-identical to the interpreted
-    # ``_dot`` fold — hash-graded scores unchanged, verified bitwise at
-    # sf0.01/sf0.1 and vs the DuckDB oracle). Same candidate set by
-    # construction: a pair colliding in ≥1 table is scored exactly
-    # once in its first colliding table, which is the relational
-    # plan's distinct-pairs set.
+    # first table where it collides — the relational plan's
+    # distinct-pairs set — with the hash-exact fold (verified bitwise
+    # at sf0.01/sf0.1 and vs the DuckDB oracle).
     sigv = _lsh_sigs_kernel(v, tables).select(
         "vec_id",
         "vec",
@@ -1181,13 +1029,7 @@ def ann_lsh_topk(
     )
     id_type = embeddings.schema[id_col].dataType.simpleString()
     return _topk(
-        _score_bucket_local(
-            sigv,
-            id_type,
-            block_rows=block_rows,
-            local_k=k,
-            kernel="fold" if form == "exact_kernel" else "einsum",
-        ),
+        _score_bucket_local(sigv, id_type, block_rows=block_rows, local_k=k),
         k,
     )
 
@@ -1206,16 +1048,8 @@ def embedding_duplicates(
     directed output is the identical canonical relation)."""
     v = vectors(embeddings, id_col, vec_col)
     id_type = embeddings.schema[id_col].dataType.simpleString()
-    sv = v.select(
-        "vec_id",
-        "vec",
-        "norm2",
-        F.lit(None).cast("array<bigint>").alias("sigs"),
-        F.lit(0).alias("tbl"),
-        F.lit(0).alias("bucket"),
-    )
     pairs = _score_bucket_local(
-        sv, id_type, block_rows=ALLPAIRS_BLOCK_ROWS, kernel="fold"
+        _one_table(v, F.lit(0)), id_type, block_rows=ALLPAIRS_BLOCK_ROWS
     )
     return (
         pairs.where(
@@ -1549,7 +1383,6 @@ def ann_ivf_topk(
     vec_col: str = "embedding",
     cents: DataFrame | None = None,
     rerank: str = "auto",
-    auto_dist_pairs: int = AUTO_DIST_PAIRS,
 ) -> DataFrame:
     """IVF approximate top-k: index vectors live in their single nearest
     cell; each query probes its ``n_probe`` nearest cells and reranks
@@ -1562,22 +1395,13 @@ def ann_ivf_topk(
     full grid and the recall-vs-fraction finding are in docs/SCALE.md
     round 6).
 
-    ``rerank="auto"`` (the default) resolves via the occupancy
-    estimate ``n · n_probe · n / n_cells`` (:func:`_resolve_rerank`);
-    like the LSH twin's, the resolution is EAGER (one count) — pass an
-    explicit tier for lazy plan construction.
+    ``rerank`` accepts ``"auto"`` (the default) and ``"exact"``; both
+    run the hash-exact fold kernel without counting anything.
     """
     from jaccard_mapreduce_spark.operators._cache import pin as _pin
 
+    _resolve_rerank(rerank, ("auto", "exact"))
     v = vectors(embeddings, id_col, vec_col)
-
-    def estimate() -> float:
-        n = embeddings.count()
-        return n * n_probe * (n / float(max(n_cells, 1)))
-
-    form = _resolve_rerank(
-        rerank, ("auto", "exact", "dist"), estimate, auto_dist_pairs
-    )
     # training collects the tiny codebook to the driver (the MLlib loop
     # shape) — pass prebuilt ``cents`` (cell_id, cvec, cnorm2) to keep
     # plan construction fully lazy, e.g. a codebook read from a
@@ -1589,19 +1413,15 @@ def ann_ivf_topk(
         )
     # cell-local scoring: ONE applyInPandas per cell over the PINNED
     # assignment relation; no dedup needed since the index side is
-    # single-cell. Optimization round 12: the exact tier shares this
-    # plan with ``kernel="fold"`` (hash-exact sequential-order
-    # arithmetic — see ann_lsh_topk). The pin matters: the kernel
-    # adapter reads the ONE n_probe assignment twice (query side +
-    # crank==1 index side), and unpinned each branch would recompute
-    # the assignment (measured ~2.5 s of the 10.6 s at sf0.1).
+    # single-cell; hash-exact fold scores (see ann_lsh_topk). The pin
+    # matters: the kernel adapter reads the ONE n_probe assignment
+    # twice (query side + crank==1 index side), and unpinned each
+    # branch would recompute the assignment (measured ~2.5 s of the
+    # 10.6 s at sf0.1).
     id_type = embeddings.schema[id_col].dataType.simpleString()
     return _topk(
         _score_cell_local(
-            _pin(ivf_assign(v, cents, n_probe)),
-            id_type,
-            local_k=k,
-            kernel="fold" if form == "exact_kernel" else "einsum",
+            _pin(ivf_assign(v, cents, n_probe)), id_type, local_k=k
         ),
         k,
     )
@@ -2147,16 +1967,10 @@ def semantic_dedup(
     # identical ``b.vec_id < a.vec_id`` predicate. Verified bitwise at
     # sf0.01/sf0.1.
     id_type = embeddings.schema[id_col].dataType.simpleString()
-    sv = v.select(
-        "vec_id",
-        "vec",
-        "norm2",
-        F.lit(None).cast("array<bigint>").alias("sigs"),
-        F.lit(0).alias("tbl"),
-        F.col("cluster").alias("bucket"),
-    )
     scored = _score_bucket_local(
-        sv, id_type, block_rows=ALLPAIRS_BLOCK_ROWS, kernel="fold"
+        _one_table(v, F.col("cluster")),
+        id_type,
+        block_rows=ALLPAIRS_BLOCK_ROWS,
     )
     dup_of_smaller = (
         scored.where(
@@ -2342,15 +2156,9 @@ def ann_recall_audit(
         ).select("query_id", "neighbor_id")
     )
     approx = _pin(
-        # rerank="exact" pinned deliberately: recall is TIER-INVARIANT
-        # (every rerank tier scores the identical candidate set and
-        # produces the identical ranking), so the audit measures the
-        # hash family, not the rerank — and skipping the auto gate
-        # keeps the audit's plan stable and saves its corpus count
         ann_lsh_topk(
             embeddings, k=k, n_planes=n_planes, n_tables=n_tables,
             seed=seed, dim=dim, id_col=id_col, vec_col=vec_col,
-            rerank="exact",
         )
         .where(is_sampled)
         .select("query_id", "neighbor_id")
@@ -2408,11 +2216,9 @@ def ivf_recall_audit(
         ).select("query_id", "neighbor_id")
     )
     approx = _pin(
-        # rerank="exact" pinned — tier-invariant recall, same reasoning
-        # as ann_recall_audit
         ann_ivf_topk(
             embeddings, k=k, n_cells=n_cells, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col, rerank="exact",
+            id_col=id_col, vec_col=vec_col,
         )
         .where(is_sampled)
         .select("query_id", "neighbor_id")

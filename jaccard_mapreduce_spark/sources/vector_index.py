@@ -48,7 +48,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jaccard_mapreduce_spark.operators.similarity import (
-    AUTO_DIST_PAIRS,
     DEFAULT_IVF_CELLS,
     DEFAULT_IVF_ITERS,
     DEFAULT_IVF_PROBE,
@@ -225,15 +224,14 @@ def search_ivf_index(
     # the kernel's fixed Arrow overhead loses at small pair volumes)
     form = _resolve_rerank(
         rerank,
-        ("auto", "exact", "sq8", "dist"),
+        ("auto", "exact", "sq8"),
         estimate,
-        AUTO_DIST_PAIRS,
         kernel_min_pairs=IVF_EXACT_KERNEL_MIN_PAIRS,
         id_types=(q_type, s_type),
     )
     from jaccard_mapreduce_spark.operators._cache import pin as _pin
 
-    if form in ("dist", "exact_kernel"):
+    if form == "exact_kernel":
         # cell-local distributed rerank against the STORED vectors: the
         # probing batch (role 'q') and the probed cells' residents
         # (role 'i') meet in ONE shuffle on cell_id and are scored by
@@ -241,10 +239,8 @@ def search_ivf_index(
         # cap. The store side is pruned to probed cells by a broadcast
         # semi-join on the (≤ n_cells row) probed cell-id set BEFORE
         # the shuffle, so a small batch never shuffles the whole store.
-        # Optimization round 12: the exact tier shares this plan with
-        # ``kernel="fold"`` (hash-exact sequential-order arithmetic —
-        # scores bit-identical to the relational ``_dot`` plan,
-        # verified at sf0.01/sf0.1 and vs the oracle).
+        # Hash-exact fold scores, bit-identical to the relational
+        # ``_dot`` plan (verified at sf0.01/sf0.1 and vs the oracle).
         # pinned: feeds BOTH the q side and the probed-cells distinct —
         # unpinned, the assignment recomputes once per consumer (the
         # double-compute ann_ivf_topk / ann_sq8_topk already pin away,
@@ -260,15 +256,7 @@ def search_ivf_index(
             "vec_id", "vec", "norm2", "cell_id", F.lit("i").alias("role")
         )
         assigned = qside.unionByName(iside)
-        return _topk(
-            _score_cell_local(
-                assigned,
-                q_type,
-                local_k=k,
-                kernel="fold" if form == "exact_kernel" else "einsum",
-            ),
-            k,
-        )
+        return _topk(_score_cell_local(assigned, q_type, local_k=k), k)
     if form == "sq8":
         if "qcode" not in cells.columns:
             raise ValueError(
@@ -603,7 +591,7 @@ def lsh_index_stats(spark: SparkSession, path: str) -> dict:
 
     ``max_bucket_vectors`` is the number the LSH family trades on:
     candidate volume per search batch scales with bucket sizes, so a
-    hot bucket crossing the dist kernel's block threshold — or mean
+    hot bucket crossing the kernel's block threshold — or mean
     occupancy drifting past ``lsh_params_for``'s target — is the
     measured trigger for :func:`retune_lsh_index` (which re-derives the
     width from the same occupancy math). ``signatures_files`` feeds
@@ -1008,9 +996,9 @@ def search_lsh_index(
     equals the indexed set the result must value-hash-match it — the
     layout-invisibility contract, same as the IVF twin).
 
-    Plan shape of the relational form (small exact batches and mixed
-    id types; ``dist`` and large exact batches run the bucket-local
-    kernel — see :func:`_resolve_rerank`): query signatures are a pure
+    Plan shape of the relational form (small batches and mixed id
+    types; large batches run the bucket-local kernel — see
+    :func:`_resolve_rerank`): query signatures are a pure
     projection over the pinned query relation (no exchange before the join — the AQE
     single-partition trap :func:`search_ivf_index` had to repartition
     past cannot arise here), the candidate join is a hash shuffle on
@@ -1070,13 +1058,12 @@ def search_lsh_index(
     # (kernel).
     form = _resolve_rerank(
         rerank,
-        ("auto", "exact", "dist"),
+        ("auto", "exact"),
         estimate,
-        AUTO_DIST_PAIRS,
         kernel_min_pairs=LSH_EXACT_KERNEL_MIN_PAIRS,
         id_types=(q_type, s_type),
     )
-    if form in ("dist", "exact_kernel"):
+    if form == "exact_kernel":
         # bucket-local distributed rerank against the stored corpus:
         # both sides' vectors ride their signature explode (the stored
         # side recomputes its signature ARRAY from the stored planes —
@@ -1088,11 +1075,9 @@ def search_lsh_index(
         # and hot-bucket block decomposition. The stored side is
         # pruned to buckets the batch actually probes (broadcast
         # semi-join on the |batch|·n_tables query bucket set) before
-        # the shuffle. Optimization round 12: the EXACT tier shares
-        # this plan with ``kernel="fold"`` (hash-exact sequential-order
-        # scores, bit-identical to the relational candidate-distinct +
-        # join-backs plan below — verified at sf0.01/sf0.1 and vs the
-        # oracle).
+        # the shuffle. Hash-exact fold scores, bit-identical to the
+        # relational candidate-distinct + join-backs plan below
+        # (verified at sf0.01/sf0.1 and vs the oracle).
 
         def _explode_side(v: DataFrame, role: str) -> DataFrame:
             return _lsh_sigs_kernel(v, tables).select(
@@ -1110,15 +1095,7 @@ def search_lsh_index(
             "left_semi",
         )
         sv = q_side.unionByName(i_side)
-        return _topk(
-            _score_bipartite_local(
-                sv,
-                q_type,
-                local_k=k,
-                kernel="fold" if form == "exact_kernel" else "einsum",
-            ),
-            k,
-        )
+        return _topk(_score_bipartite_local(sv, q_type, local_k=k), k)
     a = sig_q.alias("a")
     b = sig_i.alias("b")
     joined = a.join(
@@ -1353,7 +1330,6 @@ def lsh_index_delete_demo(
             (F.col("vec_id") % query_mod == 0)
             & (F.col("vec_id") % del_mod != del_rem)
         ),
-        rerank="exact",
     )
     assert res.limit(1).count() > 0, (
         "vacuous deleted-index search: no surviving query found a "
@@ -1499,39 +1475,6 @@ def lsh_index_retune_demo(
     return search_lsh_index(spark, base, emb)
 
 
-def lsh_index_dist_demo(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
-    """Contract query for the distributed rerank over the STORED LSH
-    index: self-search with ``rerank="dist"`` — the bipartite
-    bucket-local kernel (canonical-table ownership, hot-block grid)
-    must reproduce the exact tier's RANKS over the same stored layout
-    (scores drift in the last ulp, so the graded projection is
-    rank-only, like ``lsh_dist_ranks``). Shares the session
-    index with :func:`lsh_index_search_demo`."""
-    base, emb = _ensure_lsh_index(spark, sf_dir, rebuild)
-    return search_lsh_index(spark, base, emb, rerank="dist")
-
-
-def ivf_index_dist_demo(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
-    """Contract query for the distributed rerank over the STORED IVF
-    index: self-search with ``rerank="dist"`` — the role-tagged cell
-    kernel must reproduce the exact tier's RANKS over the stored
-    cells. Shares the session index with
-    :func:`ivf_index_search_demo`."""
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="",
-        required_dirs=["centroids", "cells"],
-        build=build_ivf_index,
-        rebuild=rebuild,
-    )
-    return search_ivf_index(spark, base, emb, rerank="dist")
-
-
 def ivf_index_retrain_demo(
     spark: SparkSession,
     sf_dir: str,
@@ -1618,7 +1561,6 @@ def ivf_index_delete_demo(
             (F.col("vec_id") % query_mod == 0)
             & (F.col("vec_id") % del_mod != del_rem)
         ),
-        rerank="exact",
     )
     assert res.limit(1).count() > 0, (
         "vacuous deleted-index search: no surviving query found a "
@@ -1777,17 +1719,11 @@ def hybrid_index_search_demo(
         "vacuous lexical leg: no query doc matched a surviving token "
         "(round-9 verdict regression guard)"
     )
-    # rerank pinned to "exact" (the ann_recall_audit precedent): the
-    # auto gate sizes its estimate from the QUERY-BATCH count, so the
-    # tier — and therefore last-ulp score order — could differ between
-    # this one-shot shape and the same queries served in smaller
-    # batches; a graded contract must not depend on batch size
     vec = search_lsh_index(
         spark,
         base,
         emb.where(F.col("vec_id") % query_mod == 0),
         k=leg_k,
-        rerank="exact",
     )
     return rrf_fuse(lex, vec, k=k)
 
@@ -1815,8 +1751,7 @@ def hybrid_recall_audit_demo(
 
     base, emb = _ensure_lsh_index(spark, sf_dir, rebuild)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # rerank pinned to "exact" — see hybrid_index_search_demo; graded
-    # at GRADED_MAX_DF_RATIO so lex_hits measures a POPULATED lexical
+    # graded at GRADED_MAX_DF_RATIO so lex_hits measures a POPULATED lexical
     # leg against semantic truth (round-9 verdict: at the old 0.5 the
     # leg was empty and lex_hits was trivially 0)
     vec = search_lsh_index(
@@ -1824,7 +1759,6 @@ def hybrid_recall_audit_demo(
         base,
         emb.where(F.col("vec_id") % query_mod == 0),
         k=leg_k,
-        rerank="exact",
     )
     return hybrid_recall_audit(
         docs, emb, vec, k=k, leg_k=leg_k, query_mod=query_mod,

@@ -70,11 +70,9 @@ def hybrid_serve_stream(
                 b.where(F.col("text").isNotNull()).select("doc_id", "text"),
                 k=leg_k,
             )
-            # rerank pinned to "exact": the auto gate sizes its tier
-            # estimate from the batch count, so micro-batching could
-            # otherwise change the tier — and last-ulp score order —
-            # relative to the one-shot oracle this face must hash-match
-            # (it also skips auto's two count jobs per micro-batch)
+            # the gate sizes its estimate from the batch count, so
+            # micro-batches may take a different plan form than the
+            # one-shot shape; every form scores bit-identically
             vec = search_lsh_index(
                 b.sparkSession,
                 lsh_index_path,
@@ -82,7 +80,6 @@ def hybrid_serve_stream(
                     F.col("doc_id").alias("vec_id"), "embedding"
                 ),
                 k=leg_k,
-                rerank="exact",
                 queries_pinned=True,
             )
             rrf_fuse(lex, vec, k=k).write.mode("append").parquet(out_path)

@@ -4,7 +4,7 @@ One process, one (or few) queries, N timed reps each through the noop
 sink — the tool every round's verdict-adjudication uses to decide
 "plan change or host noise?". Usage:
 
-    python scripts/probe_isolated.py ivf_index_dist [more_keys...]
+    python scripts/probe_isolated.py ivf_index_search [more_keys...]
 
 Env:
     SPARK_GRAFT_SF_DIR    fixture dir (default /root/testdata/sf0.1)

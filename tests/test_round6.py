@@ -260,10 +260,9 @@ def test_plan_only_construction_runs_no_jobs(spark, emb):
     sc = spark.sparkContext
     sc.setJobGroup("plan-only-probe", "plan-only construction")
     try:
-        # rerank='exact' skips the auto tier resolution's corpus count —
-        # rerank='auto' is eager BY DESIGN (it measures before choosing
-        # the tier), same as jaccard strategy='auto' below
+        # both tiers resolve to the exact kernel without counting
         ann_lsh_topk(emb, k=5, rerank="exact")
+        ann_lsh_topk(emb, k=5)
         # strategy='join' skips the auto gate's sketch probe — auto is
         # eager BY DESIGN (it measures before choosing the kernel)
         jaccard_formatted(docs, id_range=(0, 10_000), strategy="join")

@@ -566,8 +566,9 @@ def test_boilerplate_scrub_fully_scrubbed_doc_yields_empty_text(spark):
 
 
 def test_unknown_rerank_kind_refused(spark, emb_small, tmp_path):
-    """Unknown tiers, and the retired broadcast-matrix ``fast`` tier,
-    are refused by all four ANN entry points."""
+    """Unknown tiers, and the retired ``fast`` (broadcast matrix) and
+    ``dist`` (einsum kernel) tiers, are refused by all four ANN entry
+    points."""
     from jaccard_mapreduce_spark.operators.similarity import (
         ann_ivf_topk,
         ann_lsh_topk,
@@ -590,7 +591,7 @@ def test_unknown_rerank_kind_refused(spark, emb_small, tmp_path):
         lambda r: search_lsh_index(spark, lsh, emb_small, k=5, rerank=r),
     )
     for search in searches:
-        for rerank in ("blazing", "fast"):
+        for rerank in ("blazing", "fast", "dist"):
             with pytest.raises(ValueError, match="rerank"):
                 search(rerank)
 

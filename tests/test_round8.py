@@ -186,41 +186,26 @@ def test_zorder_demo_reuses_layout_across_calls(spark):
     assert sorted(first, key=key) == sorted(second, key=key)
 
 
-def _rank_rows(df):
-    return sorted(
-        (r.query_id, r.neighbor_id, r["rank"])
-        for r in df.select("query_id", "neighbor_id", "rank").collect()
-    )
-
-
-def test_dist_rerank_matches_exact_ranks(spark):
-    """The distributed bucket-local tier must reproduce the exact
-    tier's ranking bit-for-bit (same candidates via canonical-table
-    ownership, last-ulp score drift absorbed by the rank contract)."""
-    from jaccard_mapreduce_spark.operators.similarity import ann_lsh_topk
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    exact = _rank_rows(ann_lsh_topk(emb, k=10, rerank="exact"))
-    dist = _rank_rows(ann_lsh_topk(emb, k=10, rerank="dist"))
-    assert exact == dist
+def _full_rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
 def test_dist_rerank_block_decomposition_is_invisible(spark, monkeypatch):
     """Forcing a tiny block size splits every bucket into many
-    block-pair groups; the result must be identical — the hot-bucket
-    path may never change WHAT is scored, only WHERE."""
+    block-pair groups; the result must be identical, scores included —
+    the hot-bucket path may never change WHAT is scored, only WHERE."""
     import functools
 
     from jaccard_mapreduce_spark.operators import similarity as sim
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    base = _rank_rows(sim.ann_lsh_topk(emb, k=10, rerank="dist"))
+    base = _full_rows(sim.ann_lsh_topk(emb, k=10))
     monkeypatch.setattr(
         sim,
         "_score_bucket_local",
         functools.partial(sim._score_bucket_local, block_rows=8),
     )
-    blocked = _rank_rows(sim.ann_lsh_topk(emb, k=10, rerank="dist"))
+    blocked = _full_rows(sim.ann_lsh_topk(emb, k=10))
     assert base == blocked
 
 
@@ -256,62 +241,49 @@ def test_dist_rerank_scores_each_pair_exactly_once(spark):
 def test_dist_rerank_plan_has_no_dedup_aggregate(spark):
     """The ownership rewrite removed the post-kernel (query, neighbor)
     max-aggregate — the plan goes kernel -> window top-k with a
-    map-side WindowGroupLimit, and no partial_max anywhere."""
+    map-side WindowGroupLimit, no partial_max anywhere, and no
+    candidate self-join."""
     from jaccard_mapreduce_spark.operators.similarity import ann_lsh_topk
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    plan = ann_lsh_topk(emb, k=10, rerank="dist")._jdf.queryExecution().executedPlan().toString()
+    plan = ann_lsh_topk(emb, k=10)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
     assert "partial_max" not in plan
     assert "WindowGroupLimit" in plan
+    assert "SortMergeJoin" not in plan
 
 
-def test_stored_index_dist_matches_exact_both_families(spark, tmp_path):
-    """rerank='dist' served from the persisted layouts must reproduce
-    the exact tier's ranking — self-search AND a disjoint-id batch
-    against a smaller store (the serving shape)."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        build_ivf_index,
-        build_lsh_index,
-        search_ivf_index,
-        search_lsh_index,
-    )
+def test_stored_index_dist_matches_exact_both_families(
+    spark, tmp_path, monkeypatch
+):
+    """The stored-index kernel plan must reproduce the relational
+    plan's rows, scores included, on a disjoint-id batch against a
+    smaller store (the serving shape): the gates patched to 0 force the
+    kernel, patched past any estimate they force the relational plan."""
+    import jaccard_mapreduce_spark.sources.vector_index as V
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     store = emb.where("vec_id % 2 = 0")
     batch = emb.where("vec_id % 2 = 1")
-    build_ivf_index(store, str(tmp_path / "ivf"), n_cells=8)
-    build_lsh_index(store, str(tmp_path / "lsh"))
+    V.build_ivf_index(store, str(tmp_path / "ivf"), n_cells=8)
+    V.build_lsh_index(store, str(tmp_path / "lsh"))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
     for fam, search, kw in (
-        ("ivf", search_ivf_index, {"n_probe": 4}),
-        ("lsh", search_lsh_index, {}),
+        ("ivf", V.search_ivf_index, {"n_probe": 4}),
+        ("lsh", V.search_lsh_index, {}),
     ):
         base = str(tmp_path / fam)
-        exact = _rank_rows(search(spark, base, batch, k=5, **kw))
-        dist = _rank_rows(search(spark, base, batch, k=5, rerank="dist", **kw))
-        assert exact == dist, fam
-
-
-def test_stored_index_dist_refuses_mixed_id_types(spark, tmp_path):
-    """The dist kernels emit one id type for both columns, so a
-    string-id store probed by an int batch must refuse loudly (the
-    exact tier, which handles mixed types, stays available)."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        build_lsh_index,
-        search_lsh_index,
-    )
-
-    emb = spark.createDataFrame(
-        [(f"d{i}", [float(i % 7), 1.0, float(i % 3)]) for i in range(32)],
-        "vec_id string, embedding array<double>",
-    )
-    base = str(tmp_path / "lsh")
-    build_lsh_index(emb, base, dim=3)
-    batch = spark.createDataFrame(
-        [(1, [1.0, 1.0, 1.0])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="matching query/store id types"):
-        search_lsh_index(spark, base, batch, rerank="dist")
+        got = {}
+        for gate in (0, 10**18):
+            monkeypatch.setattr(V, "IVF_EXACT_KERNEL_MIN_PAIRS", gate)
+            monkeypatch.setattr(V, "LSH_EXACT_KERNEL_MIN_PAIRS", gate)
+            df = search(spark, base, batch, k=5, **kw)
+            assert ("FlatMapGroupsInPandas" in plan(df)) == (gate == 0), fam
+            got[gate] = _full_rows(df)
+        assert got[0] == got[10**18] and got[0], fam
 
 
 @pytest.mark.parametrize(
@@ -330,11 +302,12 @@ def test_stored_index_mixed_id_types_search_relationally(
     """A string-id store probed by a bigint-id batch takes the
     relational plan, whose self-pair compare runs on canonical string
     forms (a plain ``!=`` casts the string ids to bigint and throws).
-    ``auto`` must resolve there even when its estimate would pick the
-    dist tier, which refuses mixed id types."""
+    Mixed ids must resolve there even when the estimate picks the
+    kernel, which emits one id type for both columns."""
     import jaccard_mapreduce_spark.sources.vector_index as V
 
-    monkeypatch.setattr(V, "AUTO_DIST_PAIRS", 0)
+    monkeypatch.setattr(V, "LSH_EXACT_KERNEL_MIN_PAIRS", 0)
+    monkeypatch.setattr(V, "IVF_EXACT_KERNEL_MIN_PAIRS", 0)
     vecs = {f"d{i}": [float(i % 7), 1.0, float(i % 3)] for i in range(32)}
     emb = spark.createDataFrame(
         list(vecs.items()), "vec_id string, embedding array<double>"

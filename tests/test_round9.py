@@ -1,5 +1,5 @@
-"""Round-9 additions: rerank='auto' tier resolution, the dist tier's
-hot-bucket skew fixture, and the IVF cell kernel's block-grid
+"""Round-9 additions: the stored-index searches' auto gate, the LSH
+kernel's hot-bucket skew fixture, and the IVF cell kernel's block-grid
 decomposition (round-8 ADVICE, medium)."""
 
 from __future__ import annotations
@@ -15,64 +15,6 @@ def _rank_rows(df):
         (r.query_id, r.neighbor_id, r["rank"])
         for r in df.select("query_id", "neighbor_id", "rank").collect()
     )
-
-
-def test_auto_rerank_threshold_math():
-    from jaccard_mapreduce_spark.operators.similarity import (
-        AUTO_DIST_PAIRS,
-        _auto_rerank,
-    )
-
-    assert _auto_rerank(AUTO_DIST_PAIRS, AUTO_DIST_PAIRS) == "exact"
-    assert _auto_rerank(AUTO_DIST_PAIRS + 1, AUTO_DIST_PAIRS) == "dist"
-    assert _auto_rerank(0, 1000) == "exact"
-    assert _auto_rerank(1001, 1000) == "dist"
-
-
-def test_auto_resolves_exact_small_and_dist_past_threshold(spark):
-    """The default rerank='auto' still routes by the occupancy
-    estimate. Since the round-12 optimization BOTH resolved tiers run
-    the bucket-local group kernel (exact = hash-exact fold arithmetic,
-    dist = einsum), so the routing itself is asserted on _auto_rerank
-    and both plans must carry the kernel (the only join left in the
-    kernel path is the broadcast hot-bucket override join)."""
-    from jaccard_mapreduce_spark.operators.similarity import (
-        _auto_rerank,
-        ann_lsh_topk,
-    )
-
-    assert _auto_rerank(1_000, 16_000_000) == "exact"
-    assert _auto_rerank(1e9, 16_000_000) == "dist"
-
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    small = plan(ann_lsh_topk(emb, k=5))
-    assert "FlatMapGroupsInPandas" in small
-    assert "SortMergeJoin" not in small
-    routed = plan(ann_lsh_topk(emb, k=5, auto_dist_pairs=1000))
-    assert "FlatMapGroupsInPandas" in routed
-
-
-def test_auto_dist_matches_exact_ranks_both_families(spark):
-    """auto == the explicitly-chosen tier's output: with the threshold
-    lowered so auto routes to dist, the ranking must equal the exact
-    tier's (and transitively the explicit-dist entries', which the
-    graded lsh_dist_ranks / ivf_dist_ranks pin to the same oracle)."""
-    from jaccard_mapreduce_spark.operators.similarity import (
-        ann_ivf_topk,
-        ann_lsh_topk,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    assert _rank_rows(
-        ann_lsh_topk(emb, k=10, auto_dist_pairs=1000)
-    ) == _rank_rows(ann_lsh_topk(emb, k=10, rerank="exact"))
-    assert _rank_rows(
-        ann_ivf_topk(emb, k=10, auto_dist_pairs=1000)
-    ) == _rank_rows(ann_ivf_topk(emb, k=10, rerank="exact"))
 
 
 def test_index_search_auto_matches_exact(spark, tmp_path):
@@ -103,8 +45,8 @@ def test_skew_fixture_provably_crosses_block_threshold(spark):
     """The graded lsh_dist_skew entry's execution must actually
     decompose: at the graded sf0.01 scale, 1-plane tables concentrate
     ~n/2 vectors per bucket, far past the fixture's block_rows=64 —
-    and the decomposed ranking must equal the exact tier's at the same
-    deliberately-degenerate params."""
+    and the decomposed result must equal the undecomposed one, scores
+    included, at the same deliberately-degenerate params."""
     from jaccard_mapreduce_spark.operators.similarity import (
         _lsh_signature_expr,
         ann_lsh_topk,
@@ -126,11 +68,11 @@ def test_skew_fixture_provably_crosses_block_threshold(spark):
         f"{hottest} <= 64) — the graded entry would not exercise the "
         "decomposed path"
     )
-    skew = ann_lsh_topk(
-        emb, k=10, n_planes=1, n_tables=2, rerank="dist", block_rows=64
+    skew = ann_lsh_topk(emb, k=10, n_planes=1, n_tables=2, block_rows=64)
+    whole = ann_lsh_topk(emb, k=10, n_planes=1, n_tables=2)
+    assert sorted(map(tuple, skew.collect())) == sorted(
+        map(tuple, whole.collect())
     )
-    exact = ann_lsh_topk(emb, k=10, n_planes=1, n_tables=2, rerank="exact")
-    assert _rank_rows(skew) == _rank_rows(exact)
 
 
 def test_cell_kernel_block_grid_is_invisible(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from jaccard_mapreduce_spark.operators import similarity as S
 
@@ -57,6 +58,40 @@ def test_lsh_topk_subset_of_exact(spark, emb):
     assert len(approx) > 0
     for r in approx:
         assert exact[(r["query_id"], r["neighbor_id"])] == r["score"]
+
+
+def test_fold_kernels_bit_equal_relational_cosine(spark, emb, monkeypatch):
+    """The shared fold core's guards on the fixture's zero and opposite
+    vectors: every all-pairs kernel, split into 2-row blocks so
+    cross-block groups form, must bit-equal the relational form —
+    zero-norm pairs +0.0, the opposite pair exactly -1.0."""
+    monkeypatch.setattr(S, "ALLPAIRS_BLOCK_ROWS", 2)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    pairs = S.cosine_pairs(emb)
+    want_topk = rows(S._topk(pairs, 3))
+    assert rows(S.cosine_topk(emb, k=3)) == want_topk
+    assert rows(
+        S.exact_slice_topk(emb, F.lit(True), 3, min_kernel_pairs=0)
+    ) == want_topk
+    want_dups = rows(
+        pairs.where("query_id < neighbor_id AND score >= -1.0").select(
+            F.col("query_id").alias("vec_a"),
+            F.col("neighbor_id").alias("vec_b"),
+            "score",
+        )
+    )
+    got_dups = rows(S.embedding_duplicates(emb, min_cosine=-1.0))
+    assert got_dups == want_dups
+    scores = {(a, b): s for a, b, s in got_dups}
+    assert scores[(1, 4)] == -1.0
+    assert all(
+        math.copysign(1.0, s) == 1.0 and s == 0.0
+        for (a, b), s in scores.items()
+        if 5 in (a, b)
+    )
 
 
 def test_embedding_duplicates(spark, emb):
