@@ -154,7 +154,7 @@ def main() -> None:
         "lsh_index_retune",
         # the adjudication's second key (committed 3.42 vs probed 1.73)
         "hybrid_bm25_search",
-        # round-12 new/changed — mirrors entry._NEW_OR_CHANGED
+        # the round-12 registry additions and changes, kept in the timed core
         "ngram_contamination",
         "contamination_scrub",
         "phrase_search_guarded",
