@@ -95,11 +95,12 @@ def _resolve_rerank(
 
     ``kernel_min_pairs`` is the stored-index searches' gate: a search
     whose ``estimate`` (the caller's occupancy estimate of scored
-    candidate pairs; it runs count jobs and is evaluated once) is at or
-    below it takes the relational plan, whose per-pair fold beats the
-    kernel's fixed Arrow overhead at small volumes. The one-plan
-    searches pass ``None`` and always run the exact kernel without
-    counting anything.
+    candidate pairs, evaluated once; the store's sizes come from
+    parquet footers, and only the query batch is counted by a Spark
+    job) is at or below it takes the relational plan, whose per-pair
+    fold beats the kernel's fixed Arrow overhead at small volumes. The
+    one-plan searches pass ``None`` and always run the exact kernel
+    without counting anything.
 
     ``id_types`` is the stored-index searches' ``(query, store)`` id
     type pair. The kernels emit one id type for both columns, so a
@@ -934,39 +935,6 @@ def _lsh_sigs_kernel(v: DataFrame, tables: list[list[list[float]]]) -> DataFrame
     )
 
 
-def _distinct_directed_pairs(joined: DataFrame, packed: bool) -> DataFrame:
-    """Deduplicate the directed candidate pair relation
-    ``(a.vec_id, b.vec_id)`` — the dominant shuffle of every LSH-family
-    plan (collision multiplicity × bucket fanout rows in, one row per
-    distinct pair out). With ``packed`` (ids fit 31 bits) the pair is
-    packed into ONE long for the dedup and unpacked after: half the
-    shuffle bytes, a single-column hash dedup. The copy of the
-    pack/unpack for the directed ``vec_id`` pairs of the persisted-index
-    search's relational plan; ``dedup.py``'s undirected doc-pair
-    twin keeps its own regression-tested copy because its canonical
-    ``a < b`` direction and column names differ. The round-5 review
-    found that ``shiftleft`` on a 32-bit int column is a silent no-op
-    (Java masks the shift amount mod the operand width), so the cast
-    to long below is load-bearing and regression-tested."""
-    if packed:
-        return (
-            joined.select(
-                F.shiftleft(F.col("a.vec_id").cast("long"), 32)
-                .bitwiseOR(F.col("b.vec_id").cast("long"))
-                .alias("p")
-            )
-            .distinct()
-            .select(
-                F.shiftright(F.col("p"), 32).alias("query_id"),
-                F.col("p").bitwiseAND(F.lit((1 << 32) - 1)).alias("neighbor_id"),
-            )
-        )
-    return joined.select(
-        F.col("a.vec_id").alias("query_id"),
-        F.col("b.vec_id").alias("neighbor_id"),
-    ).distinct()
-
-
 def ann_lsh_topk(
     embeddings: DataFrame,
     k: int = 10,
@@ -1402,10 +1370,10 @@ def ann_ivf_topk(
 
     _resolve_rerank(rerank, ("auto", "exact"))
     v = vectors(embeddings, id_col, vec_col)
-    # training collects the tiny codebook to the driver (the MLlib loop
-    # shape) — pass prebuilt ``cents`` (cell_id, cvec, cnorm2) to keep
-    # plan construction fully lazy, e.g. a codebook read from a
-    # persisted index (ADVICE r5)
+    # training runs its k-means jobs while the plan is built (the MLlib
+    # loop shape); a prebuilt ``cents`` (cell_id, cvec, cnorm2), e.g. a
+    # codebook read from a persisted index, skips them. Construction is
+    # never fully lazy: ivf_assign collects the codebook either way
     if cents is None:
         cents = ivf_centroids(
             embeddings, n_cells, iters=iters, dim=dim,

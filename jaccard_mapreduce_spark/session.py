@@ -18,6 +18,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def host_driver_mem() -> str:
+    """The default driver heap: a quarter of the host's physical RAM,
+    at least 1 GiB."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, ram_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "jaccard_mapreduce_spark",
     master: str | None = None,
@@ -40,10 +47,7 @@ def get_spark(
         )
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-    if not driver_mem:
-        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
-        driver_mem = f"{max(1024, ram_mb // 4)}m"
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_mem()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         try:

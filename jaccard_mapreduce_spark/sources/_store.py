@@ -302,15 +302,19 @@ def _compact_datasets(
 
 def _parquet_files(spark: SparkSession, path: str):
     """FileStatus of every parquet data file under ``path``, recursing
-    into partition directories."""
+    into partition directories. Entries named ``_*`` or ``.*`` (an
+    in-flight write's ``_temporary``, checksums) are skipped, as
+    Spark's parquet reader skips them."""
     fs, hpath = _hadoop_fs(spark, path)
     stack = [hpath]
     while stack:
         for st in fs.listStatus(stack.pop()):
             name = st.getPath().getName()
+            if name.startswith(("_", ".")):
+                continue
             if st.isDirectory():
                 stack.append(st.getPath())
-            elif not name.startswith(("_", ".")) and name.endswith(".parquet"):
+            elif name.endswith(".parquet"):
                 yield st
 
 
@@ -337,3 +341,21 @@ def _parquet_footer_rows(spark: SparkSession, path: str) -> int:
         finally:
             reader.close()
     return int(total)
+
+
+def _tombstone_rows(spark: SparkSession, path: str) -> int:
+    """Exact number of tombstoned ids (one row per id) from footers;
+    0 on a store that never deleted."""
+    tomb = f"{path}/tombstones"
+    return _parquet_footer_rows(spark, tomb) if _fs_exists(spark, tomb) else 0
+
+
+def _live_rows(spark: SparkSession, path: str, name: str) -> int:
+    """Live row count of dataset ``name`` (one row per id) from parquet
+    footers alone: its rows minus the tombstoned ids. Every tombstone
+    names an id present in the dataset when it was deleted, so on a
+    store that keeps the id contract (no re-upsert of a tombstoned id)
+    this equals ``_read_live(...).count()`` with no Spark job."""
+    return _parquet_footer_rows(spark, f"{path}/{name}") - _tombstone_rows(
+        spark, path
+    )

@@ -103,6 +103,7 @@ from jaccard_mapreduce_spark.sources._store import (
     _read_live,
     _stage_tombstones,
     _swap,
+    _tombstone_rows,
 )
 
 
@@ -510,11 +511,7 @@ def lexical_store_stats(spark: SparkSession, path: str) -> dict:
         # compaction will physically remove) and the dead-occurrence
         # marker closing the positions invariant above; both 0 on a
         # store that never deleted
-        "n_tombstones": (
-            _parquet_footer_rows(spark, f"{path}/tombstones")
-            if _fs_exists(spark, f"{path}/tombstones")
-            else 0
-        ),
+        "n_tombstones": _tombstone_rows(spark, path),
         "n_dead_token_occurrences": _dead_tokens_marker(spark, path),
     }
     for name in ("postings", "df", "positions"):

@@ -60,9 +60,9 @@ from jaccard_mapreduce_spark.sources._store import (
     _fs_read_text,
     _fs_write_text,
     _read_live,
-    _read_tombstones,
     _swap,
     _tombstone_delete,
+    _tombstone_rows,
 )
 
 
@@ -494,8 +494,7 @@ def minhash_index_stats(spark: SparkSession, path: str) -> dict:
     out = dict(p)
     # LIVE relations (tombstones masked): occupancy is what probes pay
     out["n_docs"] = _read_live(spark, path, "signatures").count()
-    tomb = _read_tombstones(spark, path)
-    out["n_tombstones"] = 0 if tomb is None else tomb.count()
+    out["n_tombstones"] = _tombstone_rows(spark, path)
     occ = (
         _read_live(spark, path, "buckets")
         .groupBy("band", "bucket")

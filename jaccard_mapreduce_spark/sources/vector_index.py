@@ -54,7 +54,6 @@ from jaccard_mapreduce_spark.operators.similarity import (
     IVF_EXACT_KERNEL_MIN_PAIRS,
     LSH_EXACT_KERNEL_MIN_PAIRS,
     _cosine,
-    _distinct_directed_pairs,
     _dot,
     _lsh_sigs_kernel,
     _score_bipartite_local,
@@ -74,10 +73,12 @@ from jaccard_mapreduce_spark.sources._store import (
     _fs_delete,
     _fs_read_text,
     _fs_write_text,
+    _live_rows,
+    _parquet_footer_rows,
     _read_live,
-    _read_tombstones,
     _swap,
     _tombstone_delete,
+    _tombstone_rows,
 )
 
 # Compact stored form of the SQ8 scoring columns: the int8 codes plus
@@ -214,10 +215,11 @@ def search_ivf_index(
 
     def estimate() -> float:
         # occupancy estimate over the STORED layout: cells carries one
-        # row per indexed vector, the codebook one per cell — both
-        # counts are metadata-cheap parquet count-stars
-        n_cells = max(cents.count(), 1)
-        return queries.count() * n_probe * (cells.count() / float(n_cells))
+        # live row per indexed vector, the codebook one per cell — both
+        # read from parquet footers, no Spark job
+        n_cells = max(_parquet_footer_rows(spark, f"{path}/centroids"), 1)
+        n_live = _live_rows(spark, path, "cells")
+        return queries.count() * n_probe * (n_live / float(n_cells))
 
     # Round-13 batch-size gate (VERDICT item 1): small probing batches
     # take the relational cell join + interpreted fold (bit-identical;
@@ -495,7 +497,6 @@ def ivf_index_stats(spark: SparkSession, path: str) -> dict:
     compaction trigger (:func:`compact_ivf_index`)."""
     n_cells = spark.read.parquet(f"{path}/centroids").count()
     # LIVE cells (tombstones masked): occupancy is what searches pay
-    tomb = _read_tombstones(spark, path)
     occ = (
         _read_live(spark, path, "cells")
         .groupBy("cell_id")
@@ -515,7 +516,7 @@ def ivf_index_stats(spark: SparkSession, path: str) -> dict:
         "staleness": index_staleness(path, spark),
         # the delete path's observability (0 on a store that never
         # deleted): what the next compaction/retrain will fold away
-        "n_tombstones": 0 if tomb is None else tomb.count(),
+        "n_tombstones": _tombstone_rows(spark, path),
     }
     for name in ("centroids", "cells"):
         out[f"{name}_files"], _ = _count_parquet_files(
@@ -611,7 +612,6 @@ def lsh_index_stats(spark: SparkSession, path: str) -> dict:
         )
         .first()
     )
-    tomb = _read_tombstones(spark, path)
     out = {
         "n_tables": len(tables),
         "n_planes": len(tables[0]) if tables else 0,
@@ -620,7 +620,7 @@ def lsh_index_stats(spark: SparkSession, path: str) -> dict:
         "max_bucket_vectors": int(occ["mx"]) if occ["mx"] is not None else 0,
         # the delete path's observability (0 on a store that never
         # deleted): what the next compaction/retune will fold away
-        "n_tombstones": 0 if tomb is None else tomb.count(),
+        "n_tombstones": _tombstone_rows(spark, path),
     }
     for name in ("planes", "vectors", "signatures"):
         out[f"{name}_files"], _ = _count_parquet_files(
@@ -985,7 +985,6 @@ def search_lsh_index(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ids_fit_31_bits: bool | None = None,
     rerank: str = "auto",
     queries_pinned: bool = False,
 ) -> DataFrame:
@@ -1002,12 +1001,16 @@ def search_lsh_index(
     projection over the pinned query relation (no exchange before the join — the AQE
     single-partition trap :func:`search_ivf_index` had to repartition
     past cannot arise here), the candidate join is a hash shuffle on
-    ``(tbl, bucket)`` against the stored signature relation, the pair
-    ``distinct`` uses the packed-long fast path when ids fit 31 bits,
+    ``(tbl, bucket)`` against the stored signature relation, a plain
+    ``distinct`` dedups the directed ``(query_id, neighbor_id)`` pairs
+    (the plan only runs below the gate, where that shuffle is ~1 MB),
     and the exact rerank joins the skinny pair relation back to the
     pinned query vectors and the stored vector relation by id. Every
     stage shuffles on a real key; nothing data-sized is broadcast or
-    collected (the planes are KBs).
+    collected (the planes are KBs). The gate's occupancy estimate reads
+    the store's size from parquet footers; the only planning job over
+    data is the count of the query batch, which the search pins and
+    reads next anyway.
 
     Id contract: a candidate whose query id EQUALS a stored id is
     dropped (the self-pair exclusion the top-k semantics require when
@@ -1042,10 +1045,10 @@ def search_lsh_index(
 
     def estimate() -> float:
         # occupancy estimate over the STORED layout (n_tables · n_q ·
-        # n_i / 2^n_planes); both counts are metadata-cheap
+        # n_i / 2^n_planes); n_i is read from parquet footers
         n_planes = len(tables[0]) if tables else 1
         return len(tables) * qv.count() * (
-            stored_v.count() / float(2 ** min(n_planes, 62))
+            _live_rows(spark, path, "vectors") / float(2 ** min(n_planes, 62))
         )
 
     # Round-13 batch-size gate (VERDICT item 1): below the measured
@@ -1104,34 +1107,10 @@ def search_lsh_index(
         & (F.col("a.bucket") == F.col("b.bucket"))
         & _not_self_pair(q_type, s_type),
     )
-    _integral_types = ("tinyint", "smallint", "int", "bigint")
-    integral = (
-        q_type in _integral_types
-        # BOTH sides must be integral before the range probe runs: an
-        # index built with e.g. string vec_ids queried by an int batch
-        # would otherwise feed a string lo/hi into the `>= 0`
-        # comparison below and throw instead of falling back to the
-        # unpacked distinct
-        and s_type in _integral_types
-    )
-    if ids_fit_31_bits is None:
-        ids_fit_31_bits = False
-        # probe only when the types could pack at all; both sides must
-        # fit — the stored side's range rides along the (tiny) probe
-        # over the pinned query relation plus one agg over the stored
-        # vector ids
-        if integral:
-            q_rng = qv.agg(
-                F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
-            ).first()
-            i_rng = stored_v.agg(
-                F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
-            ).first()
-            ids_fit_31_bits = all(
-                r["lo"] is not None and r["lo"] >= 0 and r["hi"] < (1 << 31)
-                for r in (q_rng, i_rng)
-            )
-    cand = _distinct_directed_pairs(joined, integral and ids_fit_31_bits)
+    cand = joined.select(
+        F.col("a.vec_id").alias("query_id"),
+        F.col("b.vec_id").alias("neighbor_id"),
+    ).distinct()
     va = qv.alias("va")
     vb = stored_v.alias("vb")
     dot = _dot(F.col("va.vec"), F.col("vb.vec"))

@@ -73,14 +73,18 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from jaccard_mapreduce_spark.session import host_driver_mem
     from jaccard_mapreduce_spark.sources.tables import TABLE_NAMES
 
-    # deliberately minimal: master + memory only (memory affects
-    # survivability, not semantics); NO session.py confs
+    # deliberately minimal — the VIRGIN session of the module docstring:
+    # every conf that can change a plan stays at Spark's default (NO
+    # session.py confs, shuffle partitions included). Master and heap
+    # follow get_spark's host rule, every core and a quarter of
+    # physical RAM (memory affects survivability, not semantics)
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{os.cpu_count() or 1}]")
         .appName("driver-sim")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", host_driver_mem())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

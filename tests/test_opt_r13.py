@@ -138,7 +138,6 @@ def test_ownership_check_survives_20_planes(spark):
     candidate-distinct + join-backs + interpreted-fold plan bitwise."""
     from jaccard_mapreduce_spark.operators.similarity import (
         _cosine,
-        _distinct_directed_pairs,
         _dot,
         _lsh_sigs_kernel,
         _topk,
@@ -166,7 +165,10 @@ def test_ownership_check_survives_20_planes(spark):
         & (F.col("a.bucket") == F.col("b.bucket"))
         & (F.col("a.vec_id") != F.col("b.vec_id")),
     )
-    cand = _distinct_directed_pairs(joined, False)
+    cand = joined.select(
+        F.col("a.vec_id").alias("query_id"),
+        F.col("b.vec_id").alias("neighbor_id"),
+    ).distinct()
     va = v.alias("va")
     vb = v.alias("vb")
     dot = _dot(F.col("va.vec"), F.col("vb.vec"))

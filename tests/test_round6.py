@@ -317,26 +317,23 @@ def test_lsh_index_stores_the_plane_set_exactly(spark, emb, tmp_path):
     assert _stored_lsh_tables(spark, td) == lsh_tables(64)
 
 
-def test_lsh_index_packed_pairs_survive_int_typed_ids(spark, emb, tmp_path):
-    """The packed-long candidate dedup must not corrupt pairs when the
-    id column arrives as a 32-bit int (the round-5 shiftleft-masking
-    regression, now covered through the shared _distinct_directed_pairs
-    helper on the index path too)."""
+def test_lsh_index_int_typed_ids_match_bigint_search(spark, emb, tmp_path):
+    """A store built with 32-bit int ids and searched by an int batch
+    must serve exactly the rows of the bigint-typed store and batch —
+    the id type never changes a candidate, a score or a rank."""
     from jaccard_mapreduce_spark.sources.vector_index import (
         build_lsh_index,
         search_lsh_index,
     )
 
     emb_int = emb.withColumn("vec_id", F.col("vec_id").cast("int"))
-    td = str(tmp_path / "lsh")
-    build_lsh_index(emb_int, td)
-    packed = _collect_topk(
-        search_lsh_index(spark, td, emb_int, k=5, ids_fit_31_bits=True)
-    )
-    plain = _collect_topk(
-        search_lsh_index(spark, td, emb_int, k=5, ids_fit_31_bits=False)
-    )
-    assert packed == plain and len(packed) > 0
+    emb_long = emb.withColumn("vec_id", F.col("vec_id").cast("long"))
+    got = {}
+    for name, rel in (("int", emb_int), ("bigint", emb_long)):
+        td = str(tmp_path / name)
+        build_lsh_index(rel, td)
+        got[name] = _collect_topk(search_lsh_index(spark, td, rel, k=5))
+    assert got["int"] == got["bigint"] and len(got["int"]) > 0
 
 
 def test_lsh_index_serve_equals_batch_rows_of_self_search(spark, emb, tmp_path):
