@@ -84,7 +84,6 @@ def _resolve_rerank(
     allowed: tuple[str, ...],
     estimate: Callable[[], float] | None = None,
     kernel_min_pairs: int | None = None,
-    id_types: tuple[str, str] | None = None,
 ) -> str:
     """The one rerank-tier dispatch of the ANN family
     (``ann_lsh_topk``, ``ann_ivf_topk``, ``search_lsh_index``,
@@ -100,20 +99,15 @@ def _resolve_rerank(
     job) is at or below it takes the relational plan, whose per-pair
     fold beats the kernel's fixed Arrow overhead at small volumes. The
     one-plan searches pass ``None`` and always run the exact kernel
-    without counting anything.
-
-    ``id_types`` is the stored-index searches' ``(query, store)`` id
-    type pair. The kernels emit one id type for both columns, so a
-    mixed pair takes the relational plan (its self-pair compare handles
-    the mix)."""
+    without counting anything. The stored-index searches cast the
+    batch's and the store's ids to one type before they get here, so
+    every form runs in that one type."""
     if rerank not in allowed:
         raise ValueError(
             f"rerank must be one of {'/'.join(allowed)}, got {rerank!r}"
         )
     if rerank == "sq8":
         return "sq8"
-    if id_types is not None and id_types[0] != id_types[1]:
-        return "exact_relational"
     if kernel_min_pairs is None or estimate() > kernel_min_pairs:
         return "exact_kernel"
     return "exact_relational"

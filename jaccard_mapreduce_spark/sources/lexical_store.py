@@ -621,7 +621,6 @@ def stream_lexical_delete_demo(
     del_mod: int = 10,
     del_rem: int = 3,
     n_input_files: int = 3,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the streaming delete face: build on the base
     slice, upsert the rest (the full mutation prologue), then stream
@@ -668,7 +667,6 @@ def stream_lexical_delete_demo(
         spark,
         sf_dir,
         base_mod,
-        rebuild,
         suffix="_lex_del_stream",
         build=_build,
         tag_extra=f":sdel{del_mod}-{del_rem}x{n_input_files}",
@@ -704,7 +702,6 @@ def _ensure_lex_store(
     spark: SparkSession,
     sf_dir: str,
     base_mod: int = 4,
-    rebuild: bool = False,
     suffix: str = "_lex_store",
     build=None,
     tag_extra: str = "",
@@ -731,7 +728,6 @@ def _ensure_lex_store(
         suffix=suffix,
         required_dirs=["postings", "df", "positions"],
         build=build or _default_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}{tag_extra}:{_LEX_STORE_SCHEMA}",
         table="documents.parquet",
         required_files=("_n_docs", "_n_tokens"),
@@ -945,7 +941,6 @@ def lexical_store_prefix_demo(
     base_mod: int = 4,
     query_mod: int = 100,
     prefix_len: int = 4,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the store-served prefix search: the shared
     build-then-upsert store probed with each query doc's leading
@@ -957,7 +952,7 @@ def lexical_store_prefix_demo(
         leading_prefixes,
     )
 
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod, rebuild)
+    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
     res = search_lexical_store_prefix(
         spark,
         base,
@@ -982,7 +977,6 @@ def lexical_store_proximity_demo(
     query_mod: int = 100,
     n_terms: int = 3,
     slop: int = 2,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the store-served proximity search (round
     12): the shared build-then-upsert store probed with the query
@@ -995,7 +989,7 @@ def lexical_store_proximity_demo(
         leading_phrases,
     )
 
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod, rebuild)
+    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
     res = search_lexical_store_proximity(
         spark,
         base,
@@ -1021,7 +1015,6 @@ def lexical_store_phrase_demo(
     base_mod: int = 4,
     query_mod: int = 100,
     n_terms: int = 2,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the store-served phrase search (round 11):
     the shared build-then-upsert store probed with the query docs'
@@ -1034,7 +1027,7 @@ def lexical_store_phrase_demo(
         leading_phrases,
     )
 
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod, rebuild)
+    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
     res = search_lexical_store_phrase(
         spark,
         base,
@@ -1058,7 +1051,6 @@ def delete_scale_probe_demo(
     target_docs: int = 5_000,
     del_mod: int = 10,
     del_rem: int = 3,
-    rebuild: bool = False,
 ) -> DataFrame:
     """The DELETE path's ~10× scale probe (round 12 — the tombstone
     mask measured through the family's scale-probe discipline, not
@@ -1097,7 +1089,6 @@ def delete_scale_probe_demo(
     base, docs = _ensure_lex_store(
         spark,
         sf_dir,
-        rebuild=rebuild,
         suffix="_lex_del_scale",
         build=_build,
         tag_extra=f":target={target_docs}:del{del_mod}-{del_rem}",
@@ -1127,7 +1118,6 @@ def phrase_store_scale_probe_demo(
     query_mod: int = 100,
     n_terms: int = 2,
     target_docs: int = 5_000,
-    rebuild: bool = False,
 ) -> DataFrame:
     """The store-served phrase path's 10× scale probe (round 12 —
     round-11 verdict item 7: the one-plan phrase tier was measured at
@@ -1157,7 +1147,6 @@ def phrase_store_scale_probe_demo(
     base, docs = _ensure_lex_store(
         spark,
         sf_dir,
-        rebuild=rebuild,
         suffix="_lex_scale",
         build=_build,
         tag_extra=f":target={target_docs}",
@@ -1186,7 +1175,6 @@ def lexical_store_bm25_demo(
     k: int = 10,
     base_mod: int = 4,
     query_mod: int = 100,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the store-served BM25 (round 10): the shared
     build-then-upsert store probed under the tf-aware score must
@@ -1198,7 +1186,7 @@ def lexical_store_bm25_demo(
         GRADED_MAX_DF_RATIO,
     )
 
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod, rebuild)
+    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
     res = search_lexical_store_bm25(
         spark,
         base,
@@ -1219,7 +1207,6 @@ def lexical_store_search_demo(
     k: int = 10,
     base_mod: int = 4,
     query_mod: int = 100,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for exact incremental maintenance: build the
     store on the ``doc_id % base_mod != 0`` slice, UPSERT the rest,
@@ -1237,7 +1224,7 @@ def lexical_store_search_demo(
         GRADED_MAX_DF_RATIO,
     )
 
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod, rebuild)
+    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
     res = search_lexical_store(
         spark,
         base,
@@ -1258,7 +1245,6 @@ def _ensure_deleted_lex_store(
     base_mod: int,
     del_mod: int,
     del_rem: int,
-    rebuild: bool,
 ) -> tuple[str, DataFrame]:
     """Session-scoped store for the DELETE contract faces: build on
     the base slice, upsert the rest (the full mutation prologue), then
@@ -1293,7 +1279,6 @@ def _ensure_deleted_lex_store(
         spark,
         sf_dir,
         base_mod,
-        rebuild,
         suffix="_lex_store_del",
         build=_build,
         tag_extra=f":del{del_mod}-{del_rem}",
@@ -1308,7 +1293,6 @@ def lexical_store_delete_demo(
     query_mod: int = 100,
     del_mod: int = 10,
     del_rem: int = 3,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for MERGE-ON-READ deletion (round 12 — the
     mutation lifecycle's missing verb): build-then-upsert-then-DELETE,
@@ -1324,7 +1308,7 @@ def lexical_store_delete_demo(
     )
 
     base, docs = _ensure_deleted_lex_store(
-        spark, sf_dir, base_mod, del_mod, del_rem, rebuild
+        spark, sf_dir, base_mod, del_mod, del_rem
     )
     res = search_lexical_store(
         spark,
@@ -1351,7 +1335,6 @@ def lexical_store_delete_bm25_demo(
     query_mod: int = 100,
     del_mod: int = 10,
     del_rem: int = 3,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the delete contract's BM25 face: the same
     deleted store probed under the tf-aware score must match the
@@ -1365,7 +1348,7 @@ def lexical_store_delete_bm25_demo(
     )
 
     base, docs = _ensure_deleted_lex_store(
-        spark, sf_dir, base_mod, del_mod, del_rem, rebuild
+        spark, sf_dir, base_mod, del_mod, del_rem
     )
     res = search_lexical_store_bm25(
         spark,
@@ -1388,7 +1371,6 @@ def lexical_store_stats_demo(
     spark: SparkSession,
     sf_dir: str,
     base_mod: int = 4,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the lexical store's ops snapshot (round 10 —
     the fourth family joins the stats triad): the SQL-derivable slice
@@ -1409,7 +1391,7 @@ def lexical_store_stats_demo(
     double-counts the marker but not the distinct postings ids, and
     the disagreement becomes a failed grade instead of an invisible
     corruption (round-10 verdict item 6)."""
-    base, _docs = _ensure_lex_store(spark, sf_dir, base_mod, rebuild)
+    base, _docs = _ensure_lex_store(spark, sf_dir, base_mod)
     st = lexical_store_stats(spark, base)
     return spark.createDataFrame(
         [
@@ -1435,7 +1417,6 @@ def lexical_store_compact_demo(
     base_mod: int = 4,
     k: int = 10,
     query_mod: int = 100,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for postings compaction (round 10, completing
     the lexical lifecycle: build → search → upsert → stats → compact →
@@ -1460,7 +1441,7 @@ def lexical_store_compact_demo(
             assert after <= before or before <= 1, (name, before, after)
 
     base, docs = _ensure_lex_store(
-        spark, sf_dir, base_mod, rebuild, suffix="_lex_compact", build=_build
+        spark, sf_dir, base_mod, suffix="_lex_compact", build=_build
     )
     res = search_lexical_store(
         spark,
@@ -1486,7 +1467,6 @@ def stream_lexical_ingest_demo(
     k: int = 10,
     query_mod: int = 100,
     n_input_files: int = 3,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the streaming-ingest face (round 10 — the
     ``upsert_ivf_index_stream`` symmetry): build the store on the base
@@ -1527,7 +1507,6 @@ def stream_lexical_ingest_demo(
         spark,
         sf_dir,
         base_mod,
-        rebuild,
         suffix="_lex_stream",
         build=_build,
         tag_extra=f":files={n_input_files}",

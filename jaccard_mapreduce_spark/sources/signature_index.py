@@ -559,7 +559,6 @@ def _ensure_doc_index(
     sf_dir: str,
     suffix: str,
     build,
-    rebuild: bool = False,
     tag_extra: str = "",
 ) -> tuple[str, DataFrame]:
     """Documents face of the shared demo build-once gate — the
@@ -575,7 +574,6 @@ def _ensure_doc_index(
         suffix=suffix,
         required_dirs=["signatures", "buckets"],
         build=build,
-        rebuild=rebuild,
         tag_extra=tag_extra,
         table="documents.parquet",
         required_files=("_params",),
@@ -587,7 +585,6 @@ def dedup_incremental_demo(
     sf_dir: str,
     threshold: float = 0.7,
     base_mod: int = 5,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query: index the ``doc_id % base_mod != 0`` slice of the
     corpus, then dedup the remaining documents (the "new crawl batch")
@@ -603,7 +600,6 @@ def dedup_incremental_demo(
         sf_dir,
         suffix="_mh_incr",
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}",
     )
     return dedup_incremental(
@@ -617,7 +613,6 @@ def reband_minhash_index_demo(
     threshold: float = 0.7,
     base_mod: int = 3,
     initial_bands: int = 4,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the in-place band retune: build the store on
     the ``% base_mod != 0`` slice with a deliberately MIStuned banding
@@ -650,7 +645,6 @@ def reband_minhash_index_demo(
         sf_dir,
         suffix="_mh_reband",
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod},bands={initial_bands}->{new_bands}",
     )
     return dedup_incremental(
@@ -662,7 +656,6 @@ def minhash_index_stats_demo(
     spark: SparkSession,
     sf_dir: str,
     base_mod: int = 6,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the ops snapshot: build a store on the
     ``% base_mod != 0`` slice and return the SQL-derivable slice of
@@ -681,7 +674,6 @@ def minhash_index_stats_demo(
         sf_dir,
         suffix="_mh_stats",
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}",
     )
     st = minhash_index_stats(spark, base)
@@ -706,7 +698,6 @@ def minhash_index_upsert_demo(
     threshold: float = 0.7,
     base_mod: int = 7,
     batch_mod: int = 10,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for append-invisibility: build the store on the
     ``% base_mod != 0`` slice, UPSERT the rest, then dedup a
@@ -728,7 +719,6 @@ def minhash_index_upsert_demo(
         sf_dir,
         suffix="_mh_upsert",
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}",
     )
     return dedup_incremental(
@@ -744,7 +734,6 @@ def minhash_index_delete_demo(
     batch_mod: int = 10,
     del_mod: int = 9,
     del_rem: int = 2,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for MERGE-ON-READ deletion on the dedup store
     (round 12 — the delete lens's third index family):
@@ -773,7 +762,6 @@ def minhash_index_delete_demo(
         sf_dir,
         suffix="_mh_del",
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}:del{del_mod}-{del_rem}",
     )
     res = dedup_incremental(

@@ -44,9 +44,10 @@ import re
 import shutil
 import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jaccard_mapreduce_spark.operators.jaccard import _integral_id
 from jaccard_mapreduce_spark.operators.similarity import (
     DEFAULT_IVF_CELLS,
     DEFAULT_IVF_ITERS,
@@ -61,7 +62,6 @@ from jaccard_mapreduce_spark.operators.similarity import (
     _score_cell_sq8_local,
     _resolve_rerank,
     _sq8_enrich,
-    _sq8_pair_score,
     _topk,
     ivf_assign,
     ivf_centroids,
@@ -185,16 +185,23 @@ def search_ivf_index(
     bandwidth the SQ8 tier exists for, realized in the layout. Query-
     side quantization is the same per-row projection computed on the
     fly (quantization is per-vector and data-independent, so on-the-fly
-    query codes equal stored ones), and the score expression is the
-    one-plan tier's own (:func:`_sq8_pair_score`) — a self-search must
-    value-hash-match ``ann_sq8_topk`` over the same codebook, the
-    graded ``ivf_index_sq8`` contract. Scores carry quantization error
-    by design; ``sq8_rank_audit`` measures what that costs."""
+    query codes equal stored ones). The scores always come from the
+    cell-local SQ8 kernel (:func:`_score_cell_sq8_local`), which
+    ``test_opt_r12`` pins to the one-plan tier's score expression
+    (:func:`_sq8_pair_score`) — a self-search must value-hash-match
+    ``ann_sq8_topk`` over the same codebook, the graded
+    ``ivf_index_sq8`` contract. Scores carry quantization error by
+    design; ``sq8_rank_audit`` measures what that costs.
+
+    Ids follow :func:`search_lsh_index`'s contract, type rule
+    included."""
     cents = spark.read.parquet(f"{path}/centroids")
     # tombstone-masked (merge-on-read deletes): every rerank tier
     # consumes this relation, so masking here covers all branches
     cells = _read_live(spark, path, "cells")
-    qv = vectors(queries, id_col, vec_col)
+    q_type, s_type, id_type = _one_id_type(queries, id_col, cells)
+    cells = _with_id_type(cells, id_type)
+    qv = _with_id_type(vectors(queries, id_col, vec_col), id_type)
     # The explicit (cell_id, vec_id) repartition is the load-bearing
     # line: the assignment's rank-window exchange hash-partitions by
     # vec_id, AQE coalesces that tiny post-shuffle relation to ONE
@@ -210,8 +217,6 @@ def search_ivf_index(
     # same line is the right shape anyway: it spreads each cell's
     # query load across the cluster instead of one task per cell.
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    q_type = queries.schema[id_col].dataType.simpleString()
-    s_type = cells.schema["vec_id"].dataType.simpleString()
 
     def estimate() -> float:
         # occupancy estimate over the STORED layout: cells carries one
@@ -229,7 +234,6 @@ def search_ivf_index(
         ("auto", "exact", "sq8"),
         estimate,
         kernel_min_pairs=IVF_EXACT_KERNEL_MIN_PAIRS,
-        id_types=(q_type, s_type),
     )
     from jaccard_mapreduce_spark.operators._cache import pin as _pin
 
@@ -258,97 +262,112 @@ def search_ivf_index(
             "vec_id", "vec", "norm2", "cell_id", F.lit("i").alias("role")
         )
         assigned = qside.unionByName(iside)
-        return _topk(_score_cell_local(assigned, q_type, local_k=k), k)
-    if form == "sq8":
+        scored = _score_cell_local(assigned, id_type, local_k=k)
+    elif form == "sq8":
         if "qcode" not in cells.columns:
             raise ValueError(
                 "rerank='sq8': this index was built without stored SQ8 "
                 "codes (pre-round-8 layout); rebuild it with "
                 "build_ivf_index to add them"
             )
-        if q_type == s_type:
-            # Optimization round 12: cell-local SQ8 kernel (hash-exact
-            # — order-free integer code dot + the pinned float
-            # combination), replacing the relational cell join's
-            # per-pair interpreted fold. Query-side enrichment runs on
-            # the |batch|-row relation and rides through the
-            # assignment kernel; the store side is pruned to probed
-            # cells by a broadcast semi-join on the partition column
-            # (runtime partition pruning, the same store-slice bound
-            # the old plan's DPP subquery gave — with the pin still
-            # keeping that subquery from re-running the query side).
-            qa = _pin(ivf_assign(_sq8_enrich(qv), cents, n_probe))
-            sq8_cols = ["vec_id", "scale", "zp", "qs", "qsum", "d",
-                        "qnorm2"]
-            q_side = qa.select(
-                *sq8_cols,
-                F.lit(0).alias("tbl"),
-                F.col("cell_id").alias("bucket"),
-                F.lit("q").alias("role"),
-            )
-            probed_cells = qa.select("cell_id").distinct()
-            i_side = _restore_sq8(cells).join(
-                F.broadcast(probed_cells), "cell_id", "left_semi"
-            ).select(
-                *sq8_cols,
-                F.lit(0).alias("tbl"),
-                F.col("cell_id").alias("bucket"),
-                F.lit("i").alias("role"),
-            )
-            sv = q_side.unionByName(i_side)
-            return _topk(
-                _score_cell_sq8_local(sv, q_type, local_k=k)
-                .withColumnRenamed("score_sq8", "score"),
-                k,
-            )
-        # mixed query/store id types: relational fallback (the kernel
-        # needs one id type)
-        qa = _sq8_enrich(ivf_assign(qv, cents, n_probe))
-        b = _restore_sq8(cells)
-        score = _sq8_pair_score()
-    else:
-        # exact relational plan — mixed-id-type searches AND small
-        # probing batches under the round-13 gate: the relational cell
-        # join with the interpreted fold (the ONE authoritative
-        # cosine-with-zero-norm guard — any divergence from
-        # ann_ivf_topk's kernel would break the layout-invisibility
-        # hash-parity contract)
-        qa = ivf_assign(qv, cents, n_probe)
-        b = cells
-        score = _cosine(
-            _dot(F.col("a.vec"), F.col("b.vec")),
-            F.col("a.norm2"),
-            F.col("b.norm2"),
+        # Optimization round 12: cell-local SQ8 kernel (hash-exact —
+        # order-free integer code dot + the pinned float combination),
+        # replacing the relational cell join's per-pair interpreted
+        # fold. Query-side enrichment runs on the |batch|-row relation
+        # and rides through the assignment kernel; the store side is
+        # pruned to probed cells by a broadcast semi-join on the
+        # partition column (runtime partition pruning, the same
+        # store-slice bound the old plan's DPP subquery gave — with the
+        # pin still keeping that subquery from re-running the query
+        # side).
+        qa = _pin(ivf_assign(_sq8_enrich(qv), cents, n_probe))
+        sq8_cols = ["vec_id", "scale", "zp", "qs", "qsum", "d", "qnorm2"]
+        q_side = qa.select(
+            *sq8_cols,
+            F.lit(0).alias("tbl"),
+            F.col("cell_id").alias("bucket"),
+            F.lit("q").alias("role"),
         )
-    # pinned for the DPP double-compute reason (the pruning subquery
-    # re-ran the assignment); the (cell_id, vec_id) repartition is the
-    # AQE single-partition fix explained above
-    qa = _pin(qa).repartition(n_shuffle, "cell_id", "vec_id").alias("a")
-    scored = qa.join(
-        b.alias("b"),
-        (F.col("a.cell_id") == F.col("b.cell_id"))
-        & _not_self_pair(q_type, s_type),
-    ).select(
-        F.col("a.vec_id").alias("query_id"),
-        F.col("b.vec_id").alias("neighbor_id"),
-        score.alias("score"),
-    )
-    return _topk(scored, k)
+        probed_cells = qa.select("cell_id").distinct()
+        i_side = _restore_sq8(cells).join(
+            F.broadcast(probed_cells), "cell_id", "left_semi"
+        ).select(
+            *sq8_cols,
+            F.lit(0).alias("tbl"),
+            F.col("cell_id").alias("bucket"),
+            F.lit("i").alias("role"),
+        )
+        sv = q_side.unionByName(i_side)
+        scored = _score_cell_sq8_local(
+            sv, id_type, local_k=k
+        ).withColumnRenamed("score_sq8", "score")
+    else:
+        # exact relational plan for small probing batches under the
+        # round-13 gate: the relational cell join with the interpreted
+        # fold (the ONE authoritative cosine-with-zero-norm guard — any
+        # divergence from ann_ivf_topk's kernel would break the
+        # layout-invisibility hash-parity contract). Pinned for the DPP
+        # double-compute reason (the pruning subquery re-ran the
+        # assignment); the (cell_id, vec_id) repartition is the AQE
+        # single-partition fix explained above.
+        qa = _pin(ivf_assign(qv, cents, n_probe))
+        qa = qa.repartition(n_shuffle, "cell_id", "vec_id").alias("a")
+        scored = qa.join(
+            cells.alias("b"),
+            (F.col("a.cell_id") == F.col("b.cell_id"))
+            & (F.col("a.vec_id") != F.col("b.vec_id")),
+        ).select(
+            F.col("a.vec_id").alias("query_id"),
+            F.col("b.vec_id").alias("neighbor_id"),
+            _cosine(
+                _dot(F.col("a.vec"), F.col("b.vec")),
+                F.col("a.norm2"),
+                F.col("b.norm2"),
+            ).alias("score"),
+        )
+    return _typed_topk(scored, k, q_type, s_type)
 
 
-def _not_self_pair(q_type: str, s_type: str) -> Column:
-    """The self-pair exclusion of the relational index plans, over the
-    ``a`` (query) and ``b`` (store) join sides. With mixed id types
-    (e.g. a string-id index probed by an int batch) Spark's implicit
-    coercion would cast the string side to bigint inside the ``!=`` and
-    throw CAST_INVALID_INPUT on any non-numeric id, so the canonical
-    string forms are compared instead (a cross-type id can only be a
-    self-pair if its string form matches, which is the identity a mixed
-    deployment means)."""
+def _one_id_type(
+    queries: DataFrame, id_col: str, store: DataFrame
+) -> tuple[str, str, str]:
+    """``(batch type, store type, search type)`` of a stored-index
+    search's ids. Equal types search as they are; two integral types
+    search as ``bigint``; an integral batch against a ``string`` store
+    searches as ``string`` (two ids are then a self-pair exactly when
+    their string forms match). Any other pair is refused: the kernels'
+    local top-k breaks ties in id order, which one search type could
+    not keep for both sides."""
+    q_type = queries.schema[id_col].dataType.simpleString()
+    s_type = store.schema["vec_id"].dataType.simpleString()
     if q_type == s_type:
-        return F.col("a.vec_id") != F.col("b.vec_id")
-    return F.col("a.vec_id").cast("string") != F.col("b.vec_id").cast(
-        "string"
+        return q_type, s_type, q_type
+    if _integral_id(queries, id_col):
+        if _integral_id(store, "vec_id"):
+            return q_type, s_type, "bigint"
+        if s_type == "string":
+            return q_type, s_type, "string"
+    raise ValueError(
+        f"stored-index search: a batch with {q_type} ids cannot search "
+        f"a store with {s_type} ids"
+    )
+
+
+def _with_id_type(df: DataFrame, id_type: str) -> DataFrame:
+    return df.withColumn("vec_id", F.col("vec_id").cast(id_type))
+
+
+def _typed_topk(scored: DataFrame, k: int, q_type: str, s_type: str) -> DataFrame:
+    """:func:`_topk` of a stored-index search, with ``query_id`` cast
+    back to the batch's id type and ``neighbor_id`` to the store's
+    (same-type casts fold away in the optimizer)."""
+    return _topk(
+        scored.select(
+            F.col("query_id").cast(q_type).alias("query_id"),
+            F.col("neighbor_id").cast(s_type).alias("neighbor_id"),
+            "score",
+        ),
+        k,
     )
 
 
@@ -897,7 +916,6 @@ def lsh_index_compact_demo(
     spark: SparkSession,
     sf_dir: str,
     base_mod: int = 5,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for compaction: build on the base slice, upsert
     the newcomers (two file generations per dataset), COMPACT, then
@@ -920,7 +938,6 @@ def lsh_index_compact_demo(
         suffix="_lsh_compact",
         required_dirs=["planes", "vectors", "signatures"],
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}",
     )
     return search_lsh_index(spark, base, emb)
@@ -930,7 +947,6 @@ def ivf_index_compact_demo(
     spark: SparkSession,
     sf_dir: str,
     base_mod: int = 5,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query closing the IVF lifecycle's one ungraded face
     (round-9 verdict item 2 — its LSH twin ``lsh_index_compact`` has
@@ -959,7 +975,6 @@ def ivf_index_compact_demo(
         suffix="_ivf_compact",
         required_dirs=["centroids", "cells"],
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}",
     )
     return search_ivf_index(spark, base, emb)
@@ -995,8 +1010,8 @@ def search_lsh_index(
     equals the indexed set the result must value-hash-match it — the
     layout-invisibility contract, same as the IVF twin).
 
-    Plan shape of the relational form (small batches and mixed id
-    types; large batches run the bucket-local kernel — see
+    Plan shape of the relational form (small batches only; large
+    batches run the bucket-local kernel — see
     :func:`_resolve_rerank`): query signatures are a pure
     projection over the pinned query relation (no exchange before the join — the AQE
     single-partition trap :func:`search_ivf_index` had to repartition
@@ -1017,17 +1032,29 @@ def search_lsh_index(
     the query set is drawn from the corpus — the graded shapes). A
     batch of genuinely NEW vectors must therefore use ids disjoint
     from the indexed set, or stored vector X would silently never
-    appear among query X's neighbors."""
+    appear among query X's neighbors. The search runs in one id type
+    (:func:`_one_id_type`): the batch's and the store's when they
+    are equal, ``bigint`` when both are integral, ``string`` for an
+    integral batch against a ``string`` store; any other pair raises
+    ``ValueError``. ``query_id`` keeps the batch's id type and
+    ``neighbor_id`` the store's."""
     from jaccard_mapreduce_spark.operators._cache import pin
 
     tables = _stored_lsh_tables(spark, path)
+    # tombstone-masked reads (merge-on-read deletes): every rerank
+    # tier consumes these two relations, so masking here covers all
+    # branches; a store that never deleted reads them untouched
+    stored_v = _read_live(spark, path, "vectors")
+    q_type, s_type, id_type = _one_id_type(queries, id_col, stored_v)
+    stored_v = _with_id_type(stored_v, id_type)
+    sig_i = _with_id_type(_read_live(spark, path, "signatures"), id_type)
+    qv = _with_id_type(vectors(queries, id_col, vec_col), id_type)
     # queries_pinned=True: the caller already persists the batch (the
     # streaming serve pins each micro-batch and unpersists it after the
     # write — an internal pin here would accumulate one cache entry per
     # batch forever on a 24/7 stream); the multiply-consumed projection
     # then recomputes from the caller's cached rows, which is the cheap
     # direction
-    qv = vectors(queries, id_col, vec_col)
     if not queries_pinned:
         qv = pin(qv)
     # signatures via the vectorized kernel (optimization round 12 —
@@ -1035,13 +1062,6 @@ def search_lsh_index(
     sig_q = _lsh_sigs_kernel(qv, tables).select(
         "vec_id", F.posexplode("sigs").alias("tbl", "bucket")
     )
-    # tombstone-masked reads (merge-on-read deletes): every rerank
-    # tier consumes these two relations, so masking here covers all
-    # branches; a store that never deleted reads them untouched
-    sig_i = _read_live(spark, path, "signatures")
-    stored_v = _read_live(spark, path, "vectors")
-    q_type = queries.schema[id_col].dataType.simpleString()
-    s_type = stored_v.schema["vec_id"].dataType.simpleString()
 
     def estimate() -> float:
         # occupancy estimate over the STORED layout (n_tables · n_q ·
@@ -1064,7 +1084,6 @@ def search_lsh_index(
         ("auto", "exact"),
         estimate,
         kernel_min_pairs=LSH_EXACT_KERNEL_MIN_PAIRS,
-        id_types=(q_type, s_type),
     )
     if form == "exact_kernel":
         # bucket-local distributed rerank against the stored corpus:
@@ -1098,32 +1117,35 @@ def search_lsh_index(
             "left_semi",
         )
         sv = q_side.unionByName(i_side)
-        return _topk(_score_bipartite_local(sv, q_type, local_k=k), k)
-    a = sig_q.alias("a")
-    b = sig_i.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.tbl") == F.col("b.tbl"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & _not_self_pair(q_type, s_type),
-    )
-    cand = joined.select(
-        F.col("a.vec_id").alias("query_id"),
-        F.col("b.vec_id").alias("neighbor_id"),
-    ).distinct()
-    va = qv.alias("va")
-    vb = stored_v.alias("vb")
-    dot = _dot(F.col("va.vec"), F.col("vb.vec"))
-    scored = (
-        cand.join(va, cand.query_id == F.col("va.vec_id"))
-        .join(vb, cand.neighbor_id == F.col("vb.vec_id"))
-        .select(
-            F.col("va.vec_id").alias("query_id"),
-            F.col("vb.vec_id").alias("neighbor_id"),
-            _cosine(dot, F.col("va.norm2"), F.col("vb.norm2")).alias("score"),
+        scored = _score_bipartite_local(sv, id_type, local_k=k)
+    else:
+        a = sig_q.alias("a")
+        b = sig_i.alias("b")
+        joined = a.join(
+            b,
+            (F.col("a.tbl") == F.col("b.tbl"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.vec_id") != F.col("b.vec_id")),
         )
-    )
-    return _topk(scored, k)
+        cand = joined.select(
+            F.col("a.vec_id").alias("query_id"),
+            F.col("b.vec_id").alias("neighbor_id"),
+        ).distinct()
+        va = qv.alias("va")
+        vb = stored_v.alias("vb")
+        dot = _dot(F.col("va.vec"), F.col("vb.vec"))
+        scored = (
+            cand.join(va, cand.query_id == F.col("va.vec_id"))
+            .join(vb, cand.neighbor_id == F.col("vb.vec_id"))
+            .select(
+                F.col("va.vec_id").alias("query_id"),
+                F.col("vb.vec_id").alias("neighbor_id"),
+                _cosine(dot, F.col("va.norm2"), F.col("vb.norm2")).alias(
+                    "score"
+                ),
+            )
+        )
+    return _typed_topk(scored, k, q_type, s_type)
 
 
 def _ensure_index(
@@ -1132,7 +1154,6 @@ def _ensure_index(
     suffix: str,
     required_dirs: list[str],
     build,
-    rebuild: bool = False,
     tag_extra: str = "",
     table: str = "embeddings.parquet",
     required_files: tuple[str, ...] = (),
@@ -1176,7 +1197,7 @@ def _ensure_index(
         with open(marker) as fh:
             built = fh.read() == tag
     rel = spark.read.parquet(f"{sf_dir}/{table}")
-    if rebuild or not built:
+    if not built:
         shutil.rmtree(base, ignore_errors=True)
         build(rel, base)
         with open(marker, "w") as fh:
@@ -1188,7 +1209,6 @@ def lsh_index_upsert_demo(
     spark: SparkSession,
     sf_dir: str,
     base_mod: int = 5,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for incremental LSH maintenance: build the index
     on the BASE slice (``vec_id % base_mod != 0``), upsert the
@@ -1212,14 +1232,13 @@ def lsh_index_upsert_demo(
         suffix="_lsh_upsert",
         required_dirs=["planes", "vectors", "signatures"],
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}",
     )
     return search_lsh_index(spark, base, emb)
 
 
 def _ensure_lsh_index(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
+    spark: SparkSession, sf_dir: str
 ) -> tuple[str, DataFrame]:
     return _ensure_index(
         spark,
@@ -1227,13 +1246,10 @@ def _ensure_lsh_index(
         suffix="_lsh",
         required_dirs=["planes", "vectors", "signatures"],
         build=build_lsh_index,
-        rebuild=rebuild,
     )
 
 
-def lsh_index_search_demo(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
+def lsh_index_search_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract query: persist the LSH index into session scratch,
     self-search it, return the top-k relation. Must value-hash-match
     the one-plan ``ann_lsh_topk`` oracle (same planes — the stored
@@ -1255,7 +1271,7 @@ def lsh_index_search_demo(
     16×n expansion is never recomputed), and that saving scales with
     corpus size while the self-search saving does not. The graded
     :func:`lsh_index_serve_demo` pins that serving shape's semantics."""
-    base, emb = _ensure_lsh_index(spark, sf_dir, rebuild)
+    base, emb = _ensure_lsh_index(spark, sf_dir)
     return search_lsh_index(spark, base, emb)
 
 
@@ -1266,7 +1282,6 @@ def lsh_index_delete_demo(
     query_mod: int = 10,
     del_mod: int = 7,
     del_rem: int = 1,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for MERGE-ON-READ deletion on the vector side
     (round 12 — the lexical store's delete lens applied to the LSH
@@ -1299,7 +1314,6 @@ def lsh_index_delete_demo(
         suffix="_lsh_del",
         required_dirs=["planes", "vectors", "signatures"],
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"del{del_mod}-{del_rem}",
     )
     res = search_lsh_index(
@@ -1321,7 +1335,6 @@ def lsh_index_serve_demo(
     spark: SparkSession,
     sf_dir: str,
     query_mod: int = 10,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the SERVING shape: a deterministic query
     batch (``vec_id % query_mod == 0`` — the recall audits' sampling
@@ -1335,14 +1348,12 @@ def lsh_index_serve_demo(
     at a fraction of the cost (the batch computes n_tables signatures
     per query vector; the corpus's n_tables×n expansion is read, not
     recomputed)."""
-    base, emb = _ensure_lsh_index(spark, sf_dir, rebuild)
+    base, emb = _ensure_lsh_index(spark, sf_dir)
     batch = emb.where(F.col("vec_id") % int(query_mod) == 0)
     return search_lsh_index(spark, base, batch)
 
 
-def ivf_index_search_demo(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
+def ivf_index_search_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract query: build the index into session scratch, self-search
     it, return the top-k relation. Must value-hash-match the
     train-and-search ``ann_ivf_topk`` oracle — proving the persisted
@@ -1357,22 +1368,18 @@ def ivf_index_search_demo(
     (measured at sf0.1: build+search pays the training loop + the
     partitioned write on the first call; search-only settles at
     ~2.0 s — vs 3.9 s for the train-and-search-in-one-plan
-    ``ann_ivf_topk``, so the amortization is real). ``rebuild=True``
-    forces a fresh build."""
+    ``ann_ivf_topk``, so the amortization is real)."""
     base, emb = _ensure_index(
         spark,
         sf_dir,
         suffix="",
         required_dirs=["centroids", "cells"],
         build=build_ivf_index,
-        rebuild=rebuild,
     )
     return search_ivf_index(spark, base, emb)
 
 
-def ivf_index_sq8_demo(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
+def ivf_index_sq8_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract query for the SQ8 serving path: self-search the
     persisted index with ``rerank="sq8"`` — the rerank reads the STORED
     1-byte codes, never the float vectors. Must value-hash-match the
@@ -1388,7 +1395,6 @@ def ivf_index_sq8_demo(
         suffix="",
         required_dirs=["centroids", "cells"],
         build=build_ivf_index,
-        rebuild=rebuild,
     )
     return search_ivf_index(spark, base, emb, rerank="sq8")
 
@@ -1397,7 +1403,6 @@ def ivf_index_serve_demo(
     spark: SparkSession,
     sf_dir: str,
     query_mod: int = 10,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the IVF SERVING shape — the missing symmetric
     twin of :func:`lsh_index_serve_demo` (round 9): a deterministic
@@ -1418,15 +1423,12 @@ def ivf_index_serve_demo(
         suffix="",
         required_dirs=["centroids", "cells"],
         build=build_ivf_index,
-        rebuild=rebuild,
     )
     batch = emb.where(F.col("vec_id") % int(query_mod) == 0)
     return search_ivf_index(spark, base, batch)
 
 
-def lsh_index_retune_demo(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
+def lsh_index_retune_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract query for the retune face (round 9): build the stored
     index at a deliberately MISTUNED hash width (1 plane × 2 tables —
     two half-corpus buckets per table, the skew fixture's degenerate
@@ -1449,7 +1451,6 @@ def lsh_index_retune_demo(
         suffix="_retune",
         required_dirs=["planes", "vectors", "signatures"],
         build=_build,
-        rebuild=rebuild,
     )
     return search_lsh_index(spark, base, emb)
 
@@ -1458,7 +1459,6 @@ def ivf_index_retrain_demo(
     spark: SparkSession,
     sf_dir: str,
     base_mod: int = 5,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the retrain face (round 9): build the index
     on the BASE slice, upsert the newcomers (codebook now trained on a
@@ -1485,7 +1485,6 @@ def ivf_index_retrain_demo(
         suffix="_retrain",
         required_dirs=["centroids", "cells"],
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}",
     )
     return search_ivf_index(spark, base, emb)
@@ -1498,7 +1497,6 @@ def ivf_index_delete_demo(
     query_mod: int = 10,
     del_mod: int = 7,
     del_rem: int = 1,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for MERGE-ON-READ deletion under a HELD-FIXED
     codebook (round 12 — the delete lens's fourth and last mutable
@@ -1530,7 +1528,6 @@ def ivf_index_delete_demo(
         suffix="_ivf_del",
         required_dirs=["centroids", "cells"],
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}:del{del_mod}-{del_rem}",
     )
     res = search_ivf_index(
@@ -1552,7 +1549,6 @@ def ivf_index_upsert_demo(
     spark: SparkSession,
     sf_dir: str,
     base_mod: int = 5,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for incremental maintenance: build the index on
     the BASE slice (``vec_id % base_mod != 0``), upsert the newcomers
@@ -1578,15 +1574,12 @@ def ivf_index_upsert_demo(
         suffix="_upsert",
         required_dirs=["centroids", "cells"],
         build=_build,
-        rebuild=rebuild,
         tag_extra=f"base_mod={base_mod}",
     )
     return search_ivf_index(spark, base, emb)
 
 
-def ivf_index_stats_demo(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
+def ivf_index_stats_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract query for the IVF ops snapshot (round 9 — the stats
     triad's IVF face): return the SQL-derivable slice of
     :func:`ivf_index_stats` over the shared session index as one row —
@@ -1605,7 +1598,6 @@ def ivf_index_stats_demo(
         suffix="",
         required_dirs=["centroids", "cells"],
         build=build_ivf_index,
-        rebuild=rebuild,
     )
     st = ivf_index_stats(spark, base)
     return spark.createDataFrame(
@@ -1623,9 +1615,7 @@ def ivf_index_stats_demo(
     )
 
 
-def lsh_index_stats_demo(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
+def lsh_index_stats_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract query for the LSH ops snapshot (round 9 — the stats
     triad's LSH face): the SQL-derivable slice of
     :func:`lsh_index_stats` over the shared session index as one row —
@@ -1635,7 +1625,7 @@ def lsh_index_stats_demo(
     pins that the face reads the store's REAL table geometry and bucket
     layout — the numbers :func:`retune_lsh_index`'s occupancy trigger
     trades on."""
-    base, _emb = _ensure_lsh_index(spark, sf_dir, rebuild)
+    base, _emb = _ensure_lsh_index(spark, sf_dir)
     st = lsh_index_stats(spark, base)
     return spark.createDataFrame(
         [
@@ -1658,7 +1648,6 @@ def hybrid_index_search_demo(
     k: int = 10,
     leg_k: int = 20,
     query_mod: int = 100,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query grading the hybrid-retrieval drop-in claim
     (round 9): :func:`~jaccard_mapreduce_spark.operators.retrieval.
@@ -1686,7 +1675,7 @@ def hybrid_index_search_demo(
         rrf_fuse,
     )
 
-    base, emb = _ensure_lsh_index(spark, sf_dir, rebuild)
+    base, emb = _ensure_lsh_index(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     lex = lexical_topk(
         docs,
@@ -1713,7 +1702,6 @@ def hybrid_recall_audit_demo(
     k: int = 10,
     leg_k: int = 20,
     query_mod: int = 100,
-    rebuild: bool = False,
 ) -> DataFrame:
     """Contract query for the retrieval recall audit (round 9): per
     query-batch member, how many of the exact-cosine top-``k`` each
@@ -1728,7 +1716,7 @@ def hybrid_recall_audit_demo(
         hybrid_recall_audit,
     )
 
-    base, emb = _ensure_lsh_index(spark, sf_dir, rebuild)
+    base, emb = _ensure_lsh_index(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # graded at GRADED_MAX_DF_RATIO so lex_hits measures a POPULATED lexical
     # leg against semantic truth (round-9 verdict: at the old 0.5 the

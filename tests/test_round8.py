@@ -296,14 +296,14 @@ def test_stored_index_dist_matches_exact_both_families(
         ("ivf", "sq8"),
     ],
 )
-def test_stored_index_mixed_id_types_search_relationally(
+def test_stored_index_integral_batch_searches_string_store_as_strings(
     spark, tmp_path, monkeypatch, family, rerank
 ):
-    """A string-id store probed by a bigint-id batch takes the
-    relational plan, whose self-pair compare runs on canonical string
-    forms (a plain ``!=`` casts the string ids to bigint and throws).
-    Mixed ids must resolve there even when the estimate picks the
-    kernel, which emits one id type for both columns."""
+    """A string-id store probed by a bigint-id batch searches with both
+    id columns cast to string, so a plain ``!=`` is the self-pair
+    compare (canonical string forms — casting the string ids to bigint
+    would throw). The gate patched to 0 runs the kernel in that one id
+    type, and the output keeps each side's own id type."""
     import jaccard_mapreduce_spark.sources.vector_index as V
 
     monkeypatch.setattr(V, "LSH_EXACT_KERNEL_MIN_PAIRS", 0)
@@ -324,6 +324,10 @@ def test_stored_index_mixed_id_types_search_relationally(
         got = V.search_ivf_index(
             spark, base, batch, k=5, n_probe=2, rerank=rerank
         )
+    assert dict(got.dtypes)["query_id"] == "bigint"
+    assert dict(got.dtypes)["neighbor_id"] == "string"
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan
     rows = got.collect()
     assert rows
     assert {r["query_id"] for r in rows} == {1}
@@ -335,3 +339,46 @@ def test_stored_index_mixed_id_types_search_relationally(
         v = vecs[r["neighbor_id"]]
         want = sum(v) / (norm * sum(x * x for x in v) ** 0.5)
         assert abs(r["score"] - want) < 1e-12
+
+
+@pytest.mark.parametrize(
+    "family, rerank", [("lsh", "exact"), ("ivf", "exact"), ("ivf", "sq8")]
+)
+def test_stored_index_int_batch_matches_bigint_batch(
+    spark, tmp_path, monkeypatch, family, rerank
+):
+    """An ``int``-id batch against a ``bigint`` store searches in
+    bigint: on both sides of the gate its rows equal the bigint batch's,
+    with ``query_id`` typed ``int``. A ``string``-id batch against the
+    same store has no one search type and is refused."""
+    import jaccard_mapreduce_spark.sources.vector_index as V
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    base = str(tmp_path / family)
+    batch = emb.where("vec_id % 2 = 1")
+    if family == "lsh":
+        V.build_lsh_index(emb.where("vec_id % 2 = 0"), base)
+        kw = {}
+        search = V.search_lsh_index
+    else:
+        V.build_ivf_index(emb.where("vec_id % 2 = 0"), base, n_cells=8)
+        kw = {"n_probe": 4}
+        search = V.search_ivf_index
+
+    def typed(id_type):
+        return batch.withColumn("vec_id", F.col("vec_id").cast(id_type))
+
+    for gate in (0, 10**18):
+        monkeypatch.setattr(V, "IVF_EXACT_KERNEL_MIN_PAIRS", gate)
+        monkeypatch.setattr(V, "LSH_EXACT_KERNEL_MIN_PAIRS", gate)
+        want = search(spark, base, batch, k=5, rerank=rerank, **kw)
+        got = search(spark, base, typed("int"), k=5, rerank=rerank, **kw)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        kernel = gate == 0 or rerank == "sq8"
+        assert ("FlatMapGroupsInPandas" in plan) == kernel, gate
+        assert dict(got.dtypes)["query_id"] == "int"
+        assert dict(got.dtypes)["neighbor_id"] == "bigint"
+        rows = _full_rows(got)
+        assert rows and rows == _full_rows(want), gate
+    with pytest.raises(ValueError, match="string"):
+        search(spark, base, typed("string"), k=5, rerank=rerank, **kw)
