@@ -1093,51 +1093,6 @@ def proximity_search(
     )
 
 
-def phrase_guard_demo(
-    docs: DataFrame,
-    k: int = 10,
-    query_mod: int = 100,
-    n_terms: int = 2,
-    max_df_ratio: float = GRADED_MAX_DF_RATIO,
-) -> DataFrame:
-    """Contract query for the stop-phrase guard (round 12): one-plan
-    :func:`phrase_search` over the leading-bigram batch with
-    ``on_hot="drop"`` at the graded prune ratio. At the driver fixture
-    the batch SPLITS — 1 of 5 phrases has both terms above the 78%
-    ratio (dropped), 4 survive — so the graded hash exercises both
-    branches: dropped phrases are absent from the result, surviving
-    phrases rank exactly as the unguarded oracle over the same
-    surviving batch. Both branches are asserted non-vacuous (the
-    round-9 empty-leg lesson: an empty result would hash-match an
-    equally-empty oracle and prove nothing)."""
-    phrases = leading_phrases(
-        docs.where(F.col("doc_id") % query_mod == 0), n_terms=n_terms
-    )
-    # assert the split AT THE GUARD (result absence can also mean "no
-    # matches", so it cannot prove the dropped branch): set-semantics
-    # df over the corpus, exactly what the in-path guard derives
-    n_in = phrases.count()
-    dfr = doc_tokens(docs).groupBy("token").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-    survivors = prune_hot_phrases(
-        dfr, docs.select("doc_id").distinct().count(), phrases,
-        max_df_ratio, on_hot="drop",
-    ).count()
-    assert 0 < survivors < n_in, (
-        f"vacuous guard demo: {survivors} of {n_in} phrases survive the "
-        f"{max_df_ratio} guard — the graded fixture must exercise BOTH "
-        "the dropped and the surviving branch"
-    )
-    return phrase_search(
-        docs,
-        phrases,
-        k=k,
-        max_df_ratio=max_df_ratio,
-        on_hot="drop",
-    )
-
-
 def expand_prefixes(
     vocab: DataFrame,
     prefixes: DataFrame,

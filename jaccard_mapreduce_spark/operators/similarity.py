@@ -76,7 +76,9 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-DIST_BLOCK_ROWS = 4096
+# Rows per block when the bucket and cell kernels split a hot bucket
+# into a grid of blocks: no kernel task scores more than ~this² pairs.
+BUCKET_BLOCK_ROWS = 4096
 
 
 def _resolve_rerank(
@@ -247,7 +249,7 @@ def _one_table(df: DataFrame, bucket: Column, *extra) -> DataFrame:
 def _score_bucket_local(
     sigv: DataFrame,
     id_type: str,
-    block_rows: int = DIST_BLOCK_ROWS,
+    block_rows: int = BUCKET_BLOCK_ROWS,
     local_k: int | None = None,
 ) -> DataFrame:
     """Distributed vectorized scoring for the LSH family and the
@@ -360,7 +362,7 @@ def _score_bucket_local(
 def _score_bipartite_local(
     sv: DataFrame,
     id_type: str,
-    block_rows: int = DIST_BLOCK_ROWS,
+    block_rows: int = BUCKET_BLOCK_ROWS,
     local_k: int | None = None,
 ) -> DataFrame:
     """The asymmetric form of :func:`_score_bucket_local`, for
@@ -452,7 +454,6 @@ def _score_cell_sq8_local(
     sv: DataFrame,
     id_type: str,
     local_k: int | None = None,
-    block_rows: int = DIST_BLOCK_ROWS,
     with_exact: bool = False,
 ) -> DataFrame:
     """Cell-local SQ8 rerank kernel (optimization round 12) — the
@@ -553,7 +554,7 @@ def _score_cell_sq8_local(
     payload = ["vec_id", "scale", "zp", "qs", "qsum", "d", "qnorm2"]
     if with_exact:
         payload += ["vec", "norm2"]
-    blocked = _block_bipartite(sv, block_rows)
+    blocked = _block_bipartite(sv, BUCKET_BLOCK_ROWS)
     return blocked.select(
         *payload, "tbl", "bucket", "role", "gq", "gi"
     ).groupBy("tbl", "bucket", "gq", "gi").applyInPandas(score, schema)
@@ -563,7 +564,7 @@ def _score_cell_local(
     assigned: DataFrame,
     id_type: str,
     local_k: int | None = None,
-    block_rows: int = DIST_BLOCK_ROWS,
+    block_rows: int = BUCKET_BLOCK_ROWS,
 ) -> DataFrame:
     """The IVF form of :func:`_score_bucket_local`: score (every
     probing query) × (the cell's resident vectors), cell-locally. No
@@ -723,6 +724,21 @@ ALLPAIRS_BLOCK_ROWS = 256
 # Each gate sits inside its measured bracket with the graded shapes on
 # their round-12-proven sides (hybrid ~40k slices relational; the
 # self-search demos >= 2M kernel).
+#
+# Those brackets come from a 32-core host. A one-session probe on a
+# 4-core host against a 2,000-vector store (median CPU over driver, JVM
+# and workers; relational plan vs kernel):
+#
+# - LSH, 8 tables x 4 planes: 40 queries 2.6 s vs 6.5 s; 400 queries
+#   4.6 vs 5.9; 2,000 queries 15.4 vs 8.0.
+# - IVF, 64 cells, probe 32: 40 queries 3.2 vs 4.5; 400 queries 5.5 vs
+#   5.0; 2,000 queries 17.5 vs 9.2.
+# - perfbench vector_serve with the LSH gate forced to 0: cpu_s rose
+#   from 5.0 and 5.5 s to 10.4 and 11.1 s (seeds 1 and 2).
+#
+# On 4 cores too each form wins on its own side of the gate, so both
+# forms stay until the relational plans move to Arrow (ROADMAP
+# direction 3).
 EXACT_KERNEL_MIN_PAIRS = 200_000
 LSH_EXACT_KERNEL_MIN_PAIRS = 500_000
 IVF_EXACT_KERNEL_MIN_PAIRS = 1_500_000
@@ -734,7 +750,6 @@ def exact_slice_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    min_kernel_pairs: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-``k`` for a query SLICE of the corpus — the
     shared gated form behind the hybrid vector leg and the recall
@@ -749,8 +764,6 @@ def exact_slice_topk(
     per-group local top-k). Both forms are bit-identical — verified
     for every hybrid-family graded key in round 12 and pinned by
     tests/test_opt_r13.py — so the gate can never change a result."""
-    if min_kernel_pairs is None:
-        min_kernel_pairs = EXACT_KERNEL_MIN_PAIRS
     v = vectors(emb, id_col, vec_col)
     id_type = emb.schema[id_col].dataType.simpleString()
     c = (
@@ -761,7 +774,7 @@ def exact_slice_topk(
         )
         .first()
     )
-    if c["nq"] * c["n"] <= min_kernel_pairs:
+    if c["nq"] * c["n"] <= EXACT_KERNEL_MIN_PAIRS:
         # the serving orientation: broadcast the (small) query slice,
         # corpus side stays partition-local; interpreted fold scores
         q = F.broadcast(v.where(query_pred)).alias("a")
@@ -813,23 +826,14 @@ def cosine_topk(embeddings: DataFrame, k: int = 10, id_col: str = "vec_id", vec_
     )
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature string, e.g. ``'0110...'`` — the bucket key."""
-    bits = [
-        F.when(
-            _dot(vec, F.array(*[F.lit(x) for x in plane])) >= 0, F.lit("1")
-        ).otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
-
-
 def _lsh_signature_expr(vec_sql: str, planes: list[list[float]]) -> str:
-    """SQL-string form of :func:`lsh_signature` — the plane literals go
-    through ONE F.expr instead of tables×planes×dim F.lit() py4j round
-    trips (the kmeans literal-codebook convention; ~0.5 s of driver
-    time per query construction at 16×4×64). ``repr()`` + the ``D``
-    suffix round-trips every double exactly."""
+    """Sign-bit signature string of ``vec_sql`` over ``planes``, e.g.
+    ``'0110...'`` — the bucket key, as one SQL expression (the
+    reference form the signature kernel is tested against). The plane
+    literals go through ONE F.expr instead of tables×planes×dim
+    F.lit() py4j round trips (the kmeans literal-codebook convention;
+    ~0.5 s of driver time per query construction at 16×4×64).
+    ``repr()`` + the ``D`` suffix round-trips every double exactly."""
     bits = ", ".join(
         "CASE WHEN aggregate(zip_with({v}, array({lits}), (x, y) -> x * y), "
         "0.0D, (acc, x) -> acc + x) >= 0 THEN '1' ELSE '0' END".format(
@@ -939,7 +943,7 @@ def ann_lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     rerank: str = "auto",
-    block_rows: int = DIST_BLOCK_ROWS,
+    block_rows: int = BUCKET_BLOCK_ROWS,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates share an LSH bucket in ANY
     of ``n_tables`` independent hash tables (the classic multi-table

@@ -1326,7 +1326,7 @@ def minhash_index_stats_sql(
     bands: int = 8,
     seed: int = DEFAULT_SEED,
 ) -> str:
-    """Oracle for sources/signature_index.py::minhash_index_stats_demo —
+    """Oracle for registry_fixtures.py::minhash_index_stats_demo —
     the SQL-derivable slice of the ops snapshot recomputed from the
     signature CTEs over the demo's store slice: document count and the
     measured (band, bucket) occupancy the banding retune trades on.
@@ -1863,7 +1863,7 @@ scored AS (
 def ivf_index_stats_sql(
     n_cells: int, iters: int = 2, dim: int = 64
 ) -> str:
-    """Oracle for sources/vector_index.py::ivf_index_stats_demo — the
+    """Oracle for registry_fixtures.py::ivf_index_stats_demo — the
     SQL-derivable slice of the IVF ops snapshot recomputed from the
     integer-exact k-means chain: vector count and the measured cell
     occupancy (``crank = 1`` — each vector in its single nearest cell,
@@ -1907,7 +1907,7 @@ SELECT CAST({n_cells} AS BIGINT) AS n_cells,
 
 
 def lsh_index_stats_sql(tables: list[list[list[float]]]) -> str:
-    """Oracle for sources/vector_index.py::lsh_index_stats_demo — the
+    """Oracle for registry_fixtures.py::lsh_index_stats_demo — the
     stored table geometry plus the ``(tbl, bucket)`` occupancy
     recomputed from the signature CTEs over the same plane literals.
     Bucket values are bit-strings here and packed longs in the store,
@@ -3645,7 +3645,7 @@ def lexical_store_search_sql(
     query_mod: int = 100,
     max_df_pct: int = 50,
 ) -> str:
-    """Oracle for sources/lexical_store.py::lexical_store_search_demo —
+    """Oracle for registry_fixtures.py::lexical_store_search_demo —
     the one-plan lexical top-k over the FULL corpus with NO build
     filter: a store built on a slice and upserted with the rest must be
     indistinguishable because df and n_docs merge additively."""
@@ -3707,7 +3707,7 @@ def lexical_store_delete_sql(
     del_mod: int = 10,
     del_rem: int = 3,
 ) -> str:
-    """Oracle for sources/lexical_store.py::lexical_store_delete_demo —
+    """Oracle for registry_fixtures.py::lexical_store_delete_demo —
     the one-plan lexical top-k over the SURVIVING corpus only: a store
     built, upserted, and then DELETED from must be indistinguishable
     from a fresh build over the survivors. The whole scoring chain
@@ -3734,7 +3734,7 @@ def lexical_store_delete_bm25_sql(
     del_rem: int = 3,
 ) -> str:
     """Oracle for the BM25 face of the delete contract
-    (sources/lexical_store.py::lexical_store_delete_bm25_demo): the
+    (registry_fixtures.py::lexical_store_delete_bm25_demo): the
     integer BM25 recomputed over the surviving corpus. Beyond the
     set-semantics face this pins the MARKER corrections — the mean
     length ``A = Σtf // n_docs`` derives from both decremented markers,
@@ -3755,7 +3755,7 @@ ftok AS (
 
 
 def lexical_store_stats_sql() -> str:
-    """Oracle for sources/lexical_store.py::lexical_store_stats_demo —
+    """Oracle for registry_fixtures.py::lexical_store_stats_demo —
     the store's logical statistics recomputed from the full-corpus
     tokenize with NO build filter: the stats face of the additive-merge
     exactness claim (a df double-count, a dropped posting, or a drifted
@@ -3790,7 +3790,7 @@ def delete_scale_probe_sql(
     del_rem: int = 3,
 ) -> str:
     """Oracle for the delete path's ~10× probe
-    (sources/lexical_store.py::delete_scale_probe_demo): the lexical
+    (registry_fixtures.py::delete_scale_probe_demo): the lexical
     ranking over the replicated corpus MINUS the victims' replica set.
     ``id_offset % del_mod == 0`` makes the victim set replica-closed
     (every replica of a victim doc is itself a victim), so one modulo

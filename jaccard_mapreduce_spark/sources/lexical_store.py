@@ -226,8 +226,8 @@ def upsert_lexical_store(
     # Marker preconditions FIRST — before any postings bytes land. A
     # pre-tfv2 store (no Σtf marker) must refuse the upsert here, not
     # get tf-schema postings appended under a wrongly-zeroed marker
-    # (round-10 ADVICE: the raw API corrupted quietly; only the demo
-    # path was protected by the _LEX_STORE_SCHEMA tag).
+    # (round-10 ADVICE: the raw API corrupted quietly; only the
+    # registry fixtures' stores were protected, by their layout tag).
     prev = _require_marker(spark, path, "_n_docs")
     prev_tok = _require_marker(spark, path, "_n_tokens")
     # Same precondition class for the posv3 positions dataset: a
@@ -612,128 +612,6 @@ def delete_from_lexical_store_stream(
     )
 
 
-def stream_lexical_delete_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    base_mod: int = 4,
-    query_mod: int = 100,
-    del_mod: int = 10,
-    del_rem: int = 3,
-    n_input_files: int = 3,
-) -> DataFrame:
-    """Contract query for the streaming delete face: build on the base
-    slice, upsert the rest (the full mutation prologue), then stream
-    the delete batch split across ``n_input_files`` files (one
-    micro-batch per trigger) and search the surviving query docs —
-    must hash-match the SAME survivors-only oracle as the one-shot
-    ``lexical_store_delete``: batch boundaries are invisible to the
-    tombstone set and the additive decrements, so a delete arriving in
-    n pieces equals the delete arriving whole."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-    )
-
-    def _build(docs: DataFrame, base: str) -> None:
-        import os
-
-        build_lexical_store(docs.where(F.col("doc_id") % base_mod != 0), base)
-        upsert_lexical_store(
-            spark, base, docs.where(F.col("doc_id") % base_mod == 0)
-        )
-        victims = docs.where(F.col("doc_id") % del_mod == del_rem).select(
-            "doc_id"
-        )
-        in_dir = os.path.join(base, "_del_stream_in")
-        victims.repartition(n_input_files).write.parquet(in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q = delete_from_lexical_store_stream(
-            stream, base, os.path.join(base, "_del_stream_ckpt")
-        ).start()
-        q.awaitTermination()
-        st = lexical_store_stats(spark, base)
-        assert st["n_tombstones"] > 0, "vacuous streaming delete"
-        assert st["n_distinct_docs"] == st["n_docs"], st
-        assert st["n_positions"] == (
-            st["n_token_occurrences"] + st["n_dead_token_occurrences"]
-        ), st
-
-    base, docs = _ensure_lex_store(
-        spark,
-        sf_dir,
-        base_mod,
-        suffix="_lex_del_stream",
-        build=_build,
-        tag_extra=f":sdel{del_mod}-{del_rem}x{n_input_files}",
-    )
-    res = search_lexical_store(
-        spark,
-        base,
-        docs.where(
-            (F.col("doc_id") % query_mod == 0)
-            & (F.col("doc_id") % del_mod != del_rem)
-        ),
-        k=k,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )
-    assert res.limit(1).count() > 0, (
-        "vacuous stream-deleted store search: no surviving query doc "
-        "matched a surviving token"
-    )
-    return res
-
-
-# One schema version string for EVERY demo store gate: bumping it here
-# rebuilds all three session stores together — a per-site copy of the
-# tag is exactly how a warm session ends up probing a stale-schema
-# store (the round-10 review's finding). docv4 = the round-12
-# doc_id-clustered layout (row-identical to posv3 — every hash is
-# layout-invariant — but serve timings are only comparable within one
-# generation).
-_LEX_STORE_SCHEMA = "docv4"
-
-
-def _ensure_lex_store(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 4,
-    suffix: str = "_lex_store",
-    build=None,
-    tag_extra: str = "",
-) -> tuple[str, DataFrame]:
-    """Session-scoped build-once gate shared by ALL the lexical-store
-    demos — the required datasets/markers and the postings schema
-    version live HERE, once. The default ``build`` is the
-    build-on-slice + upsert-the-rest shape the search and stats
-    contract entries probe (its statistics equal a full-corpus build's,
-    the additive-merge exactness claim); the compaction and streaming
-    demos pass their own."""
-    from jaccard_mapreduce_spark.sources.vector_index import _ensure_index
-
-    def _default_build(docs: DataFrame, base: str) -> None:
-        build_lexical_store(docs.where(F.col("doc_id") % base_mod != 0), base)
-        n = upsert_lexical_store(
-            spark, base, docs.where(F.col("doc_id") % base_mod == 0)
-        )
-        assert n > 0
-
-    return _ensure_index(
-        spark,
-        sf_dir,
-        suffix=suffix,
-        required_dirs=["postings", "df", "positions"],
-        build=build or _default_build,
-        tag_extra=f"base_mod={base_mod}{tag_extra}:{_LEX_STORE_SCHEMA}",
-        table="documents.parquet",
-        required_files=("_n_docs", "_n_tokens"),
-    )
-
-
 def search_lexical_store_bm25(
     spark: SparkSession,
     path: str,
@@ -932,595 +810,3 @@ def search_lexical_store_prefix(
         exp,
         k=k,
     )
-
-
-def lexical_store_prefix_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    base_mod: int = 4,
-    query_mod: int = 100,
-    prefix_len: int = 4,
-) -> DataFrame:
-    """Contract query for the store-served prefix search: the shared
-    build-then-upsert store probed with each query doc's leading
-    4-character prefix must value-hash-match the one-plan
-    ``prefix_search`` oracle over the FULL corpus — the df dataset
-    (the expansion vocabulary) and the postings both merge additively,
-    so the mutation path is invisible to the wildcard tier too."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        leading_prefixes,
-    )
-
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
-    res = search_lexical_store_prefix(
-        spark,
-        base,
-        leading_prefixes(
-            docs.where(F.col("doc_id") % query_mod == 0), length=prefix_len
-        ),
-        k=k,
-    )
-    # the family's vacuity guard
-    assert res.limit(1).count() > 0, (
-        "vacuous store prefix search: no query prefix matched a "
-        "vocabulary term"
-    )
-    return res
-
-
-def lexical_store_proximity_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    base_mod: int = 4,
-    query_mod: int = 100,
-    n_terms: int = 3,
-    slop: int = 2,
-) -> DataFrame:
-    """Contract query for the store-served proximity search (round
-    12): the shared build-then-upsert store probed with the query
-    docs' leading trigrams at slop=2 must value-hash-match the
-    one-plan ``proximity_search`` oracle over the FULL corpus with no
-    build filter — the fourth scoring served from the same positions
-    dataset, with the mutation path invisible to the window chain
-    exactly as it is to adjacency."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        leading_phrases,
-    )
-
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
-    res = search_lexical_store_proximity(
-        spark,
-        base,
-        leading_phrases(
-            docs.where(F.col("doc_id") % query_mod == 0), n_terms=n_terms
-        ),
-        slop=slop,
-        k=k,
-        n_terms=n_terms,
-    )
-    # the family's vacuity guard
-    assert res.limit(1).count() > 0, (
-        "vacuous store proximity search: no query trigram matches "
-        "within the window anywhere in the corpus"
-    )
-    return res
-
-
-def lexical_store_phrase_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    base_mod: int = 4,
-    query_mod: int = 100,
-    n_terms: int = 2,
-) -> DataFrame:
-    """Contract query for the store-served phrase search (round 11):
-    the shared build-then-upsert store probed with the query docs'
-    leading bigrams must value-hash-match the one-plan
-    ``phrase_search`` oracle over the FULL corpus with no build filter
-    — positions are per-document facts, so the mutation path is
-    invisible to the adjacency scoring exactly as it is to the set and
-    tf scorings."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        leading_phrases,
-    )
-
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
-    res = search_lexical_store_phrase(
-        spark,
-        base,
-        leading_phrases(
-            docs.where(F.col("doc_id") % query_mod == 0), n_terms=n_terms
-        ),
-        k=k,
-    )
-    # the family's vacuity guard
-    assert res.limit(1).count() > 0, (
-        "vacuous store phrase search: no query bigram recurs in the corpus"
-    )
-    return res
-
-
-def delete_scale_probe_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    query_mod: int = 100,
-    target_docs: int = 5_000,
-    del_mod: int = 10,
-    del_rem: int = 3,
-) -> DataFrame:
-    """The DELETE path's ~10× scale probe (round 12 — the tombstone
-    mask measured through the family's scale-probe discipline, not
-    argued): build the store over the corpus replicated to
-    ~``target_docs`` documents, DELETE the victims' replica set (the
-    replication ``id_offset`` is a multiple of ``del_mod``, so the
-    victim slice is REPLICA-CLOSED — every replica of a victim is a
-    victim, and one modulo filter expresses the delete on both sides),
-    then serve the surviving replicated query batch through the
-    tombstone-masked postings at the graded prune. The probe pays the
-    real factor× posting volume through the anti-join mask PLUS the
-    eager df-correction's shrunken weights — the full merge-on-read
-    read path at scale, hash-graded against the survivors-only
-    replicated oracle."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-        probe_factor,
-        replicate_documents,
-    )
-
-    def _build(docs: DataFrame, base: str) -> None:
-        factor = probe_factor(
-            docs.select("doc_id").distinct().count(), target_docs
-        )
-        rep = replicate_documents(docs, factor)
-        build_lexical_store(rep, base)
-        n = delete_from_lexical_store(
-            spark,
-            base,
-            rep.where(F.col("doc_id") % del_mod == del_rem).select(
-                "doc_id"
-            ),
-        )
-        assert n > 0, "vacuous delete fixture: no replica in the slice"
-
-    base, docs = _ensure_lex_store(
-        spark,
-        sf_dir,
-        suffix="_lex_del_scale",
-        build=_build,
-        tag_extra=f":target={target_docs}:del{del_mod}-{del_rem}",
-    )
-    factor = probe_factor(
-        docs.select("doc_id").distinct().count(), target_docs
-    )
-    queries = replicate_documents(docs, factor).where(
-        (F.col("doc_id") % query_mod == 0)
-        & (F.col("doc_id") % del_mod != del_rem)
-    )
-    res = search_lexical_store(
-        spark, base, queries, k=k, max_df_ratio=GRADED_MAX_DF_RATIO
-    )
-    # the family's vacuity guard
-    assert res.limit(1).count() > 0, (
-        "vacuous delete scale probe: no surviving replicated query "
-        "matched a surviving token"
-    )
-    return res
-
-
-def phrase_store_scale_probe_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    query_mod: int = 100,
-    n_terms: int = 2,
-    target_docs: int = 5_000,
-) -> DataFrame:
-    """The store-served phrase path's 10× scale probe (round 12 —
-    round-11 verdict item 7: the one-plan phrase tier was measured at
-    sf0.1×10, but ``search_lexical_store_phrase`` probes the STORE's
-    positions relation, which that measurement never touched). Build
-    the store over the corpus replicated to ~``target_docs`` documents
-    (session-gated like every index demo), probe with the replicated
-    leading-bigram batch. Positions are per-replica-doc facts —
-    replica ``r`` of a doc carries the same token sequence under
-    ``doc_id + r·10⁶`` — so every occurrence count and rank is exactly
-    derivable from the replicated one-plan oracle (the
-    ``bm25_scale_probe`` replication-invariance argument extended to
-    the positions dataset), and the probe pays the real factor×
-    posting volume through the store's scan/join/vote machinery."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        leading_phrases,
-        probe_factor,
-        replicate_documents,
-    )
-
-    def _build(docs: DataFrame, base: str) -> None:
-        factor = probe_factor(
-            docs.select("doc_id").distinct().count(), target_docs
-        )
-        build_lexical_store(replicate_documents(docs, factor), base)
-
-    base, docs = _ensure_lex_store(
-        spark,
-        sf_dir,
-        suffix="_lex_scale",
-        build=_build,
-        tag_extra=f":target={target_docs}",
-    )
-    factor = probe_factor(
-        docs.select("doc_id").distinct().count(), target_docs
-    )
-    phrases = leading_phrases(
-        replicate_documents(docs, factor).where(
-            F.col("doc_id") % query_mod == 0
-        ),
-        n_terms=n_terms,
-    )
-    res = search_lexical_store_phrase(spark, base, phrases, k=k)
-    # the family's vacuity guard
-    assert res.limit(1).count() > 0, (
-        "vacuous store phrase scale probe: no replicated query bigram "
-        "recurs in the replicated corpus"
-    )
-    return res
-
-
-def lexical_store_bm25_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    base_mod: int = 4,
-    query_mod: int = 100,
-) -> DataFrame:
-    """Contract query for the store-served BM25 (round 10): the shared
-    build-then-upsert store probed under the tf-aware score must
-    value-hash-match the one-plan ``bm25_topk`` oracle over the FULL
-    corpus with no build filter — tf and dl are per-document facts and
-    df/n_docs merge additively, so the mutation path is exactly
-    invisible to BOTH scorings the store serves."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-    )
-
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
-    res = search_lexical_store_bm25(
-        spark,
-        base,
-        docs.where(F.col("doc_id") % query_mod == 0),
-        k=k,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )
-    assert res.limit(1).count() > 0, (
-        "vacuous BM25 store search: no query doc matched a surviving "
-        "token"
-    )
-    return res
-
-
-def lexical_store_search_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    base_mod: int = 4,
-    query_mod: int = 100,
-) -> DataFrame:
-    """Contract query for exact incremental maintenance: build the
-    store on the ``doc_id % base_mod != 0`` slice, UPSERT the rest,
-    then search the deterministic query batch. Must value-hash-match
-    (scores INCLUDED — they are exact integers) the one-plan lexical
-    oracle over the FULL corpus with no build filter: build-then-upsert
-    ≡ build-over-union because df and n_docs merge additively.
-
-    Graded at ``GRADED_MAX_DF_RATIO`` since round 10: the round-9 grade
-    ran the 0.5 default, which at the driver fixture pruned the index
-    to one token no query doc contained — 0 rows on BOTH sides, a
-    vacuous hash match that never touched the weight arithmetic or the
-    df merge. The result is asserted non-empty so that can't recur."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-    )
-
-    base, docs = _ensure_lex_store(spark, sf_dir, base_mod)
-    res = search_lexical_store(
-        spark,
-        base,
-        docs.where(F.col("doc_id") % query_mod == 0),
-        k=k,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )
-    assert res.limit(1).count() > 0, (
-        "vacuous lexical store search: no query doc matched a "
-        "surviving token (round-9 verdict regression guard)"
-    )
-    return res
-
-
-def _ensure_deleted_lex_store(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int,
-    del_mod: int,
-    del_rem: int,
-) -> tuple[str, DataFrame]:
-    """Session-scoped store for the DELETE contract faces: build on
-    the base slice, upsert the rest (the full mutation prologue), then
-    delete the ``doc_id % del_mod == del_rem`` slice. The build also
-    asserts the delete path's own invariants once per store build —
-    idempotence (a replayed delete is a counted no-op) and the stats
-    drift checks (live distinct == marker; physical positions ==
-    live + dead markers) — so every graded serve over this store sits
-    on a verified mutation history."""
-
-    def _build(docs: DataFrame, base: str) -> None:
-        build_lexical_store(docs.where(F.col("doc_id") % base_mod != 0), base)
-        upsert_lexical_store(
-            spark, base, docs.where(F.col("doc_id") % base_mod == 0)
-        )
-        victims = docs.where(F.col("doc_id") % del_mod == del_rem).select(
-            "doc_id"
-        )
-        n = delete_from_lexical_store(spark, base, victims)
-        assert n > 0, "vacuous delete fixture: no doc in the slice"
-        # idempotence: tombstones are a set — the replayed batch
-        # anti-joins to nothing and every statistic stays untouched
-        assert delete_from_lexical_store(spark, base, victims) == 0
-        st = lexical_store_stats(spark, base)
-        assert st["n_distinct_docs"] == st["n_docs"], st
-        assert st["n_positions"] == (
-            st["n_token_occurrences"] + st["n_dead_token_occurrences"]
-        ), st
-        assert st["n_tombstones"] == n, st
-
-    return _ensure_lex_store(
-        spark,
-        sf_dir,
-        base_mod,
-        suffix="_lex_store_del",
-        build=_build,
-        tag_extra=f":del{del_mod}-{del_rem}",
-    )
-
-
-def lexical_store_delete_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    base_mod: int = 4,
-    query_mod: int = 100,
-    del_mod: int = 10,
-    del_rem: int = 3,
-) -> DataFrame:
-    """Contract query for MERGE-ON-READ deletion (round 12 — the
-    mutation lifecycle's missing verb): build-then-upsert-then-DELETE,
-    probed with the surviving query docs, must value-hash-match the
-    one-plan lexical oracle over the SURVIVING corpus only — scores
-    included. The hash pins both halves of the delete at once: the
-    tombstone masking (a deleted doc surfacing as a neighbor shifts a
-    rank) and the eager statistics correction (a stale df or n_docs
-    shifts the integer weights and the prune threshold — the weights
-    recompute from n_docs // df on both sides)."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-    )
-
-    base, docs = _ensure_deleted_lex_store(
-        spark, sf_dir, base_mod, del_mod, del_rem
-    )
-    res = search_lexical_store(
-        spark,
-        base,
-        docs.where(
-            (F.col("doc_id") % query_mod == 0)
-            & (F.col("doc_id") % del_mod != del_rem)
-        ),
-        k=k,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )
-    assert res.limit(1).count() > 0, (
-        "vacuous delete-store search: no surviving query doc matched a "
-        "surviving token"
-    )
-    return res
-
-
-def lexical_store_delete_bm25_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    base_mod: int = 4,
-    query_mod: int = 100,
-    del_mod: int = 10,
-    del_rem: int = 3,
-) -> DataFrame:
-    """Contract query for the delete contract's BM25 face: the same
-    deleted store probed under the tf-aware score must match the
-    one-plan BM25 oracle over the survivors. Beyond the set-semantics
-    face this pins the MARKER corrections: the integer mean length
-    ``A = _n_tokens // _n_docs`` derives from both decremented
-    markers, so an uncorrected Σtf leaks into every saturation term
-    and fails the hash even where the ranking happens to agree."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-    )
-
-    base, docs = _ensure_deleted_lex_store(
-        spark, sf_dir, base_mod, del_mod, del_rem
-    )
-    res = search_lexical_store_bm25(
-        spark,
-        base,
-        docs.where(
-            (F.col("doc_id") % query_mod == 0)
-            & (F.col("doc_id") % del_mod != del_rem)
-        ),
-        k=k,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )
-    assert res.limit(1).count() > 0, (
-        "vacuous delete-store BM25 search: no surviving query doc "
-        "matched a surviving token"
-    )
-    return res
-
-
-def lexical_store_stats_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 4,
-) -> DataFrame:
-    """Contract query for the lexical store's ops snapshot (round 10 —
-    the fourth family joins the stats triad): the SQL-derivable slice
-    of :func:`lexical_store_stats` over the shared build-then-upsert
-    demo store as one row — ``(n_docs, n_tokens, n_postings,
-    max_df)``. The DuckDB oracle recomputes the same numbers from the
-    full-corpus tokenize CTE with NO build filter, so the graded hash
-    pins the additive-merge exactness of the STATISTICS themselves
-    (the search face pins the derived ranking; this face pins the raw
-    df/count state the weights derive from). File counts are
-    filesystem facts with no SQL twin and stay out of the graded
-    projection (the ``minhash_index_stats`` convention).
-
-    Round 11 adds ``n_distinct_docs`` (distinct doc_ids IN the
-    postings) to the graded row: on a healthy store it equals the
-    ``n_docs`` marker (every fixture doc tokenizes non-empty), so the
-    hash now pins the id-contract drift check — a replayed upsert
-    double-counts the marker but not the distinct postings ids, and
-    the disagreement becomes a failed grade instead of an invisible
-    corruption (round-10 verdict item 6)."""
-    base, _docs = _ensure_lex_store(spark, sf_dir, base_mod)
-    st = lexical_store_stats(spark, base)
-    return spark.createDataFrame(
-        [
-            (
-                st["n_docs"],
-                st["n_tokens"],
-                st["n_postings"],
-                st["max_df"],
-                st["n_token_occurrences"],
-                st["n_distinct_docs"],
-                st["n_positions"],
-            )
-        ],
-        "n_docs long, n_tokens long, n_postings long, max_df long,"
-        " n_token_occurrences long, n_distinct_docs long,"
-        " n_positions long",
-    )
-
-
-def lexical_store_compact_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 4,
-    k: int = 10,
-    query_mod: int = 100,
-) -> DataFrame:
-    """Contract query for postings compaction (round 10, completing
-    the lexical lifecycle: build → search → upsert → stats → compact →
-    stream-ingest): build on the base slice, upsert the rest (two file
-    generations in postings), COMPACT through
-    :func:`compact_lexical_store`, then search the deterministic query
-    batch. Compaction is pure layout (row-identical, token clustering
-    preserved), so the result must still hash-match the SAME one-plan
-    full-corpus oracle as ``lexical_store_search`` — and the file
-    count is asserted non-increasing so the rewrite provably ran."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-    )
-
-    def _build(docs: DataFrame, base: str) -> None:
-        build_lexical_store(docs.where(F.col("doc_id") % base_mod != 0), base)
-        upsert_lexical_store(
-            spark, base, docs.where(F.col("doc_id") % base_mod == 0)
-        )
-        stats = compact_lexical_store(spark, base)
-        for name, (before, after) in stats.items():
-            assert after <= before or before <= 1, (name, before, after)
-
-    base, docs = _ensure_lex_store(
-        spark, sf_dir, base_mod, suffix="_lex_compact", build=_build
-    )
-    res = search_lexical_store(
-        spark,
-        base,
-        docs.where(F.col("doc_id") % query_mod == 0),
-        k=k,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )
-    # same vacuity guard as the search/bm25 demos (round-10 ADVICE):
-    # this grades against the same populated-leg oracle, so an empty
-    # result would hash-match an equally-empty oracle and prove nothing
-    assert res.limit(1).count() > 0, (
-        "vacuous compacted-store search: no query doc matched a "
-        "surviving token (round-9 verdict regression guard)"
-    )
-    return res
-
-
-def stream_lexical_ingest_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 4,
-    k: int = 10,
-    query_mod: int = 100,
-    n_input_files: int = 3,
-) -> DataFrame:
-    """Contract query for the streaming-ingest face (round 10 — the
-    ``upsert_ivf_index_stream`` symmetry): build the store on the base
-    slice, stream the remaining documents through
-    :func:`upsert_lexical_store_stream` split across ``n_input_files``
-    files (one micro-batch per trigger; file partitioning keeps batch
-    doc-ids disjoint — the upsert id contract), then search the
-    deterministic query batch. Because every batch merges exact
-    additive increments, the final store — and therefore the graded
-    search — must hash-match the one-plan full-corpus oracle whatever
-    the batch boundaries were: the streaming twin of the
-    build-then-upsert invisibility claim."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-    )
-
-    def _build(docs: DataFrame, base: str) -> None:
-        import os
-
-        build_lexical_store(docs.where(F.col("doc_id") % base_mod != 0), base)
-        in_dir = os.path.join(base, "_stream_in")
-        newcomers = docs.where(F.col("doc_id") % base_mod == 0).select(
-            "doc_id", "text"
-        )
-        newcomers.repartition(n_input_files).write.parquet(in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q = upsert_lexical_store_stream(
-            stream, base, os.path.join(base, "_stream_ckpt")
-        ).start()
-        q.awaitTermination()
-
-    base, docs = _ensure_lex_store(
-        spark,
-        sf_dir,
-        base_mod,
-        suffix="_lex_stream",
-        build=_build,
-        tag_extra=f":files={n_input_files}",
-    )
-    res = search_lexical_store(
-        spark,
-        base,
-        docs.where(F.col("doc_id") % query_mod == 0),
-        k=k,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )
-    # same vacuity guard as the search/bm25 demos (round-10 ADVICE)
-    assert res.limit(1).count() > 0, (
-        "vacuous stream-ingested-store search: no query doc matched a "
-        "surviving token (round-9 verdict regression guard)"
-    )
-    return res

@@ -552,229 +552,3 @@ def compact_minhash_index(
             )
         },
     )
-
-
-def _ensure_doc_index(
-    spark: SparkSession,
-    sf_dir: str,
-    suffix: str,
-    build,
-    tag_extra: str = "",
-) -> tuple[str, DataFrame]:
-    """Documents face of the shared demo build-once gate — the
-    ``_params`` file is in the usable-index check because
-    :func:`_stored_params` hard-fails without it (a tmp cleaner that
-    removes only the small metadata file must trigger a rebuild, not a
-    session-long graded-query failure)."""
-    from jaccard_mapreduce_spark.sources.vector_index import _ensure_index
-
-    return _ensure_index(
-        spark,
-        sf_dir,
-        suffix=suffix,
-        required_dirs=["signatures", "buckets"],
-        build=build,
-        tag_extra=tag_extra,
-        table="documents.parquet",
-        required_files=("_params",),
-    )
-
-
-def dedup_incremental_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.7,
-    base_mod: int = 5,
-) -> DataFrame:
-    """Contract query: index the ``doc_id % base_mod != 0`` slice of the
-    corpus, then dedup the remaining documents (the "new crawl batch")
-    against the store. The DuckDB oracle recomputes the same split with
-    shared signature CTEs — the directed pair set AND the estimated
-    similarities must hash-match."""
-
-    def _build(docs: DataFrame, path: str) -> None:
-        build_minhash_index(docs.where(F.col("doc_id") % base_mod != 0), path)
-
-    base, docs = _ensure_doc_index(
-        spark,
-        sf_dir,
-        suffix="_mh_incr",
-        build=_build,
-        tag_extra=f"base_mod={base_mod}",
-    )
-    return dedup_incremental(
-        spark, base, docs.where(F.col("doc_id") % base_mod == 0), threshold
-    )
-
-
-def reband_minhash_index_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.7,
-    base_mod: int = 3,
-    initial_bands: int = 4,
-) -> DataFrame:
-    """Contract query for the in-place band retune: build the store on
-    the ``% base_mod != 0`` slice with a deliberately MIStuned banding
-    (``initial_bands=4`` — S-curve midpoint 0.84, above the 0.7 dedup
-    threshold, so threshold-grade pairs would be missed), reband it to
-    the :func:`bands_for`-derived count (8 at k=32 / threshold 0.7),
-    then dedup the remaining documents against the store.
-
-    The DuckDB oracle is a FRESH build at the derived banding
-    (``dedup_incremental_sql`` with ``bands=bands_for(...)``) — so the
-    grade pins both halves of the reband claim: the rewrite is
-    row-identical to a from-scratch build at the new banding, and the
-    published ``_banding`` marker actually governs later dedups (a
-    store silently still at 4 bands would generate a strictly sparser
-    candidate set and hash-mismatch)."""
-
-    new_bands = bands_for(DEFAULT_NUM_HASHES, threshold)
-    assert new_bands != initial_bands, "demo must exercise a real retune"
-
-    def _build(docs: DataFrame, path: str) -> None:
-        build_minhash_index(
-            docs.where(F.col("doc_id") % base_mod != 0),
-            path,
-            bands=initial_bands,
-        )
-        reband_minhash_index(spark, path, new_bands)
-
-    base, docs = _ensure_doc_index(
-        spark,
-        sf_dir,
-        suffix="_mh_reband",
-        build=_build,
-        tag_extra=f"base_mod={base_mod},bands={initial_bands}->{new_bands}",
-    )
-    return dedup_incremental(
-        spark, base, docs.where(F.col("doc_id") % base_mod == 0), threshold
-    )
-
-
-def minhash_index_stats_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 6,
-) -> DataFrame:
-    """Contract query for the ops snapshot: build a store on the
-    ``% base_mod != 0`` slice and return the SQL-derivable slice of
-    :func:`minhash_index_stats` as one row — ``(k_hashes, bands,
-    n_docs, n_bucket_groups, max_bucket_docs)``. The DuckDB oracle
-    recomputes the same occupancy from the signature CTEs, so the
-    graded hash pins that the stats face reads the store's REAL
-    banding and bucket layout (the file counts are filesystem facts
-    with no SQL twin and stay out of the graded projection)."""
-
-    def _build(docs: DataFrame, path: str) -> None:
-        build_minhash_index(docs.where(F.col("doc_id") % base_mod != 0), path)
-
-    base, _docs = _ensure_doc_index(
-        spark,
-        sf_dir,
-        suffix="_mh_stats",
-        build=_build,
-        tag_extra=f"base_mod={base_mod}",
-    )
-    st = minhash_index_stats(spark, base)
-    return spark.createDataFrame(
-        [
-            (
-                st["k"],
-                st["bands"],
-                st["n_docs"],
-                st["n_bucket_groups"],
-                st["max_bucket_docs"],
-            )
-        ],
-        "k_hashes long, bands long, n_docs long,"
-        " n_bucket_groups long, max_bucket_docs long",
-    )
-
-
-def minhash_index_upsert_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.7,
-    base_mod: int = 7,
-    batch_mod: int = 10,
-) -> DataFrame:
-    """Contract query for append-invisibility: build the store on the
-    ``% base_mod != 0`` slice, UPSERT the rest, then dedup a
-    deterministic ``% batch_mod == 0`` probe batch against the store.
-    The oracle computes the same probe against a one-shot store over
-    the FULL corpus — equality proves the upsert equals a union build
-    (data-independent hashing, the ``lsh_index_upsert`` claim for the
-    MinHash tier)."""
-
-    def _build(docs: DataFrame, path: str) -> None:
-        build_minhash_index(docs.where(F.col("doc_id") % base_mod != 0), path)
-        n = upsert_minhash_index(
-            spark, path, docs.where(F.col("doc_id") % base_mod == 0)
-        )
-        assert n > 0
-
-    base, docs = _ensure_doc_index(
-        spark,
-        sf_dir,
-        suffix="_mh_upsert",
-        build=_build,
-        tag_extra=f"base_mod={base_mod}",
-    )
-    return dedup_incremental(
-        spark, base, docs.where(F.col("doc_id") % batch_mod == 0), threshold
-    )
-
-
-def minhash_index_delete_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.7,
-    base_mod: int = 7,
-    batch_mod: int = 10,
-    del_mod: int = 9,
-    del_rem: int = 2,
-) -> DataFrame:
-    """Contract query for MERGE-ON-READ deletion on the dedup store
-    (round 12 — the delete lens's third index family):
-    build-then-upsert-then-DELETE, probed with the surviving batch,
-    must hash-match the one-shot oracle whose STORE side keeps only
-    the survivors — a dead document surfacing as a dedup partner (from
-    an unmasked bucket OR an unmasked signature fetch) adds a directed
-    pair and fails the hash. The build asserts delete idempotence and
-    the stats tombstone count once per store build."""
-
-    def _build(docs: DataFrame, path: str) -> None:
-        build_minhash_index(docs.where(F.col("doc_id") % base_mod != 0), path)
-        upsert_minhash_index(
-            spark, path, docs.where(F.col("doc_id") % base_mod == 0)
-        )
-        victims = docs.where(F.col("doc_id") % del_mod == del_rem).select(
-            "doc_id"
-        )
-        n = delete_from_minhash_index(spark, path, victims)
-        assert n > 0, "vacuous delete fixture: no doc in the slice"
-        assert delete_from_minhash_index(spark, path, victims) == 0
-        assert minhash_index_stats(spark, path)["n_tombstones"] == n
-
-    base, docs = _ensure_doc_index(
-        spark,
-        sf_dir,
-        suffix="_mh_del",
-        build=_build,
-        tag_extra=f"base_mod={base_mod}:del{del_mod}-{del_rem}",
-    )
-    res = dedup_incremental(
-        spark,
-        base,
-        docs.where(
-            (F.col("doc_id") % batch_mod == 0)
-            & (F.col("doc_id") % del_mod != del_rem)
-        ),
-        threshold,
-    )
-    assert res.limit(1).count() > 0, (
-        "vacuous deleted-store dedup: no surviving batch doc found a "
-        "surviving near-duplicate"
-    )
-    return res

@@ -39,11 +39,6 @@ train-and-search-in-one-plan ``ann_ivf_topk`` oracle exactly.
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,11 +83,6 @@ from jaccard_mapreduce_spark.sources._store import (
 # expression folds over are reconstructed at read time as a pure
 # projection, so the parquet round trip stays value-exact.
 _SQ8_STORED_COLS = ("qcode", "scale", "zp", "qsum", "qnorm2")
-
-
-def _scratch_dir(spark: SparkSession, suffix: str = "") -> str:
-    app = re.sub(r"[^a-zA-Z0-9]+", "_", spark.sparkContext.applicationId)
-    return os.path.join(tempfile.gettempdir(), f"ivf_index_{app}{suffix}".lower())
 
 
 def build_ivf_index(
@@ -683,23 +673,6 @@ def read_index_cells(
     )
 
 
-def _content_fingerprint(sf_dir: str, table: str = "embeddings.parquet") -> str:
-    """Cheap identity of a fixture table: sorted (name, size,
-    mtime_ns) of every file under ``table``. If the data
-    under a previously-indexed path is rewritten within a session, the
-    fingerprint changes and the index is rebuilt rather than serving
-    stale cells (which would silently break the hash-parity contract
-    with the one-plan oracle)."""
-    root = os.path.join(sf_dir, table)
-    parts = []
-    for dirpath, _dirs, files in os.walk(root):
-        for name in files:
-            st = os.stat(os.path.join(dirpath, name))
-            rel = os.path.relpath(os.path.join(dirpath, name), root)
-            parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    return ";".join(sorted(parts))
-
-
 def build_lsh_index(
     embeddings: DataFrame,
     path: str,
@@ -912,74 +885,6 @@ def compact_ivf_index(
     )
 
 
-def lsh_index_compact_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 5,
-) -> DataFrame:
-    """Contract query for compaction: build on the base slice, upsert
-    the newcomers (two file generations per dataset), COMPACT, then
-    self-search the union — must still hash-match the one-plan search
-    over the full corpus (compaction is invisible, completing the
-    lifecycle: build → search → serve → upsert → compact)."""
-
-    def _build(emb: DataFrame, path: str) -> None:
-        build_lsh_index(emb.where(F.col("vec_id") % base_mod != 0), path)
-        upsert_lsh_index(
-            spark, path, emb.where(F.col("vec_id") % base_mod == 0)
-        )
-        stats = compact_lsh_index(spark, path)
-        for name, (before, after) in stats.items():
-            assert after <= before or before <= 1, (name, before, after)
-
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_lsh_compact",
-        required_dirs=["planes", "vectors", "signatures"],
-        build=_build,
-        tag_extra=f"base_mod={base_mod}",
-    )
-    return search_lsh_index(spark, base, emb)
-
-
-def ivf_index_compact_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 5,
-) -> DataFrame:
-    """Contract query closing the IVF lifecycle's one ungraded face
-    (round-9 verdict item 2 — its LSH twin ``lsh_index_compact`` has
-    been green since round 9): build on the base slice, upsert the
-    newcomers (leaving two file generations inside each touched
-    ``cell_id`` partition dir), COMPACT the cells dataset through
-    :func:`compact_ivf_index`, then self-search the union. Compaction
-    is pure layout — row-identical, partition-dir-preserving — so the
-    search must still hash-match the one-plan ``ann_ivf_topk`` oracle
-    with the codebook trained on the base slice (exactly the
-    ``ivf_index_upsert`` oracle: the upsert holds the codebook fixed
-    and the compaction must not touch it either)."""
-
-    def _build(emb: DataFrame, path: str) -> None:
-        build_ivf_index(emb.where(F.col("vec_id") % base_mod != 0), path)
-        upsert_ivf_index(
-            spark, path, emb.where(F.col("vec_id") % base_mod == 0)
-        )
-        stats = compact_ivf_index(spark, path)
-        for name, (before, after) in stats.items():
-            assert after <= before or before <= 1, (name, before, after)
-
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_ivf_compact",
-        required_dirs=["centroids", "cells"],
-        build=_build,
-        tag_extra=f"base_mod={base_mod}",
-    )
-    return search_ivf_index(spark, base, emb)
-
-
 def _stored_lsh_tables(spark: SparkSession, path: str) -> list[list[list[float]]]:
     """Collect the (tiny) stored plane relation back into the nested
     literal structure the signature expression builder consumes."""
@@ -1146,588 +1051,3 @@ def search_lsh_index(
             )
         )
     return _typed_topk(scored, k, q_type, s_type)
-
-
-def _ensure_index(
-    spark: SparkSession,
-    sf_dir: str,
-    suffix: str,
-    required_dirs: list[str],
-    build,
-    tag_extra: str = "",
-    table: str = "embeddings.parquet",
-    required_files: tuple[str, ...] = (),
-) -> tuple[str, DataFrame]:
-    """Session-scoped build-once gate shared by ALL the index demos
-    (vector indexes over ``embeddings.parquet`` and, via ``table``,
-    the signature store over ``documents.parquet``): returns
-    (index path, input relation), calling ``build(rel, path)`` on the
-    first call for a given (sf_dir, tag_extra, content fingerprint)
-    and reusing the on-disk index after. The marker file alone is not
-    proof of a usable index — a tmp cleaner can remove the data dirs
-    (or a small metadata file like the signature store's ``_params``)
-    and leave the marker — so every ``required_dirs`` /
-    ``required_files`` entry must exist too; any mismatch rebuilds
-    from scratch rather than serving stale or partial state (which
-    would silently break the hash-parity contracts).
-
-    The marker here is read with plain ``os.path`` deliberately: the
-    base is ALWAYS a driver-local tempdir (:func:`_scratch_dir`), never
-    a user-supplied URI — demo scaffolding, not the index API. The
-    library entry points (``build_ivf_index``/``upsert_ivf_index``/
-    ``index_staleness``) take arbitrary paths and route their markers
-    through Hadoop FS instead."""
-    base = _scratch_dir(spark, suffix=suffix)
-    marker = os.path.join(base, "_built_for")
-    extra = f"{tag_extra}\n" if tag_extra else ""
-    tag = (
-        f"{sf_dir.rstrip('/')}\n{extra}"
-        f"{_content_fingerprint(sf_dir, table)}"
-    )
-    built = False
-    if (
-        os.path.exists(marker)
-        and all(
-            os.path.isdir(os.path.join(base, d)) for d in required_dirs
-        )
-        and all(
-            os.path.exists(os.path.join(base, f)) for f in required_files
-        )
-    ):
-        with open(marker) as fh:
-            built = fh.read() == tag
-    rel = spark.read.parquet(f"{sf_dir}/{table}")
-    if not built:
-        shutil.rmtree(base, ignore_errors=True)
-        build(rel, base)
-        with open(marker, "w") as fh:
-            fh.write(tag)
-    return base, rel
-
-
-def lsh_index_upsert_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 5,
-) -> DataFrame:
-    """Contract query for incremental LSH maintenance: build the index
-    on the BASE slice (``vec_id % base_mod != 0``), upsert the
-    newcomers through :func:`upsert_lsh_index`, self-search the union.
-    Because sign-bit hashing is data-independent, the oracle is simply
-    the one-plan ``ann_lsh_topk`` SQL over the FULL corpus — no
-    training filter at all, the stronger claim than IVF's (whose
-    codebook depends on the build slice): the mutation path is exactly
-    invisible. Same session-reuse gate as the other index demos (an
-    unguarded second upsert would double-append)."""
-
-    def _build(emb: DataFrame, path: str) -> None:
-        build_lsh_index(emb.where(F.col("vec_id") % base_mod != 0), path)
-        upsert_lsh_index(
-            spark, path, emb.where(F.col("vec_id") % base_mod == 0)
-        )
-
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_lsh_upsert",
-        required_dirs=["planes", "vectors", "signatures"],
-        build=_build,
-        tag_extra=f"base_mod={base_mod}",
-    )
-    return search_lsh_index(spark, base, emb)
-
-
-def _ensure_lsh_index(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, DataFrame]:
-    return _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_lsh",
-        required_dirs=["planes", "vectors", "signatures"],
-        build=build_lsh_index,
-    )
-
-
-def lsh_index_search_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query: persist the LSH index into session scratch,
-    self-search it, return the top-k relation. Must value-hash-match
-    the one-plan ``ann_lsh_topk`` oracle (same planes — the stored
-    relation round-trips the literal set exactly), proving the
-    persisted signature layout is semantically invisible. Same
-    session-reuse + content-fingerprint discipline as
-    :func:`ivf_index_search_demo`: the first call pays the n_tables×
-    signature expansion and the three writes, every later call computes
-    only query-side signatures against the stored relation.
-
-    Measured at sf0.1 (2,000 vectors — overhead-dominated): build ~12 s,
-    self-search-only ~7.0-7.9 s vs ~8.0-8.3 s for the one-plan
-    ``ann_lsh_topk``. The self-search delta is thin BY CONSTRUCTION:
-    with query set == corpus the pair-distinct and rerank dominate and
-    are paid either way; what the index amortizes is the INDEX side.
-    The serving shape the lifecycle exists for — a small batch of new
-    vectors against the stored corpus — measures ~2.3 s for a 1% batch
-    (the batch computes 16 signatures per query vector; the corpus's
-    16×n expansion is never recomputed), and that saving scales with
-    corpus size while the self-search saving does not. The graded
-    :func:`lsh_index_serve_demo` pins that serving shape's semantics."""
-    base, emb = _ensure_lsh_index(spark, sf_dir)
-    return search_lsh_index(spark, base, emb)
-
-
-def lsh_index_delete_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 5,
-    query_mod: int = 10,
-    del_mod: int = 7,
-    del_rem: int = 1,
-) -> DataFrame:
-    """Contract query for MERGE-ON-READ deletion on the vector side
-    (round 12 — the lexical store's delete lens applied to the LSH
-    index, where it is even cleaner: sign-bit hashing keeps no corpus
-    statistics, so the whole mutation is the tombstone set):
-    build-then-upsert-then-DELETE, searched with the surviving query
-    batch under the exact rerank, must value-hash-match the one-plan
-    LSH oracle over the SURVIVING vectors only — a dead vector
-    surfacing as a candidate OR as a rerank neighbor shifts a rank.
-    The build also asserts delete idempotence and the stats face's
-    tombstone count once per store build."""
-
-    def _build(emb: DataFrame, path: str) -> None:
-        build_lsh_index(emb.where(F.col("vec_id") % base_mod != 0), path)
-        upsert_lsh_index(
-            spark, path, emb.where(F.col("vec_id") % base_mod == 0)
-        )
-        victims = emb.where(F.col("vec_id") % del_mod == del_rem).select(
-            "vec_id"
-        )
-        n = delete_from_lsh_index(spark, path, victims)
-        assert n > 0, "vacuous delete fixture: no vector in the slice"
-        # idempotence: tombstones are a set
-        assert delete_from_lsh_index(spark, path, victims) == 0
-        assert lsh_index_stats(spark, path)["n_tombstones"] == n
-
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_lsh_del",
-        required_dirs=["planes", "vectors", "signatures"],
-        build=_build,
-        tag_extra=f"del{del_mod}-{del_rem}",
-    )
-    res = search_lsh_index(
-        spark,
-        base,
-        emb.where(
-            (F.col("vec_id") % query_mod == 0)
-            & (F.col("vec_id") % del_mod != del_rem)
-        ),
-    )
-    assert res.limit(1).count() > 0, (
-        "vacuous deleted-index search: no surviving query found a "
-        "surviving neighbor"
-    )
-    return res
-
-
-def lsh_index_serve_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    query_mod: int = 10,
-) -> DataFrame:
-    """Contract query for the SERVING shape: a deterministic query
-    batch (``vec_id % query_mod == 0`` — the recall audits' sampling
-    convention) searched against the full stored index. Must
-    value-hash-match the one-plan oracle with the candidate join's
-    query side filtered to the batch (``ann_lsh_topk_sql`` with
-    ``query_where`` — the per-query top-k window is unaffected by
-    dropping other queries, so batch-vs-stored ≡ the batch's rows of
-    the full self-search). This is the relation that proves the
-    amortized path serves the same answers the full computation would,
-    at a fraction of the cost (the batch computes n_tables signatures
-    per query vector; the corpus's n_tables×n expansion is read, not
-    recomputed)."""
-    base, emb = _ensure_lsh_index(spark, sf_dir)
-    batch = emb.where(F.col("vec_id") % int(query_mod) == 0)
-    return search_lsh_index(spark, base, batch)
-
-
-def ivf_index_search_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query: build the index into session scratch, self-search
-    it, return the top-k relation. Must value-hash-match the
-    train-and-search ``ann_ivf_topk`` oracle — proving the persisted
-    layout is semantically invisible.
-
-    The index is REUSED across calls within a session (marker file
-    records which sf_dir built it, plus a content fingerprint of the
-    embeddings parquet files, so a rewritten fixture under the same
-    path invalidates the index instead of serving stale cells) — that
-    is the lifecycle being demonstrated: the first call pays training
-    + the partitioned write, every later call is search-only
-    (measured at sf0.1: build+search pays the training loop + the
-    partitioned write on the first call; search-only settles at
-    ~2.0 s — vs 3.9 s for the train-and-search-in-one-plan
-    ``ann_ivf_topk``, so the amortization is real)."""
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="",
-        required_dirs=["centroids", "cells"],
-        build=build_ivf_index,
-    )
-    return search_ivf_index(spark, base, emb)
-
-
-def ivf_index_sq8_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query for the SQ8 serving path: self-search the
-    persisted index with ``rerank="sq8"`` — the rerank reads the STORED
-    1-byte codes, never the float vectors. Must value-hash-match the
-    one-plan ``ann_sq8_topk`` oracle (same trained codebook, same
-    pinned score expression), proving the quantized layout is
-    semantically identical to quantizing on the fly — which is what
-    licenses storing codes instead of floats at 10⁹ vectors. Shares the
-    session index with :func:`ivf_index_search_demo` (identical build;
-    the gate makes grading order-independent)."""
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="",
-        required_dirs=["centroids", "cells"],
-        build=build_ivf_index,
-    )
-    return search_ivf_index(spark, base, emb, rerank="sq8")
-
-
-def ivf_index_serve_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    query_mod: int = 10,
-) -> DataFrame:
-    """Contract query for the IVF SERVING shape — the missing symmetric
-    twin of :func:`lsh_index_serve_demo` (round 9): a deterministic
-    query batch (``vec_id % query_mod == 0``, the recall audits'
-    sampling convention) searched against the full stored index. Must
-    value-hash-match the one-plan oracle with the cell join's query
-    side filtered to the batch (``ann_ivf_topk_sql`` with
-    ``query_where`` — the per-query top-k window is unaffected by
-    dropping other queries). This is the amortization the lifecycle
-    exists for: the batch assigns ``|batch| · n_cells`` rows against
-    the broadcast codebook, while the corpus's assignment — and, with
-    dynamic partition pruning, even the unprobed cells' bytes — is
-    read, not recomputed. Shares the session index with
-    :func:`ivf_index_search_demo`."""
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="",
-        required_dirs=["centroids", "cells"],
-        build=build_ivf_index,
-    )
-    batch = emb.where(F.col("vec_id") % int(query_mod) == 0)
-    return search_ivf_index(spark, base, batch)
-
-
-def lsh_index_retune_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query for the retune face (round 9): build the stored
-    index at a deliberately MISTUNED hash width (1 plane × 2 tables —
-    two half-corpus buckets per table, the skew fixture's degenerate
-    config), then :func:`retune_lsh_index` with no explicit width — the
-    plane count comes from ``lsh_params_for`` over the stored corpus
-    size — and self-search. At the graded sf0.01 (500 vectors) the
-    derivation lands exactly on the shipped default (4 planes ×
-    16 tables), so the search must hash-match the canonical one-plan
-    ``ann_lsh_topk`` oracle: a mistuned index retuned IN PLACE is
-    indistinguishable from one built right, and the occupancy math that
-    TRIGGERS the retune is the same code that SIZES it."""
-
-    def _build(emb: DataFrame, path: str) -> None:
-        build_lsh_index(emb, path, n_planes=1, n_tables=2)
-        retune_lsh_index(spark, path)
-
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_retune",
-        required_dirs=["planes", "vectors", "signatures"],
-        build=_build,
-    )
-    return search_lsh_index(spark, base, emb)
-
-
-def ivf_index_retrain_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 5,
-) -> DataFrame:
-    """Contract query for the retrain face (round 9): build the index
-    on the BASE slice, upsert the newcomers (codebook now trained on a
-    subset — exactly the drift :func:`index_staleness` counts), then
-    RETRAIN past a staleness threshold and self-search the union. Must
-    value-hash-match the one-plan ``ann_ivf_topk`` oracle with NO
-    training filter — i.e. a retrained index is indistinguishable from
-    a fresh build over the full corpus, closing the lifecycle:
-    build → search → serve → upsert → compact → RETRAIN. (The upsert
-    demo pins the complementary claim: under a HELD-FIXED codebook,
-    mutation changes where vectors land, never the answer.)"""
-
-    def _build(emb: DataFrame, path: str) -> None:
-        build_ivf_index(emb.where(F.col("vec_id") % base_mod != 0), path)
-        upsert_ivf_index(
-            spark, path, emb.where(F.col("vec_id") % base_mod == 0)
-        )
-        retrained = retrain_ivf_index(spark, path, min_staleness=1)
-        assert retrained, "staleness threshold not crossed — demo broken"
-
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_retrain",
-        required_dirs=["centroids", "cells"],
-        build=_build,
-        tag_extra=f"base_mod={base_mod}",
-    )
-    return search_ivf_index(spark, base, emb)
-
-
-def ivf_index_delete_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 5,
-    query_mod: int = 10,
-    del_mod: int = 7,
-    del_rem: int = 1,
-) -> DataFrame:
-    """Contract query for MERGE-ON-READ deletion under a HELD-FIXED
-    codebook (round 12 — the delete lens's fourth and last mutable
-    index family): build on the base slice, upsert the rest, DELETE a
-    slice, then search the surviving query batch under the exact
-    rerank. The oracle trains its codebook on the base slice of the
-    RAW corpus (deletes don't retrain — the upsert contract's mirror)
-    but assigns and searches only the SURVIVORS, so a dead vector
-    surfacing as a cell resident shifts a rank and fails the hash.
-    The build asserts delete idempotence and the stats tombstone
-    count once per store build."""
-
-    def _build(emb: DataFrame, path: str) -> None:
-        build_ivf_index(emb.where(F.col("vec_id") % base_mod != 0), path)
-        upsert_ivf_index(
-            spark, path, emb.where(F.col("vec_id") % base_mod == 0)
-        )
-        victims = emb.where(F.col("vec_id") % del_mod == del_rem).select(
-            "vec_id"
-        )
-        n = delete_from_ivf_index(spark, path, victims)
-        assert n > 0, "vacuous delete fixture: no vector in the slice"
-        assert delete_from_ivf_index(spark, path, victims) == 0
-        assert ivf_index_stats(spark, path)["n_tombstones"] == n
-
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_ivf_del",
-        required_dirs=["centroids", "cells"],
-        build=_build,
-        tag_extra=f"base_mod={base_mod}:del{del_mod}-{del_rem}",
-    )
-    res = search_ivf_index(
-        spark,
-        base,
-        emb.where(
-            (F.col("vec_id") % query_mod == 0)
-            & (F.col("vec_id") % del_mod != del_rem)
-        ),
-    )
-    assert res.limit(1).count() > 0, (
-        "vacuous deleted-index search: no surviving query found a "
-        "surviving neighbor"
-    )
-    return res
-
-
-def ivf_index_upsert_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    base_mod: int = 5,
-) -> DataFrame:
-    """Contract query for incremental maintenance: build the index on
-    the BASE slice (``vec_id % base_mod != 0``), upsert the newcomers
-    (``% base_mod == 0``) through :func:`upsert_ivf_index`, then
-    self-search the union. Must value-hash-match the one-plan search
-    over the union with the base-trained codebook (the oracle is
-    ``ann_ivf_topk_sql`` with its training CTE filtered to the base
-    slice) — proving build-then-upsert ≡ build-over-union when the
-    codebook is held fixed, i.e. the mutation path changes WHERE new
-    vectors land, never the answer. Same session-reuse discipline as
-    :func:`ivf_index_search_demo` (an unguarded second upsert would
-    double-append, so the marker gates BOTH steps)."""
-
-    def _build(emb: DataFrame, path: str) -> None:
-        base_slice = emb.where(F.col("vec_id") % base_mod != 0)
-        newcomers = emb.where(F.col("vec_id") % base_mod == 0)
-        build_ivf_index(base_slice, path)
-        upsert_ivf_index(spark, path, newcomers)
-
-    base, emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_upsert",
-        required_dirs=["centroids", "cells"],
-        build=_build,
-        tag_extra=f"base_mod={base_mod}",
-    )
-    return search_ivf_index(spark, base, emb)
-
-
-def ivf_index_stats_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query for the IVF ops snapshot (round 9 — the stats
-    triad's IVF face): return the SQL-derivable slice of
-    :func:`ivf_index_stats` over the shared session index as one row —
-    ``(n_cells, n_vectors, n_occupied_cells, max_cell_vectors,
-    staleness)``. The DuckDB oracle recomputes the same occupancy from
-    the integer-exact k-means assignment CTEs (``crank = 1`` — each
-    vector in its single nearest cell), so the graded hash pins that the
-    stats face reads the store's REAL codebook and cell layout; the
-    shared index is a fresh full build, so ``staleness`` is pinned to
-    zero (the file counts are filesystem facts with no SQL twin and stay
-    out of the graded projection, the ``minhash_index_stats``
-    convention)."""
-    base, _emb = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="",
-        required_dirs=["centroids", "cells"],
-        build=build_ivf_index,
-    )
-    st = ivf_index_stats(spark, base)
-    return spark.createDataFrame(
-        [
-            (
-                st["n_cells"],
-                st["n_vectors"],
-                st["n_occupied_cells"],
-                st["max_cell_vectors"],
-                st["staleness"],
-            )
-        ],
-        "n_cells long, n_vectors long, n_occupied_cells long,"
-        " max_cell_vectors long, staleness long",
-    )
-
-
-def lsh_index_stats_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query for the LSH ops snapshot (round 9 — the stats
-    triad's LSH face): the SQL-derivable slice of
-    :func:`lsh_index_stats` over the shared session index as one row —
-    ``(n_tables, n_planes, n_vectors, n_bucket_groups,
-    max_bucket_vectors)``. The oracle recomputes the occupancy from the
-    signature CTEs over the same plane literals, so the graded hash
-    pins that the face reads the store's REAL table geometry and bucket
-    layout — the numbers :func:`retune_lsh_index`'s occupancy trigger
-    trades on."""
-    base, _emb = _ensure_lsh_index(spark, sf_dir)
-    st = lsh_index_stats(spark, base)
-    return spark.createDataFrame(
-        [
-            (
-                st["n_tables"],
-                st["n_planes"],
-                st["n_vectors"],
-                st["n_bucket_groups"],
-                st["max_bucket_vectors"],
-            )
-        ],
-        "n_tables long, n_planes long, n_vectors long,"
-        " n_bucket_groups long, max_bucket_vectors long",
-    )
-
-
-def hybrid_index_search_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    leg_k: int = 20,
-    query_mod: int = 100,
-) -> DataFrame:
-    """Contract query grading the hybrid-retrieval drop-in claim
-    (round 9): :func:`~jaccard_mapreduce_spark.operators.retrieval.
-    hybrid_search`'s docstring says the stored-index serve tiers are
-    corpus-scale replacements for its exact vector leg BECAUSE fusion
-    consumes only ``(query_id, neighbor_id, rank)`` — this entry
-    actually fuses the lexical leg with :func:`search_lsh_index` over
-    the shared session index and must hash-match an oracle whose vector
-    leg is the LSH candidate generation (bucket-restricted ranks differ
-    from the exact leg's where LSH misses a true neighbor, so the fused
-    scores pin the SERVED ranking, not a re-derivation of the exact
-    one). Claims are graded, not asserted.
-
-    Round 10: graded at ``GRADED_MAX_DF_RATIO`` (0.78) — the round-9
-    grade ran the default 0.5 prune, which at the driver's sf0.01
-    fixture left one surviving token no query doc contained, so every
-    ``lex_rank`` in the hash was null and the grade pinned only
-    null-leg fusion; at 0.78 the prune retires AND keeps tokens and the
-    lexical arithmetic is in the hash. The non-empty leg is also
-    asserted (one cheap limit-1 probe) so a fixture or prune change
-    can't silently re-vacuate the grade."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-        lexical_topk,
-        rrf_fuse,
-    )
-
-    base, emb = _ensure_lsh_index(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lex = lexical_topk(
-        docs,
-        docs.where(F.col("doc_id") % query_mod == 0),
-        k=leg_k,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )
-    assert lex.limit(1).count() > 0, (
-        "vacuous lexical leg: no query doc matched a surviving token "
-        "(round-9 verdict regression guard)"
-    )
-    vec = search_lsh_index(
-        spark,
-        base,
-        emb.where(F.col("vec_id") % query_mod == 0),
-        k=leg_k,
-    )
-    return rrf_fuse(lex, vec, k=k)
-
-
-def hybrid_recall_audit_demo(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    leg_k: int = 20,
-    query_mod: int = 100,
-) -> DataFrame:
-    """Contract query for the retrieval recall audit (round 9): per
-    query-batch member, how many of the exact-cosine top-``k`` each
-    relation recovers — the lexical leg, the LSH-SERVED vector leg
-    (``vec_hits`` = the stored tier's measured recall@k), and the
-    fusion (does the lexical leg recover truth the approximate tier
-    missed, or dilute it?). Integer counts, hash-graded against the
-    same CTE chain as the search oracles — the measured input any
-    rrf_k / leg_k retune trades on."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-        hybrid_recall_audit,
-    )
-
-    base, emb = _ensure_lsh_index(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # graded at GRADED_MAX_DF_RATIO so lex_hits measures a POPULATED lexical
-    # leg against semantic truth (round-9 verdict: at the old 0.5 the
-    # leg was empty and lex_hits was trivially 0)
-    vec = search_lsh_index(
-        spark,
-        base,
-        emb.where(F.col("vec_id") % query_mod == 0),
-        k=leg_k,
-    )
-    return hybrid_recall_audit(
-        docs, emb, vec, k=k, leg_k=leg_k, query_mod=query_mod,
-        max_df_ratio=GRADED_MAX_DF_RATIO,
-    )

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 # 16 bits per dimension -> a 32-bit Morton key; dimensions are masked
@@ -97,63 +97,6 @@ def write_zordered_events(
         .drop("zkey")
         .write.mode("overwrite")
         .parquet(base)
-    )
-
-
-def zordered_events_summary(
-    spark: SparkSession,
-    sf_dir: str,
-    user_lo: int = 100,
-    user_hi: int = 300,
-    minute_lo: int = 300,
-    minute_hi: int = 600,
-) -> DataFrame:
-    """Contract/demo query for the Z-ordered layout: aggregate a
-    (user range × time-of-day range) predicate box through the
-    clustered copy — per event type: row count, distinct users, exact
-    decimal value sum. The DuckDB oracle runs the same box over the
-    PLAIN table: the layout must be semantically invisible (the
-    bucketed/partitioned/salted convention). The pruning payoff is
-    measured, not asserted — ``rowgroup_overlap_fraction`` reads the
-    parquet footers of this copy vs a user-sorted copy
-    (tests/test_round7.py + docs/SCALE.md).
-
-    The layout write is gated behind the shared build-once session
-    marker (content-fingerprinted, the ``_ensure_index`` discipline
-    every other index/layout demo follows): the first call per
-    (session, sf_dir, fixture content) pays the full re-layout, later
-    calls — bench reps, driver re-reads — measure the pruned scan the
-    demo exists to demonstrate, and a rewritten fixture under the same
-    path still invalidates the copy instead of serving stale rows."""
-    from jaccard_mapreduce_spark.sources.vector_index import _ensure_index
-
-    base, _rel = _ensure_index(
-        spark,
-        sf_dir,
-        suffix="_zorder",
-        required_dirs=[],
-        build=lambda _rel, b: write_zordered_events(spark, sf_dir, b),
-        table="events.parquet",
-        required_files=("_SUCCESS",),
-    )
-    z = spark.read.parquet(base)
-    return (
-        z.where(
-            (F.col("user_id") >= user_lo)
-            & (F.col("user_id") <= user_hi)
-            & (F.col("minute_of_day") >= minute_lo)
-            & (F.col("minute_of_day") <= minute_hi)
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            # exact decimal accumulation, double projection — the
-            # partitioned/bucketed demo convention
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
     )
 
 

@@ -23,11 +23,7 @@ jobs per micro-batch would be the probe-factor cost paid forever)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from jaccard_mapreduce_spark.operators._cache import pin
 
@@ -84,69 +80,3 @@ def contamination_scrub_stream(
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )
-
-
-def stream_contamination_scrub(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 8,
-    min_shared: int = 1,
-    quote_mod: int = 50,
-    start: int = 3,
-    length: int = 12,
-    n_input_files: int = 4,
-) -> DataFrame:
-    """Contract query for the streaming scrub: the corpus split across
-    ``n_input_files`` files, streamed one file per trigger against the
-    planted-quote benchmark suite (the batch scrub's exact fixture),
-    returning the union of appended survivors — must value-hash-match
-    the one-shot ``contamination_scrub`` oracle over the full corpus.
-    Both branches are asserted into the result: some documents must
-    survive AND some must have been scrubbed (the planted sources),
-    so a sink that drops everything or scrubs nothing can't pass."""
-    from jaccard_mapreduce_spark.operators.dedup import (
-        planted_benchmarks,
-    )
-    from jaccard_mapreduce_spark.sources.corpus import read_documents
-    from jaccard_mapreduce_spark.sources.vector_index import _scratch_dir
-
-    # the FULL documents schema: the scrub passes every column through
-    # (survivors keep their metadata — the ingest shape), and the
-    # graded hash covers the whole row
-    docs = read_documents(spark, sf_dir)
-    bench = pin(
-        planted_benchmarks(
-            docs, quote_mod=quote_mod, start=start, length=length
-        )
-    )
-    scratch = _scratch_dir(spark, suffix="_decontam")
-    shutil.rmtree(scratch, ignore_errors=True)
-    in_dir = os.path.join(scratch, "in")
-    out_dir = os.path.join(scratch, "out")
-    docs.repartition(n_input_files).write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = contamination_scrub_stream(
-        stream,
-        bench,
-        out_dir,
-        os.path.join(scratch, "ckpt"),
-        n=n,
-        min_shared=min_shared,
-    ).start()
-    q.awaitTermination()
-    try:
-        out = spark.read.parquet(out_dir)
-        n_out, n_in = out.count(), docs.count()
-        # both branches in the hash: survivors exist, and the planted
-        # sources were actually scrubbed
-        assert 0 < n_out < n_in, (
-            f"vacuous streaming scrub: {n_out} of {n_in} docs survived"
-        )
-        return out
-    finally:
-        bench.unpersist()

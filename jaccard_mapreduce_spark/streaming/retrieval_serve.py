@@ -21,16 +21,12 @@ a second, never-released cache entry per batch — the
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jaccard_mapreduce_spark.operators._cache import pin
 from jaccard_mapreduce_spark.operators.retrieval import (
     bm25_probe,
-    lexical_index,
     lexical_probe,
     rrf_fuse,
 )
@@ -135,86 +131,6 @@ def bm25_serve_stream(
     )
 
 
-def stream_bm25_serve(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    query_mod: int = 100,
-    n_input_files: int = 4,
-    max_df_ratio: float | None = None,
-) -> DataFrame:
-    """Contract query for the streaming BM25 serve (round 11): the
-    deterministic query batch split across ``n_input_files`` files,
-    streamed one file per trigger through :func:`bm25_serve_stream`
-    against the shared build-then-upsert lexical store, returning the
-    union of all appended results. TWO invisibility claims compose in
-    the graded hash: the store's additive-merge exactness (tf, dl, df,
-    n_docs after build-then-upsert equal a fresh full build's — the
-    ``lexical_store_bm25`` claim) and batch-decomposability (per-query
-    scoring never sees batch boundaries), so the log must hash-match
-    the ONE-PLAN full-corpus ``bm25_topk`` oracle. The store's
-    statistics are read ONCE (markers + df) and the weighted index is
-    pinned once — each micro-batch pays only its own probe, the 24/7
-    cache discipline of the hybrid serve."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-        df_weights,
-    )
-    from jaccard_mapreduce_spark.sources._store import _read_live
-    from jaccard_mapreduce_spark.sources.lexical_store import (
-        _ensure_lex_store,
-        _require_marker,
-    )
-    from jaccard_mapreduce_spark.sources.vector_index import _scratch_dir
-
-    if max_df_ratio is None:
-        max_df_ratio = GRADED_MAX_DF_RATIO
-    base, docs = _ensure_lex_store(spark, sf_dir)
-    n_docs = _require_marker(spark, base, "_n_docs")
-    total = _require_marker(spark, base, "_n_tokens")
-    w = df_weights(
-        spark.read.parquet(f"{base}/df"), n_docs, max_df_ratio
-    )
-    bm25_idx = pin(
-        _read_live(spark, base, "postings").join(
-            F.broadcast(w.select("token", "w")), "token"
-        )
-    )
-    scratch = _scratch_dir(spark, suffix="_bm25_serve")
-    shutil.rmtree(scratch, ignore_errors=True)
-    in_dir = os.path.join(scratch, "in")
-    out_dir = os.path.join(scratch, "out")
-    queries = docs.where(F.col("doc_id") % query_mod == 0).select(
-        "doc_id", "text"
-    )
-    queries.repartition(n_input_files).write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = bm25_serve_stream(
-        stream,
-        bm25_idx,
-        total // max(n_docs, 1),
-        out_dir,
-        os.path.join(scratch, "ckpt"),
-        k=k,
-    ).start()
-    q.awaitTermination()
-    try:
-        out = spark.read.parquet(out_dir)
-        # the family's vacuity guard: an empty served log must fail
-        # loudly, not hash-match an equally-empty oracle
-        assert out.limit(1).count() > 0, (
-            "vacuous BM25 serve: no query doc matched a surviving token"
-        )
-        return out
-    finally:
-        bm25_idx.unpersist()
-
-
 def phrase_serve_stream(
     stream: DataFrame,
     positions: DataFrame,
@@ -249,65 +165,6 @@ def phrase_serve_stream(
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )
-
-
-def stream_phrase_serve(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    query_mod: int = 100,
-    n_terms: int = 2,
-    n_input_files: int = 4,
-) -> DataFrame:
-    """Contract query for the streaming phrase serve (round 11): the
-    deterministic phrase batch (each query doc's leading bigram) split
-    across ``n_input_files`` files, streamed one file per trigger
-    against the shared build-then-upsert store's positions, returning
-    the union of appended results. The graded hash composes the
-    store's additive-merge exactness (positions are per-document
-    facts) with batch-decomposability against the one-plan full-corpus
-    ``phrase_search`` oracle."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        leading_phrases,
-    )
-    from jaccard_mapreduce_spark.sources._store import _read_live
-    from jaccard_mapreduce_spark.sources.lexical_store import (
-        _ensure_lex_store,
-    )
-    from jaccard_mapreduce_spark.sources.vector_index import _scratch_dir
-
-    base, docs = _ensure_lex_store(spark, sf_dir)
-    positions = pin(_read_live(spark, base, "positions"))
-    scratch = _scratch_dir(spark, suffix="_phrase_serve")
-    shutil.rmtree(scratch, ignore_errors=True)
-    in_dir = os.path.join(scratch, "in")
-    out_dir = os.path.join(scratch, "out")
-    leading_phrases(
-        docs.where(F.col("doc_id") % query_mod == 0), n_terms=n_terms
-    ).repartition(n_input_files).write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = phrase_serve_stream(
-        stream,
-        positions,
-        out_dir,
-        os.path.join(scratch, "ckpt"),
-        k=k,
-    ).start()
-    q.awaitTermination()
-    try:
-        out = spark.read.parquet(out_dir)
-        # the family's vacuity guard
-        assert out.limit(1).count() > 0, (
-            "vacuous phrase serve: no query bigram recurs in the corpus"
-        )
-        return out
-    finally:
-        positions.unpersist()
 
 
 def proximity_serve_stream(
@@ -364,154 +221,3 @@ def proximity_serve_stream(
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )
-
-
-def stream_proximity_serve(
-    spark: SparkSession,
-    sf_dir: str,
-    slop: int = 2,
-    k: int = 10,
-    query_mod: int = 100,
-    n_terms: int = 3,
-    n_input_files: int = 4,
-) -> DataFrame:
-    """Contract query for the streaming proximity serve (round 12):
-    the deterministic trigram batch split across ``n_input_files``
-    files, streamed one file per trigger against the shared
-    build-then-upsert store's positions, returning the union of
-    appended results. The graded hash composes the store's
-    additive-merge exactness (positions are per-document facts) with
-    batch-decomposability against the one-plan full-corpus
-    ``proximity_search`` oracle — the same oracle as the one-plan and
-    store-served faces, so all four proximity faces pin one
-    arithmetic."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        leading_phrases,
-    )
-    from jaccard_mapreduce_spark.sources._store import _read_live
-    from jaccard_mapreduce_spark.sources.lexical_store import (
-        _ensure_lex_store,
-    )
-    from jaccard_mapreduce_spark.sources.vector_index import _scratch_dir
-
-    base, docs = _ensure_lex_store(spark, sf_dir)
-    positions = pin(_read_live(spark, base, "positions"))
-    scratch = _scratch_dir(spark, suffix="_prox_serve")
-    shutil.rmtree(scratch, ignore_errors=True)
-    in_dir = os.path.join(scratch, "in")
-    out_dir = os.path.join(scratch, "out")
-    leading_phrases(
-        docs.where(F.col("doc_id") % query_mod == 0), n_terms=n_terms
-    ).repartition(n_input_files).write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = proximity_serve_stream(
-        stream,
-        positions,
-        out_dir,
-        os.path.join(scratch, "ckpt"),
-        slop=slop,
-        k=k,
-        n_terms=n_terms,
-    ).start()
-    q.awaitTermination()
-    try:
-        out = spark.read.parquet(out_dir)
-        # the family's vacuity guard
-        assert out.limit(1).count() > 0, (
-            "vacuous proximity serve: no query trigram matches within "
-            "the window anywhere in the corpus"
-        )
-        return out
-    finally:
-        positions.unpersist()
-
-
-def stream_hybrid_serve(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    leg_k: int = 20,
-    query_mod: int = 100,
-    n_input_files: int = 4,
-    max_df_ratio: float | None = None,
-) -> DataFrame:
-    """Contract query: split the deterministic query batch
-    (``doc_id % query_mod == 0``, joined with its embeddings) across
-    ``n_input_files`` files, stream them one file per trigger through
-    :func:`hybrid_serve_stream` against the shared session LSH store,
-    and return the union of all appended results. Must hash-match the
-    one-shot ``hybrid_index_search`` oracle — per-query serving is
-    arrival-order independent, so HOW the queries were batched is
-    invisible in the result.
-
-    Graded at ``GRADED_MAX_DF_RATIO`` since round 10 (the round-9 grade
-    served an EMPTY lexical leg at the driver fixture — see
-    ``hybrid_index_search_demo``); the returned log is asserted to
-    carry at least one non-null ``lex_rank`` so the grade cannot
-    silently re-vacuate."""
-    from jaccard_mapreduce_spark.operators.retrieval import (
-        GRADED_MAX_DF_RATIO,
-    )
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        _ensure_lsh_index,
-        _scratch_dir,
-    )
-
-    if max_df_ratio is None:
-        max_df_ratio = GRADED_MAX_DF_RATIO
-    lsh_base, emb = _ensure_lsh_index(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lex_idx = pin(lexical_index(docs, max_df_ratio=max_df_ratio))
-    base = _scratch_dir(spark, suffix="_hybrid_serve")
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-
-    # FULL outer join of the two id spaces: a doc with no embedding
-    # still streams (lexical leg only), an embedding with no doc text
-    # still streams (vector leg only) — exactly the rows the one-shot
-    # hybrid_index_search sees, whatever the id overlap. An inner join
-    # here would silently drop text-only queries from the stream while
-    # the one-shot oracle kept their lexical results.
-    queries = docs.where(F.col("doc_id") % query_mod == 0).select(
-        "doc_id", "text"
-    ).join(
-        emb.where(F.col("vec_id") % query_mod == 0).select(
-            F.col("vec_id").alias("doc_id"), "embedding"
-        ),
-        "doc_id",
-        "full_outer",
-    )
-    queries.repartition(n_input_files).write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = hybrid_serve_stream(
-        stream,
-        lex_idx,
-        lsh_base,
-        out_dir,
-        os.path.join(base, "ckpt"),
-        k=k,
-        leg_k=leg_k,
-    ).start()
-    q.awaitTermination()
-    try:
-        out = spark.read.parquet(out_dir)
-        # cheap (the log is O(queries * k) rows, already on disk):
-        # a vacuous lexical leg must fail loudly, not hash-match an
-        # equally-vacuous oracle (round-9 verdict regression guard)
-        assert (
-            out.where(F.col("lex_rank").isNotNull()).limit(1).count() > 0
-        ), "vacuous lexical leg: no served row carries a lex_rank"
-        return out
-    finally:
-        lex_idx.unpersist()

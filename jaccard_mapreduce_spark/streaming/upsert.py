@@ -19,32 +19,19 @@ rewritten) or a table format with commit atomicity; the plan shape —
 one keyed max-struct aggregate per batch over snapshot ∪ delta — is
 identical.
 
-The contract query splits the events table into N input files and
-streams them with ``maxFilesPerTrigger=1`` (N genuine micro-batches,
-arrival order = file listing order), then reads the final snapshot
-back; the oracle is the exact batch latest-event SQL, so the grade
-proves the multi-batch fold converges to the batch answer regardless
-of how rows were split across batches.
-
-Storage hygiene: session-derived scratch dir, cleared at invocation
-start (the bucketed-demo convention); only the final snapshot version
-remains referenced by the returned frame.
+The ``stream_upsert_snapshot`` registry fixture streams the events
+table split into N input files (N genuine micro-batches) through
+:func:`upsert_snapshot_stream` and grades the final snapshot against the
+exact batch latest-event SQL: the multi-batch fold converges to the
+batch answer however the rows were split across batches.
 """
 
 from __future__ import annotations
 
 import os
-import re
-import shutil
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _scratch_dir(spark: SparkSession) -> str:
-    app = re.sub(r"[^a-zA-Z0-9]+", "_", spark.sparkContext.applicationId)
-    return os.path.join(tempfile.gettempdir(), f"upsert_demo_{app}".lower())
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -66,29 +53,12 @@ def _latest_per_user(df: DataFrame) -> DataFrame:
     )
 
 
-def stream_upsert_snapshot(
-    spark: SparkSession, sf_dir: str, n_input_files: int = 8
-) -> DataFrame:
-    """Run the upsert pipeline to completion and return the final
-    snapshot ``(user_id, last_ts_us, last_value, last_event_type)``."""
-    from jaccard_mapreduce_spark.sources.tables import load_events
-
-    base = _scratch_dir(spark)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir = os.path.join(base, "in")
-    snap_dir = os.path.join(base, "snap")
-
-    events = load_events(spark, sf_dir).select(
-        "user_id", "ts", "value", "event_type"
-    )
-    events.repartition(n_input_files).write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+def upsert_snapshot_stream(stream: DataFrame, snap_dir: str, checkpoint: str):
+    """Wire a ``(user_id, ts, value, event_type)`` stream into the
+    versioned keyed snapshot under ``snap_dir``: micro-batch ``b``
+    writes ``v{b}`` = latest row per user over ``v{b-1}`` ∪ batch ``b``.
+    Returns the unstarted writer (the ``upsert_ivf_index_stream``
+    convention); the newest ``v{b}`` is the snapshot."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         delta = batch_df.select(
@@ -109,17 +79,8 @@ def stream_upsert_snapshot(
         out = os.path.join(snap_dir, f"v{batch_id}")
         _latest_per_user(delta).write.mode("overwrite").parquet(out)
 
-    q = (
+    return (
         stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    versions = [
-        int(d[1:])
-        for d in os.listdir(snap_dir)
-        if re.fullmatch(r"v\d+", d)
-    ] if os.path.isdir(snap_dir) else []
-    assert versions, "stream produced no batches"
-    return spark.read.parquet(os.path.join(snap_dir, f"v{max(versions)}"))

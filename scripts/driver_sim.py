@@ -29,6 +29,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
+    """Order-insensitive canonical form of a result frame (columns by
+    name, rows sorted, timestamps naive, array cells as tuples) — shared
+    with tests/test_oracle_parity.py, so the drive and the pytest gate
+    compare alike."""
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
         if pd.api.types.is_datetime64_any_dtype(df[c]):

@@ -36,19 +36,19 @@ def _plan(df):
     return df._jdf.queryExecution().sparkPlan().toString()
 
 
-def test_exact_slice_gate_forms_identical(spark):
+def test_exact_slice_gate_forms_identical(spark, monkeypatch):
     """exact_slice_topk: the small-slice relational broadcast plan ==
-    the bipartite fold kernel, bitwise (the gate is semantics-free)."""
-    from jaccard_mapreduce_spark.operators.similarity import (
-        exact_slice_topk,
-    )
+    the bipartite fold kernel, bitwise (the gate is semantics-free).
+    The gate is read when the plan is built, so each form is pinned by
+    patching it just before its call."""
+    from jaccard_mapreduce_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     pred = F.col("vec_id") % 10 == 0
-    relational = exact_slice_topk(
-        emb, pred, 7, min_kernel_pairs=1 << 60
-    )
-    kernel = exact_slice_topk(emb, pred, 7, min_kernel_pairs=0)
+    monkeypatch.setattr(S, "EXACT_KERNEL_MIN_PAIRS", 1 << 60)
+    relational = S.exact_slice_topk(emb, pred, 7)
+    monkeypatch.setattr(S, "EXACT_KERNEL_MIN_PAIRS", 0)
+    kernel = S.exact_slice_topk(emb, pred, 7)
     assert _rows(relational) == _rows(kernel)
 
 

@@ -19,6 +19,7 @@ import pytest
 import __spark_entry__ as entrymod
 from jaccard_mapreduce_spark.sources.tables import TABLE_NAMES
 
+from scripts.driver_sim import _canon
 from tests.conftest import SF_ORACLE
 
 # query name -> absolute tolerance for float columns (None = exact)
@@ -30,18 +31,6 @@ def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     for t in TABLE_NAMES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).dt.tz_localize(None)
-        elif df[c].dtype == object:
-            df[c] = df[c].apply(
-                lambda v: tuple(v) if isinstance(v, (list, np.ndarray)) else v
-            )
-    return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries().keys()))

@@ -447,7 +447,7 @@ def test_semantic_dedup_pairs_join_on_cluster_not_cartesian(spark):
 def test_formats_readback_uses_explicit_schema(spark):
     # read-back plans must come from the supplied schema, not inference:
     # all three formats project the full typed column set in the scan
-    from jaccard_mapreduce_spark.sources.formats import formats_roundtrip
+    from registry_fixtures import formats_roundtrip
 
     df = formats_roundtrip(spark, SF_ORACLE)
     plan = _plan(df)

@@ -72,9 +72,7 @@ def test_graded_retrieval_lexical_legs_are_populated(spark):
 
 
 def test_lexical_store_search_demo_returns_rows(spark):
-    from jaccard_mapreduce_spark.sources.lexical_store import (
-        lexical_store_search_demo,
-    )
+    from registry_fixtures import lexical_store_search_demo
 
     rows = lexical_store_search_demo(spark, SF_SMALL).collect()
     assert rows, "graded lexical store search returned no rows"
@@ -84,7 +82,7 @@ def test_lexical_store_search_demo_returns_rows(spark):
 def test_ivf_compact_is_invisible_to_search(spark):
     """Post-compaction IVF search must equal the upsert demo's search
     (same base slice, same fixed codebook, compaction pure layout)."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
+    from registry_fixtures import (
         ivf_index_compact_demo,
         ivf_index_upsert_demo,
     )

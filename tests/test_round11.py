@@ -131,12 +131,7 @@ def test_stream_bm25_serve_batching_is_invisible(spark):
     BM25 results equals the one-shot store-served ranking whatever the
     batch boundaries were — scores included (exact integers)."""
     from tests.conftest import SF_SMALL
-    from jaccard_mapreduce_spark.sources.lexical_store import (
-        lexical_store_bm25_demo,
-    )
-    from jaccard_mapreduce_spark.streaming.retrieval_serve import (
-        stream_bm25_serve,
-    )
+    from registry_fixtures import lexical_store_bm25_demo, stream_bm25_serve
 
     one_shot = sorted(
         map(tuple, lexical_store_bm25_demo(spark, SF_SMALL).collect())

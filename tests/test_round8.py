@@ -114,9 +114,7 @@ def test_ivf_sq8_search_prunes_float_vectors_from_the_scan(spark):
     cell-local Arrow kernel (FlatMapGroupsInPandas — hash-exact by the
     order-free integer dot), so the plan asserts the kernel IS present;
     the scan-pruning contract (the 8× bandwidth claim) is unchanged."""
-    from jaccard_mapreduce_spark.sources.vector_index import (
-        ivf_index_sq8_demo,
-    )
+    from registry_fixtures import ivf_index_sq8_demo
 
     df = ivf_index_sq8_demo(spark, SF_ORACLE)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -169,13 +167,10 @@ def test_zorder_demo_reuses_layout_across_calls(spark):
     """ADVICE r7: the Z-ordered copy must be written once per
     (session, fixture) and reused — bench reps and driver re-reads
     should measure the pruned scan, not the re-layout write."""
-    from jaccard_mapreduce_spark.sources.vector_index import _scratch_dir
-    from jaccard_mapreduce_spark.sources.zorder import (
-        zordered_events_summary,
-    )
+    from registry_fixtures import _scratch_dir, zordered_events_summary
 
     first = zordered_events_summary(spark, SF_ORACLE).collect()
-    base = _scratch_dir(spark, suffix="_zorder")
+    base = _scratch_dir(spark, "zorder")
     marker = os.path.join(base, "_built_for")
     stamp = os.stat(marker).st_mtime_ns
     files = sorted(os.listdir(base))

@@ -377,9 +377,7 @@ def test_stream_hybrid_serve_is_multi_batch_and_cache_clean(spark):
     micro-batches (≥2 non-empty appends — a single-batch run would
     grade trivially) and must not leak per-batch cache entries (the
     24/7-stream hazard dedup_incremental_stream documents)."""
-    from jaccard_mapreduce_spark.streaming.retrieval_serve import (
-        stream_hybrid_serve,
-    )
+    from registry_fixtures import stream_hybrid_serve
 
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
@@ -408,10 +406,8 @@ def test_stream_hybrid_serve_matches_one_shot_on_mismatched_ids(
     would silently drop the text-only queries)."""
     import random
 
-    from jaccard_mapreduce_spark.sources.vector_index import (
+    from registry_fixtures import (
         hybrid_index_search_demo,
-    )
-    from jaccard_mapreduce_spark.streaming.retrieval_serve import (
         stream_hybrid_serve,
     )
 

@@ -66,6 +66,7 @@ def test_fold_kernels_bit_equal_relational_cosine(spark, emb, monkeypatch):
     cross-block groups form, must bit-equal the relational form —
     zero-norm pairs +0.0, the opposite pair exactly -1.0."""
     monkeypatch.setattr(S, "ALLPAIRS_BLOCK_ROWS", 2)
+    monkeypatch.setattr(S, "EXACT_KERNEL_MIN_PAIRS", 0)
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
@@ -74,7 +75,7 @@ def test_fold_kernels_bit_equal_relational_cosine(spark, emb, monkeypatch):
     want_topk = rows(S._topk(pairs, 3))
     assert rows(S.cosine_topk(emb, k=3)) == want_topk
     assert rows(
-        S.exact_slice_topk(emb, F.lit(True), 3, min_kernel_pairs=0)
+        S.exact_slice_topk(emb, F.lit(True), 3)
     ) == want_topk
     want_dups = rows(
         pairs.where("query_id < neighbor_id AND score >= -1.0").select(

@@ -169,7 +169,7 @@ def test_events_loader_on_virgin_session(spark):
 
 
 def test_formats_roundtrip_lossless(spark):
-    from jaccard_mapreduce_spark.sources.formats import formats_roundtrip
+    from registry_fixtures import formats_roundtrip
 
     rows = {
         r["fmt"]: r
@@ -189,7 +189,7 @@ def test_formats_null_vs_empty_string_distinction(spark, tmp_path):
     # values through CSV (default Spark conf collapses both to null)
     from pyspark.sql import functions as F
 
-    from jaccard_mapreduce_spark.sources.formats import _text_options
+    from registry_fixtures import _text_options
 
     df = spark.createDataFrame(
         [(1, "hello"), (2, ""), (3, None), (4, "with,comma"), (5, '"quoted"')],

@@ -251,10 +251,7 @@ def test_stream_upsert_snapshot_matches_batch_and_is_multi_batch(spark):
     import glob
     import os
 
-    from jaccard_mapreduce_spark.streaming.upsert import (
-        _scratch_dir,
-        stream_upsert_snapshot,
-    )
+    from registry_fixtures import _scratch_dir, stream_upsert_snapshot
 
     sf = "/root/testdata/sf0.001"
     snap = stream_upsert_snapshot(spark, sf, n_input_files=4)
@@ -277,5 +274,7 @@ def test_stream_upsert_snapshot_matches_batch_and_is_multi_batch(spark):
 
     # the fold really ran across multiple micro-batches (one per input
     # file), each leaving its own idempotently-rewritable version
-    versions = glob.glob(os.path.join(_scratch_dir(spark), "snap", "v*"))
+    versions = glob.glob(
+        os.path.join(_scratch_dir(spark, "snapshot"), "snap", "v*")
+    )
     assert len(versions) == 4
